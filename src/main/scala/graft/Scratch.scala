@@ -1,6 +1,7 @@
 package graft
 
-/** Fast-scratch placement for the local runner mains (Verify / Bench).
+/** Local runner posture: fork-free local file settings ([[configure]])
+  * and fast-scratch placement.
   *
   * Spark's `spark.local.dir` holds shuffle files, spill, and broadcast
   * scratch — all ephemeral, rewritten constantly, and never read after the
@@ -51,23 +52,69 @@ object Scratch {
         shmRoot().map(new java.io.File(_, "graft-scratch").getPath)
     }
 
-  /** Point every ephemeral surface at fast scratch: shuffle/spill
-    * (`spark.local.dir`), the SQL warehouse, Derby's metastore home, and
-    * `java.io.tmpdir` (streaming checkpoints and temp files the specs and
-    * sinks create via `File.createTempFile`).
+  /** The local runner posture shared by Bench, Verify, Soak, Plans, Prof,
+    * Sweep and the test suite: two fork-free file settings, then fast
+    * scratch placement.
+    *
+    * Without libhadoop, Hadoop's local file system forks a `chmod`
+    * process for every file and directory it creates (data, `.crc` and
+    * temp files), and the FileContext API behind Spark's default
+    * checkpoint manager forks `readlink` on every status check and
+    * rename. A JFR profile of six s5 drains counted 3 285 process starts
+    * (2 400 `readlink`, 873 `chmod`), about 550 per drain, paid several
+    * times per trigger: offset log, commit log, each state-store delta
+    * and the file-sink log. So, whatever the placement:
+    *
+    *  - `spark.hadoop.fs.file.impl` = [[lake.NioLocalFileSystem]], which
+    *    sets the same mode bits in-process (without it, Hadoop's service
+    *    loader picks hive-exec's `ProxyLocalFileSystem`, a filter over
+    *    the same stock `LocalFileSystem`);
+    *  - `spark.sql.streaming.checkpointFileManagerClass` = Spark's
+    *    `FileSystemBasedCheckpointFileManager`, which goes through that
+    *    file system. On `file:` it, like the default manager, writes a
+    *    temp file and renames it into place.
+    *
+    * Spark's checkpoint file checksums, state-store commit validation,
+    * the `.crc` ChecksumFileSystem and checkpoint placement all stay as
+    * they are. A `file:` FileSystem cached before this call (Hadoop caches
+    * one per scheme and user, whatever its conf) is evicted so the
+    * session's first lookup instantiates the configured class.
+    *
+    * Placement then points every ephemeral surface at fast scratch:
+    * shuffle/spill (`spark.local.dir`), the SQL warehouse, Derby's
+    * metastore home, and `java.io.tmpdir` (streaming checkpoints and temp
+    * files the specs and sinks create via `File.createTempFile`).
     */
   def configure(b: org.apache.spark.sql.SparkSession.Builder)
-      : org.apache.spark.sql.SparkSession.Builder =
-    fastLocalDir().fold(b) { d =>
+      : org.apache.spark.sql.SparkSession.Builder = {
+    evictStockLocalFs()
+    val forkFree = b
+      .config("spark.hadoop.fs.file.impl",
+        classOf[lake.NioLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[org.apache.spark.sql.execution.streaming.checkpointing
+          .FileSystemBasedCheckpointFileManager].getName)
+    fastLocalDir().fold(forkFree) { d =>
       val root = new java.io.File(d)
       val tmp = new java.io.File(root, "tmp")
       tmp.mkdirs()
       System.setProperty("derby.system.home", new java.io.File(root, "derby").getPath)
       System.setProperty("java.io.tmpdir", tmp.getPath)
-      b.config("spark.local.dir", d)
+      forkFree.config("spark.local.dir", d)
         .config("spark.sql.warehouse.dir",
           new java.io.File(root, "warehouse").toURI.toString)
     }
+  }
+
+  /** Drop a cached `file:` FileSystem of any other class from Hadoop's
+    * cache. Closing a local file system only unregisters it (and runs its
+    * delete-on-exit list); a holder of the old instance can keep using it.
+    */
+  private def evictStockLocalFs(): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    if (!fs.isInstanceOf[lake.NioLocalFileSystem]) fs.close()
+  }
 
   /** Stage a parquet table directory onto fast scratch and return the
     * staged path, so repeated scans read RAM instead of the throttled
