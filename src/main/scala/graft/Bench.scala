@@ -68,6 +68,36 @@ object Bench {
     else if (times.size == 2 && requested == 2) times.min
     else times.sorted.apply(times.size / 2)
 
+  /** Between timed passes: drop persisted intermediates, then force a JVM
+    * GC. The GC is bench hygiene, not a speed hack — unpersist is async,
+    * and Spark's ContextCleaner only releases the previous query's shuffle
+    * files/broadcasts when their dependency objects are COLLECTED; on a
+    * large barely-collected heap that debris lands in whichever query runs
+    * next (measured: the query after the heaviest shuffle producer ran 5x
+    * its steady state). The 100 ms beat lets the cleaner thread delete
+    * files here (untimed) instead of inside the next query.
+    */
+  private[graft] def settle(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    System.gc()
+    Thread.sleep(100)
+    // localCheckpoint blocks (x7's per-round lineage truncation) are
+    // released by the ContextCleaner asynchronously AFTER the GC above;
+    // without draining them here the block-drop messages land inside the
+    // NEXT timed pass (measured: x7 spread 1.86 vs <=0.4 for every other
+    // query). GENTLE drain: at most 4 extra GC+beat rounds — a tight
+    // gc-every-50ms loop (the first attempt) forced ~25 full STW
+    // collections per settle on a 64 GB heap, and that heap churn
+    // itself stalled the next timed pass by tens of seconds.
+    var tries = 0
+    while (tries < 4 &&
+        org.apache.spark.sql.GraftShim.pendingRddBlocks() > 0) {
+      System.gc()
+      Thread.sleep(150)
+      tries += 1
+    }
+  }
+
   /** Weather canary: one timed pass of a fixed in-memory workload (1e7-row
     * codegen'd agg + one tiny distinct shuffle, zero I/O) whose cost is a
     * property of the HOST, not the repo. Timed at bench start, every
@@ -139,7 +169,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1200").toDouble
     // optional comma-separated query filter for focused local re-runs
     // (the driver never sets it, so its runs always time everything)
@@ -147,15 +176,7 @@ object Bench {
       .map(_.split(',').map(_.trim).toSet)
     def selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val spark = Scratch.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // default 100 entries evicts early queries' generated classes before
-      // their timed run (~75 queries x several codegen stages), silently
-      // re-charging Janino compilation to the timed pass
-      .config("spark.sql.codegen.cache.maxEntries", "5000"))
-      .getOrCreate()
+    val spark = Sessions.local("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     val data = Scratch.stage(sfDir)
     // Quiet-weather gate (round-11 lesson: a record chain that OPENS in
@@ -188,34 +209,6 @@ object Bench {
     }
     val start = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - start) / 1e9
-    // Between timed passes: drop persisted intermediates, then force a JVM
-    // GC. The GC is bench hygiene, not a speed hack — unpersist is async,
-    // and Spark's ContextCleaner only releases the previous query's shuffle
-    // files/broadcasts when their dependency objects are COLLECTED; on a
-    // large barely-collected heap that debris lands in whichever query runs
-    // next (measured: the query after the heaviest shuffle producer ran 5x
-    // its steady state). The 100 ms beat lets the cleaner thread delete
-    // files here (untimed) instead of inside the next query.
-    def settle(): Unit = {
-      spark.catalog.clearCache()
-      System.gc()
-      Thread.sleep(100)
-      // localCheckpoint blocks (x7's per-round lineage truncation) are
-      // released by the ContextCleaner asynchronously AFTER the GC above;
-      // without draining them here the block-drop messages land inside the
-      // NEXT timed pass (measured: x7 spread 1.86 vs <=0.4 for every other
-      // query). GENTLE drain: at most 4 extra GC+beat rounds — a tight
-      // gc-every-50ms loop (the first attempt) forced ~25 full STW
-      // collections per settle on a 64 GB heap, and that heap churn
-      // itself stalled the next timed pass by tens of seconds.
-      var tries = 0
-      while (tries < 4 &&
-          org.apache.spark.sql.GraftShim.pendingRddBlocks() > 0) {
-        System.gc()
-        Thread.sleep(150)
-        tries += 1
-      }
-    }
     // Warm EVERY query once before timing: whole-stage codegen compilation
     // (Janino) and JIT dominate cold single-query latency at this data
     // scale (measured 3-7x the steady-state time) and are one-time costs a
@@ -240,7 +233,7 @@ object Bench {
         try fn(spark, data).count() catch { case _: Throwable => () }
         spark.catalog.clearCache()
       }
-    settle()
+    settle(spark)
     // Median-of-3 per query: single-shot timings on a 32-thread local JVM
     // drift ±25% run-to-run (GC pauses, shuffle-file cleanup, JIT
     // recompiles), which is the same order as a real regression on a
@@ -262,7 +255,7 @@ object Bench {
     val remeasured = collection.mutable.LinkedHashMap[String, Double]()
     def readCanary(): Unit = {
       canary += math.rint(canaryPass(spark) * 1000) / 1000
-      settle()
+      settle(spark)
     }
     // Per-query self-adjudication against the same-surface baseline
     // record: the record flags its own regressions instead of leaving
@@ -372,7 +365,7 @@ object Bench {
           // operators may persist intermediates (minhash groups, asof
           // unions); drop them so every pass is measured cold and doesn't
           // pressure the next query
-          settle()
+          settle(spark)
           passCosts += (System.nanoTime() - t0) / 1e9
           if (ok) Some(dt) else None
         }
@@ -409,7 +402,7 @@ object Bench {
         val ok = try { fn(spark, data).count(); true }
           catch { case _: Throwable => false }
         val dt = (System.nanoTime() - t0) / 1e9
-        settle()
+        settle(spark)
         if (ok) Some(dt) else None
       }
       val newMed = medianOf(times, 3)

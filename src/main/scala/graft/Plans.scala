@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
+import scala.util.matching.Regex
+
 /** Plan-audit artifact: dumps `explain("formatted")` for the headline
   * queries to a markdown file so the physical shapes — pushed filters,
   * pruned schemas, exchange counts, broadcast choices, codegen spans —
@@ -74,22 +76,58 @@ object Plans {
         SparkEntry.queries.get(other).map(b => (b(spark, sfDir), () => ()))
     }
 
+  private val Num = """-?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"""
+  private val Elided = """… \d+ more"""
+  private val NumItem = s"""(?<![\\w#.])$Num(?![\\w.])""".r
+  private val GroupItem = (s"""(?<![\\w#.])\\w+\\((?:$Num|$Elided)""" +
+    s"""(?:, (?:$Num|$Elided))*\\)""").r
+  /** Literal runs this long or longer are elided. */
+  private val MinRun = 17
+  /** Leading values an elided run keeps. */
+  private val Keep = 4
+
+  /** Plan text with inlined literal vectors cut down to size: a run of
+    * more than 16 comma-separated numbers (a hyperplane or centroid
+    * `Vector(…)`/`ArraySeq(…)`) keeps its first four values and then reads
+    * `… n more`; a run of more than 16 such number groups (a codebook of
+    * sub-vectors) keeps its first four groups the same way. Everything
+    * else is left as it is.
+    */
+  def elideLiterals(plan: String): String =
+    elideRuns(elideRuns(plan, NumItem), GroupItem)
+
+  /** Elide every run of `item` matches joined by ", " (scanned match by
+    * match: a regex repeating over a 200 KB run would recurse that deep).
+    */
+  private def elideRuns(text: String, item: Regex): String = {
+    val runs = item.findAllMatchIn(text)
+      .foldLeft(List.empty[List[Regex.Match]]) {
+        case ((last :: run) :: done, m)
+            if m.start == last.end + 2 && text.startsWith(", ", last.end) =>
+          (m :: last :: run) :: done
+        case (acc, m) => List(m) :: acc
+      }
+      .filter(_.size >= MinRun).reverse
+    val sb = new java.lang.StringBuilder
+    val tail = runs.foldLeft(0) { (at, run) =>
+      sb.append(text, at, run(run.size - Keep).end)
+        .append(s", … ${run.size - Keep} more")
+      run.head.end
+    }
+    sb.append(text, tail, text.length).toString
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Scratch.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Sessions.local("graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder
     sb.append("# Physical plans (explain formatted)\n\n")
     sb.append(s"Generated against `$sfDir` — broadcast/exchange choices ")
     sb.append("reflect that scale's statistics; the spec suite asserts ")
-    sb.append("the shape invariants that must hold at any scale.\n")
+    sb.append("the shape invariants that must hold at any scale. Inlined ")
+    sb.append("literal vectors longer than 16 values are elided.\n")
     headline.foreach { name =>
       buildFor(spark, sfDir, name).foreach { case (df, cleanup) =>
         val plan = try {
@@ -98,7 +136,7 @@ object Plans {
         } catch {
           case e: Exception => s"(failed to plan: ${e.getMessage})"
         } finally cleanup()
-        sb.append(s"\n## $name\n\n```\n$plan```\n")
+        sb.append(s"\n## $name\n\n```\n${elideLiterals(plan)}```\n")
       }
     }
     Files.write(Paths.get(outFile),

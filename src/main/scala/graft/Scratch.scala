@@ -52,9 +52,10 @@ object Scratch {
         shmRoot().map(new java.io.File(_, "graft-scratch").getPath)
     }
 
-  /** The local runner posture shared by Bench, Verify, Soak, Plans, Prof,
-    * Sweep and the test suite: two fork-free file settings, then fast
-    * scratch placement.
+  /** The file and scratch half of the local runner posture: two fork-free
+    * file settings, then fast scratch placement. [[Sessions.local]] (the
+    * session of Bench, Verify, Soak, Plans, Prof and the test suite) and
+    * the benchmark's own session apply it.
     *
     * Without libhadoop, Hadoop's local file system forks a `chmod`
     * process for every file and directory it creates (data, `.crc` and

@@ -24,9 +24,9 @@ import org.apache.spark.sql.SparkSession
   *  - **graft's SQL functions installed** ([[GraftExtensions]]) so the
   *    whole operator surface is reachable from `spark.sql`.
   *
-  * `local[*]` testing keeps the same semantics with
-  * [[Scratch.configure]]'s fast-scratch placement (the Verify/Bench
-  * runners use that path directly).
+  * The local runners (Bench, Verify, Soak, Plans, Prof) and the test
+  * suite start through [[local]] instead: the same semantics at laptop
+  * scale, with [[Scratch.configure]]'s fork-free, fast-scratch placement.
   */
 object Sessions {
 
@@ -108,4 +108,25 @@ object Sessions {
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+
+  /** Core count of the local runners: `SPARK_GRAFT_CPUS`, else the host's. */
+  def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The local runner session: `local[cpus]` with one shuffle partition
+    * per core, UI off, UTC session time, a codegen cache large enough that
+    * a run over the whole query surface never evicts a query's generated
+    * classes before its timed pass (the default 100 entries does, which
+    * re-charges Janino compilation to that pass), then
+    * [[Scratch.configure]]. Callers set only their log level.
+    */
+  def local(appName: String, cpus: Int = localCpus): SparkSession =
+    Scratch.configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", "5000"))
+      .getOrCreate()
 }

@@ -327,14 +327,8 @@ object Soak {
 
   def main(args: Array[String]): Unit = {
     val srcEnv = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SOAK_REPLICAS", "10").toInt
-    val spark = Scratch.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000"))
-      .getOrCreate()
+    val spark = Sessions.local("graft-soak")
     spark.sparkContext.setLogLevel("WARN")
 
     val src = Scratch.stage(srcEnv)

@@ -181,8 +181,7 @@ object Similarity {
     * loosely-correlated embeddings) want wide buckets (b=3–4, L=12–20).
     *
     * `private[graft]`, not public: the signature layout is an internal LSH
-    * detail (the dev-only [[graft.Sweep]] tool reaches it for stage
-    * decomposition; library callers use [[topKLsh]]/[[cosinePairsLsh]]).
+    * detail; library callers use [[topKLsh]]/[[cosinePairsLsh]].
     */
   private[graft] def bandedBuckets(
       vec: Column, bands: Int, planesPerBand: Int, dims: Int, seed: Long): Column =

@@ -18,7 +18,9 @@ class SessionsSpec extends AnyFunSuite with Matchers {
     // getOrCreate may attach to the suite's shared session, which is the
     // point: RUNTIME confs must land either way. (Static confs — the
     // extensions registration — are covered by GraftExtensionsSpec via
-    // the explicit install path.)
+    // the explicit install path.) The shared session is made first, so
+    // this suite never creates the JVM's context in its own posture.
+    SparkSpec.session
     val s = Sessions.builder("graft-posture-test", shufflePartitions = 7)
       .master("local[2]")
       .getOrCreate()

@@ -15,16 +15,11 @@ trait SparkSpec extends AnyFunSuite with Matchers {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    // Scratch.configure: shuffle/spill, warehouse, Derby, and tmpdir on
-    // tmpfs when available — the suite's many tiny writes are what a
-    // throttled host disk punishes hardest (a full run died to it once)
-    val s = Scratch.configure(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // the runners' local posture at 4 cores; Scratch.configure puts
+    // shuffle/spill, warehouse, Derby, and tmpdir on tmpfs when available —
+    // the suite's many tiny writes are what a throttled host disk punishes
+    // hardest (a full run died to it once)
+    val s = Sessions.local("graft-tests", cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -127,9 +127,10 @@ def main(p001, p01, p1):
   corpus; y7 trains its coarse codebook at suggestNlist(corpus) =
   round(sqrt(corpus)) with the probe FRACTION held, so per-cell
   population — the serving cost term (nprobe x corpus / nlist) — stays
-  nearly flat. `graft.Prof nlistStudy` measures the same effect
-  off-surface (nlist=45 beats nlist=16 on wall time AND recall at equal
-  probe fraction).
+  nearly flat. `graft.Prof nlistStudy` (since removed; see
+  `git show 52f1ea3:src/main/scala/graft/Prof.scala`) measured the same
+  effect off-surface (nlist=45 beats nlist=16 on wall time AND recall at
+  equal probe fraction).
 - `y2_knn_lsh` (~3.1x on 4x vectors) is the SECOND deliberate contrast
   — the same fixed-capacity law in LSH form: the declared (12, 3) band
   model holds planesPerBand fixed, so expected bucket population
