@@ -333,7 +333,8 @@ private[graft] trait EntryDedup { this: SparkEntry.type =>
           lit("2024-01")).otherwise(lit("2024-02")))
         .write.mode("overwrite").partitionBy("snap").parquet(s"$tmp/ann")
       val docs = rd(s, dir, "documents")
-      // store shape audited round 16 (graft.Prof x13ab,
+      // store shape audited round 16 (the removed x13ab study,
+      // `git show 52f1ea3:src/main/scala/graft/Prof.scala`;
       // plans/r16/x13ab.log): writing the COLLAPSED unique-set form
       // instead (s13's artifact contract) only moves the collapse
       // aggregation from the read side to the write side and measured

@@ -168,7 +168,8 @@ private[graft] trait EntryKnn { this: SparkEntry.type =>
       // the oracle re-derives index build AND search end-to-end in SQL;
       // y6r still MEASURES recall against the cross-split brute force.
       // (nprobe=12, rescoreFactor=16) from the round-9 Sweep grid
-      // (nprobe 4-12 x rf 4-64, both scales): recall is set by nprobe
+      // (`git show 52f1ea3:src/main/scala/graft/Sweep.scala`;
+      // nprobe 4-12 x rf 4-64, both scales): recall is set by nprobe
       // (cell coverage — 12/16 cells needed on this loosely-correlated
       // corpus), while rf saturates at 8; rf=16 holds the y6r bar with
       // margin at BOTH scales (0.928 sf0.01 / 0.942 sf0.1, vs 0.944 at
@@ -212,8 +213,9 @@ private[graft] trait EntryKnn { this: SparkEntry.type =>
     "y7_knn_artifact_served" -> ((s, dir) => {
       // y6's serving shape, completed to the FULL production lifecycle:
       // (a) the coarse codebook is RULE-SIZED per snapshot
-      // (Clustering.suggestNlist = round(√corpus); measured in Prof
-      // nlistStudy / commit fdd305e: at the SAME probe fraction, rule-
+      // (Clustering.suggestNlist = round(√corpus); measured by the
+      // removed nlistStudy, `git show 52f1ea3:src/main/scala/graft/Prof.scala`
+      // / commit fdd305e: at the SAME probe fraction, rule-
       // sized cells beat fixed nlist=16 on wall time AND recall, because
       // finer cells make the probed fraction better targeted — a fixed
       // nlist under a growing corpus degrades toward a linear scan per
@@ -291,8 +293,9 @@ private[graft] trait EntryKnn { this: SparkEntry.type =>
       // FROZEN, so the one question a serving pipeline must keep
       // answering is "retrain yet?". The rule's drift trigger is the
       // delta/index mean quantization-error ratio under the frozen
-      // coarse codebook — measured against ground truth (graft.Prof
-      // appendStudy, sf0.01/sf0.1): an in-distribution delta holds the
+      // coarse codebook — measured against ground truth (the removed
+      // appendStudy, `git show 52f1ea3:src/main/scala/graft/Prof.scala`,
+      // sf0.01/sf0.1): an in-distribution delta holds the
       // ratio at 1.10/1.05 and appended-serve recall at the rebuilt
       // level (0.904 vs 0.924 / 0.905 vs 0.902), while the planted
       // +0.25-per-dim shift blows the ratio to 5.6/5.3 and collapses

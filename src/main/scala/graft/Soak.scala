@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.EventStream
+
 /** 10×-decade scale soak (round 15, judge ask #1): the SCALING.md curves
   * stop at sf0.1; every claim past it was design argument. This main
   * synthesizes a 10× corpus IN-ENGINE from sf0.1 (no new testdata
@@ -113,10 +115,6 @@ object Soak {
   }
 
   // ------------------------------------------------------------- harness
-
-  private def settle(s: SparkSession): Unit = {
-    s.catalog.clearCache(); System.gc(); Thread.sleep(300)
-  }
 
   private def timed(f: => Unit): Double = {
     val t0 = System.nanoTime()
@@ -234,9 +232,9 @@ object Soak {
     // as the chains
     def run2(a: => Unit, b: => Unit, c: => Unit): (Double, Double, Double) = {
       val ts = (1 to 2).map { _ =>
-        settle(s); val ta = timed(a)
-        settle(s); val tb = timed(b)
-        settle(s); val tc = timed(c)
+        Bench.settle(s); val ta = timed(a)
+        Bench.settle(s); val tb = timed(b)
+        Bench.settle(s); val tc = timed(c)
         (ta, tb, tc)
       }
       (ts.map(_._1).min, ts.map(_._2).min, ts.map(_._3).min)
@@ -258,57 +256,33 @@ object Soak {
 
   // --------------------------------------------------- stream soak (s9)
 
-  /** s9's funnel shape at the 10× event table: 3 time-ordered thirds
-    * with the watermark-advancing sentinel riding the FINAL third (the
-    * round-15 trigger-trim shape — eviction happens in the closing
-    * no-data micro-batch), run to completion under the given provider;
-    * returns (seconds, canonical output rows, peak state rows, peak
+  /** s9's funnel shape over `dir`'s events, staged as s9 stages it
+    * (time thirds, the sentinel in the final third, where the closing
+    * no-data micro-batch evicts), drained to completion under the given
+    * provider; returns (drain seconds, output dir, peak state rows, peak
     * state bytes, rocksdb-metric count).
     */
-  private def funnelSoak(
-      s: SparkSession, dir: String, rocksDb: Boolean, tag: String)
-      : (Double, Seq[String], Long, Long, Int) = {
+  private def funnelSoak(s: SparkSession, dir: String, rocksDb: Boolean)
+      : (Double, String, Long, Long, Int) = {
     val events = SparkEntry.rd(s, dir, "events")
-    // tag must be unique per (input dir, provider) — ephemeralDir is
-    // deterministic per (pid, name), and a reused dir means a reused
-    // CHECKPOINT: the stream sees every staged file as already
-    // processed and the run measures nothing (caught in round 15 when
-    // the base row read 0.06 s / 0 state rows)
-    val base = Scratch.ephemeralDir(s"soak-funnel-$tag")
-    val tsm = unix_micros(col("ts").cast("timestamp"))
-    val mm = events.agg(min(tsm), max(tsm)).head()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val cut1 = lo + (hi - lo) / 3
-    val cut2 = lo + 2 * (hi - lo) / 3
+    val base = SparkEntry.streamRunDir("soak-funnel")
     val fe = events
       .filter(col("event_type").isin("signup", "click", "purchase"))
       .select(col("user_id"), col("ts"), col("event_type"))
-    def sentinel(uid: Long, offsetMicros: Long) = s.range(1).select(
-      lit(uid).as("user_id"),
-      timestamp_micros(lit(hi + 30L * 24 * 3600 * 1000000L + offsetMicros))
-        .cast(events.schema("ts").dataType).as("ts"),
-      lit("signup").as("event_type"))
-    SparkEntry.stageOrderedBatches(base, Seq(
-      fe.filter(tsm < cut1),
-      fe.filter(tsm >= cut1 && tsm < cut2),
-      fe.filter(tsm >= cut2).unionByName(sentinel(-1L, 0L))))
+    val in = new SparkEntry.TimeThirds(events).stage(base, fe,
+      sentinel = Some(Seq(lit(-1L).as("user_id"), lit("signup").as("event_type"))))
     val ss = SparkEntry.isolatedStreamSession(s, shufflePartitions = 4)
     if (rocksDb) Sessions.useRocksDbStateStore(ss)
     import ss.implicits._
-    val stream = ss.readStream.schema(fe.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      .withColumn("ts", col("ts").cast("timestamp"))
+    val stream = SparkEntry.orderedFileStream(ss, fe.schema, in, Some("ts"))
       .as[(Long, java.sql.Timestamp, String)]
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
     val t = timed {
-      q = graft.streaming.EventStream.parquetSink(
-        graft.streaming.EventStream.funnelStream(
+      q = EventStream.runAvailableNow(EventStream.parquetSink(
+        EventStream.funnelStream(
           stream, Seq("signup", "click", "purchase"),
           windowMs = 7L * 24 * 3600 * 1000L, lateness = "1 hour").toDF(),
-        s"$base/out", s"$base/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        s"$base/out", s"$base/ckpt"))
     }
     val progress = q.recentProgress
     val stateRows = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
@@ -318,9 +292,7 @@ object Soak {
     val rocksMetrics = progress.flatMap(_.stateOperators.flatMap(
       _.customMetrics.keySet().toArray.map(_.toString)))
       .count(_.toLowerCase.contains("rocksdb"))
-    val rows = s.read.parquet(s"$base/out").collect()
-      .map(_.toString).sorted.toSeq
-    (t, rows, stateRows, stateBytes, rocksMetrics)
+    (t, s"$base/out", stateRows, stateBytes, rocksMetrics)
   }
 
   // ---------------------------------------------------------------- main
@@ -368,11 +340,11 @@ object Soak {
     val results = if (!sections("chains")) Seq.empty else Chains.map { name =>
       val fn = SparkEntry.queries(name)
       def run(dir: String): Long = fn(spark, dir).count()
-      settle(spark); val nBase = run(src)
-      settle(spark); val nSoak = run(soak) // warm passes carry the counts
+      Bench.settle(spark); val nBase = run(src)
+      Bench.settle(spark); val nSoak = run(soak) // warm passes carry the counts
       val ts = (1 to 2).flatMap { _ =>
-        settle(spark); val a = timed(run(src))
-        settle(spark); val b = timed(run(soak))
+        Bench.settle(spark); val a = timed(run(src))
+        Bench.settle(spark); val b = timed(run(soak))
         Seq((a, b))
       }
       val r = ChainResult(name, ts.map(_._1).min, ts.map(_._2).min,
@@ -406,23 +378,29 @@ object Soak {
     // stateful-stream soak: s9's funnel shape at 10× events under both
     // providers — identical output, state metrics recorded
     println("[soak] stream soak: funnel at 10x events, both providers")
-    settle(spark)
-    val (tDef, rowsDef, stateRowsDef, stateBytesDef, _) =
-      funnelSoak(spark, soak, rocksDb = false, tag = "10x-default")
-    settle(spark)
-    val (tRocks, rowsRocks, stateRowsRocks, _, rocksMetrics) =
-      funnelSoak(spark, soak, rocksDb = true, tag = "10x-rocks")
-    require(rowsDef == rowsRocks,
-      s"provider outputs diverged: ${rowsDef.size} vs ${rowsRocks.size}")
+    Bench.settle(spark)
+    val (tDef, outDef, stateRowsDef, stateBytesDef, _) =
+      funnelSoak(spark, soak, rocksDb = false)
+    Bench.settle(spark)
+    val (tRocks, outRocks, stateRowsRocks, _, rocksMetrics) =
+      funnelSoak(spark, soak, rocksDb = true)
+    // multiset difference both ways, counted on the executors
+    val (rowsDef, rocksRows) = (spark.read.parquet(outDef), spark.read.parquet(outRocks))
+    val (onlyDef, onlyRocks) =
+      (rowsDef.exceptAll(rocksRows).count(), rocksRows.exceptAll(rowsDef).count())
+    require(onlyDef == 0 && onlyRocks == 0, "provider outputs diverged: "
+      + s"$onlyDef rows only under the default provider, $onlyRocks only under RocksDB")
     require(rocksMetrics > 0, "rocksdb provider did not engage")
+    val nRowsDef = rowsDef.count()
     // and the sf0.1-sized run for the growth ratio
-    settle(spark)
-    val (tDefBase, rowsBase, stateRowsBase, _, _) =
-      funnelSoak(spark, src, rocksDb = false, tag = "base-default")
-    require(rowsBase.nonEmpty, "base funnel run produced no rows")
-    println(f"[soak] stream: base ${tDefBase}%.2f s (${rowsBase.size} rows,"
+    Bench.settle(spark)
+    val (tDefBase, outBase, stateRowsBase, _, _) =
+      funnelSoak(spark, src, rocksDb = false)
+    val nRowsBase = spark.read.parquet(outBase).count()
+    require(nRowsBase > 0, "base funnel run produced no rows")
+    println(f"[soak] stream: base ${tDefBase}%.2f s ($nRowsBase rows,"
       + f" peak state $stateRowsBase), 10x default ${tDef}%.2f s"
-      + f" (${rowsDef.size} rows, peak state $stateRowsDef),"
+      + f" ($nRowsDef rows, peak state $stateRowsDef),"
       + f" 10x rocksdb ${tRocks}%.2f s (peak state $stateRowsRocks)")
     val canary1 = Bench.canaryPass(spark)
 
@@ -434,7 +412,7 @@ object Soak {
     val report = renderReport(srcEnv, replicas, nDocs, nVecs, nEvts,
       tSynth, tTrain, canary0, canary1, results, recalls, posture.get,
       tDefBase, tDef, tRocks, stateRowsBase, stateRowsDef, stateBytesDef,
-      stateRowsRocks, rowsDef.size)
+      stateRowsRocks, nRowsDef)
     Files.write(Paths.get("SCALING_SOAK.md"),
       report.getBytes(StandardCharsets.UTF_8))
 
@@ -467,7 +445,7 @@ object Soak {
       posture: AnnPosture,
       tStreamBase: Double, tStreamDef: Double, tStreamRocks: Double,
       stateRowsBase: Long, stateRows10x: Long, stateBytes10x: Long,
-      stateRowsRocks: Long, funnelRows: Int): String = {
+      stateRowsRocks: Long, funnelRows: Long): String = {
     val sb = new StringBuilder
     sb ++= s"# SCALING_SOAK — measured ${replicas}× decade past sf0.1 (round 15)\n\n"
     sb ++= s"Generated by `graft.Soak` on ${java.time.LocalDate.now}. "

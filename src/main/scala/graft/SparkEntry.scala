@@ -5,6 +5,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ext.{Bpe, Clusters, CorpusPipeline, Curation, Dedup, Fingerprint, Keyword, LanguageModel, Multimodal, Shingles, Similarity, TextAnalysis}
 import graft.lake.ZOrder
@@ -175,23 +176,55 @@ object SparkEntry extends EntryRelA with EntryRelB with EntryText with EntryDedu
     queriesMultimodal ++
     queriesCuration
 
-  /** Per-evaluation run counter for [[queries]] entries that drive a
-    * streaming checkpoint: each evaluation gets fresh in/out/ckpt dirs so
-    * a bench's repeated passes re-process the staged batches instead of
-    * replaying an exhausted checkpoint. Residue is bounded: the dirs live
+  // ------------------------------------------------ ordered replay
+  //
+  // The streaming declarations (s1–s17) and the soak's stream run replay
+  // staged parquet files through a file source, to completion, under one
+  // contract:
+  //  - one file per trigger: [[orderedFileStream]] reads with
+  //    `maxFilesPerTrigger = 1`, so each staged file is one micro-batch;
+  //  - mtime order: the source replays files by modification time (ties
+  //    fall to listing order, not name order), and [[stageOrderedBatches]]
+  //    copies each file in after its batch's write job, so the times
+  //    increase in staging order;
+  //  - a fresh checkpoint per evaluation: [[streamRunDir]] gives every
+  //    evaluation new out/ckpt dirs, so a repeated pass re-runs every
+  //    trigger instead of resuming an exhausted checkpoint;
+  //  - memoized fixtures: [[stagedStreamInput]] writes the input files
+  //    once per (query, data dir), outside the timed stream;
+  //  - the closing no-data batch: [[streaming.EventStream.runAvailableNow]]
+  //    drains under `Trigger.AvailableNow`, whose last micro-batch carries
+  //    no data; the stateful rows emit their watermark-finalized windows,
+  //    sessions and chains in it ([[isolatedStreamSession]] pins the conf
+  //    that runs it).
+
+  private val streamRuns = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** A fresh directory for one evaluation's stream output and checkpoint,
     * under [[Scratch.ephemeralDir]]'s pid tree (shutdown-hook-removed,
-    * dead-pid-swept).
+    * dead-pid-swept). A reused checkpoint would see every staged file as
+    * processed and replay nothing.
     */
-  private[graft] val streamRuns = new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] def streamRunDir(name: String): String =
+    Scratch.ephemeralDir(s"$name-run${streamRuns.incrementAndGet()}")
+
+  /** The file source of the replay contract: parquet files under `in`,
+    * one per trigger, in modification-time order. `tsCol`, when
+    * given, is cast to TIMESTAMP, which watermarks require (events.ts
+    * ships as TIMESTAMP or TIMESTAMP_NTZ by testdata generation; under
+    * the UTC session the cast keeps wall-clock values).
+    */
+  private[graft] def orderedFileStream(s: SparkSession, schema: StructType,
+      in: String, tsCol: Option[String] = None): DataFrame = {
+    val stream = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(in)
+    tsCol.fold(stream)(c => stream.withColumn(c, col(c).cast("timestamp")))
+  }
 
   /** Stage `batches` as single parquet files `b0.parquet … bN.parquet`
-    * under `base/in` with BOTH increasing mtimes (sequential copies) and
-    * lexicographic names, so the file stream source's (timestamp, path)
-    * ordering replays them as micro-batches in EXACTLY this order under
-    * `maxFilesPerTrigger = 1` — the arrival-order contract the ordered
-    * streaming declarations (s5 watermark thirds + sentinels, s6
-    * sessions, s7 seq-ordered CDC feed) are correct against. Returns the
-    * input directory path.
+    * under `base/in` with increasing mtimes (each copied in after its own
+    * write job), so [[orderedFileStream]] replays them as micro-batches in
+    * exactly this order. Returns the input directory.
     */
   private[graft] def stageOrderedBatches(
       base: String, batches: Seq[DataFrame]): String = {
@@ -210,6 +243,53 @@ object SparkEntry extends EntryRelA with EntryRelB with EntryText with EntryDedu
     inDir.toString
   }
 
+  /** Stage `frame` as two parquet files under `base/in`, in no set order:
+    * the stateless rows' input. Their output does not depend on the
+    * split, and two triggers are the fewest that cross a checkpoint.
+    */
+  private[graft] def stageTwoBatches(base: String, frame: DataFrame): String = {
+    frame.repartition(2).write.mode("overwrite").parquet(s"$base/in")
+    s"$base/in"
+  }
+
+  /** Three time-ordered thirds of the events table's ts range: one
+    * min/max job fixes the cuts, and [[TimeThirds.stage]] stages any
+    * frame over those events as its thirds.
+    */
+  private[graft] final class TimeThirds(events: DataFrame) {
+    // type-agnostic time axis: unix_micros over a cast is monotone for
+    // TIMESTAMP and TIMESTAMP_NTZ alike, and the cuts need only an order
+    private def micros(c: String) = unix_micros(col(c).cast("timestamp"))
+    private val (cut1, cut2, hi) = {
+      val mm = events.agg(min(micros("ts")), max(micros("ts"))).head()
+      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+      (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi)
+    }
+
+    /** Stage `frame`'s rows before `cut1`, between the cuts, and from
+      * `cut2` on as `b0`..`b2` under `base` ([[stageOrderedBatches]]).
+      * Nothing is late under an hour's watermark, since the watermark
+      * only moves between batches. `sentinel`, when given, is the other
+      * columns of one row that rides the final third at `sentinelDays`
+      * past the last event, in the events' own ts type: it moves the
+      * watermark past every real window, and its own window, session or
+      * chain never closes.
+      */
+    def stage(base: String, frame: DataFrame, tsCol: String = "ts",
+        sentinel: Option[Seq[Column]] = None,
+        sentinelDays: Long = 30): String = {
+      val t = micros(tsCol)
+      val last = frame.filter(t >= cut2)
+      stageOrderedBatches(base, Seq(
+        frame.filter(t < cut1),
+        frame.filter(t >= cut1 && t < cut2),
+        sentinel.fold(last)(cols => last.unionByName(
+          frame.sparkSession.range(1).select(
+            timestamp_micros(lit(hi + sentinelDays * 24 * 3600 * 1000000L))
+              .cast(events.schema("ts").dataType).as(tsCol) +: cols: _*)))))
+    }
+  }
+
   /** Memoized stream INPUT-FIXTURE staging (round-15 optimization): the
     * staged micro-batch files are a pure function of (query, data dir) —
     * deterministic filters/cuts over immutable parquet — yet every
@@ -220,11 +300,11 @@ object SparkEntry extends EntryRelA with EntryRelB with EntryText with EntryDedu
     * artifact class [[prewarmModels]] already hoists (the s1/s13/s17
     * index, s2 LM, s3 weights precedents). Staging therefore memoizes
     * per (name, dir) like [[cachedModel]]'s model artifacts, while every
-    * evaluation still gets FRESH checkpoint/output dirs ([[streamRuns]])
-    * so the stream itself — source listing, every trigger, state
-    * commits, the sink — re-executes in full against the parquet inputs
-    * on every pass. `stage` receives a per-(name, dirTag) base directory
-    * and returns the path the declaration should read from.
+    * evaluation still gets a fresh [[streamRunDir]], so the stream itself
+    * — source listing, every trigger, state commits, the sink —
+    * re-executes in full against the parquet inputs on every pass.
+    * `stage` receives a per-(name, dirTag) base directory and returns the
+    * path the declaration should read from.
     */
   private[graft] def stagedStreamInput(s: SparkSession, dir: String,
       name: String)(stage: String => String): String =
@@ -450,8 +530,9 @@ object SparkEntry extends EntryRelA with EntryRelB with EntryText with EntryDedu
     * float-cast of a double add, so the DuckDB oracle twin
     * (`list_transform(embedding, x -> CAST(x + 0.25 AS REAL))`) is
     * bit-identical. Displacement ≈ 2.0 at 64 dims: far enough that the
-    * snapshot-trained codebooks quantize it badly (graft.Prof
-    * appendStudy: qerr ratio 5.6/5.3 at sf0.01/sf0.1), which is the
+    * snapshot-trained codebooks quantize it badly (the removed
+    * `appendStudy`, `git show 52f1ea3:src/main/scala/graft/Prof.scala`:
+    * qerr ratio 5.6/5.3 at sf0.01/sf0.1), which is the
     * drift regime the staleness rule exists to catch.
     */
   private[graft] def y8Drift(c: Column): Column =

@@ -53,7 +53,8 @@ object Clustering {
   }
 
   /** The IVF sizing rule: `nlist ~ √corpus` (the standard FAISS guidance,
-    * and measured on this repo's corpus — `graft.Prof nlistStudy`: at the
+    * and measured on this repo's corpus — the removed `nlistStudy`,
+    * `git show 52f1ea3:src/main/scala/graft/Prof.scala`: at the
     * SAME probe fraction, rule-sized cells beat fixed nlist=16 on both
     * wall time and recall, because finer cells make the probed fraction
     * better targeted). Serving cost per query is `nprobe × corpus /

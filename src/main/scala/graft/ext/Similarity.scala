@@ -1113,7 +1113,8 @@ object Similarity {
     *  1. DRIFT: the delta quantizes `errFactor`× worse than the indexed
     *     corpus under the frozen coarse codebook (mean squared
     *     distance-to-assigned-centroid ratio). Measured on this corpus
-    *     (`graft.Prof appendStudy`): an in-distribution delta holds the
+    *     (the removed `appendStudy`,
+    *     `git show 52f1ea3:src/main/scala/graft/Prof.scala`): an in-distribution delta holds the
     *     ratio near 1 and appended-serve recall at the rebuilt level,
     *     while a shifted delta blows the ratio far past 1.5 and appended
     *     recall on shifted queries collapses vs a fresh rebuild — the

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import org.apache.spark.sql.Row
@@ -700,14 +700,10 @@ object EventStream {
       rescoreFactor: Int,
       outPath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyAnnServeBatch(batch, batchId, index, corpus, idCol, vecCol,
-          k, coarse, pq, nprobe, rescoreFactor, outPath)
-        ()
-      }
+    appendBatches(queries, checkpoint) { (batch, batchId) =>
+      applyAnnServeBatch(batch, batchId, index, corpus, idCol, vecCol,
+        k, coarse, pq, nprobe, rescoreFactor, outPath)
+    }
 
   /** One ANN-serving batch, factored out so redelivery idempotence is
     * directly testable (SinkRedeliverySpec).
@@ -744,14 +740,10 @@ object EventStream {
       salt: String,
       outPath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDsirScoreBatch(
-          batch, batchId, lam, idCol, textCol, buckets, salt, outPath)
-        ()
-      }
+    appendBatches(docs, checkpoint) { (batch, batchId) =>
+      applyDsirScoreBatch(
+        batch, batchId, lam, idCol, textCol, buckets, salt, outPath)
+    }
 
   /** One DSIR-scoring batch (testable redelivery unit). */
   private[graft] def applyDsirScoreBatch(
@@ -788,14 +780,10 @@ object EventStream {
       n: Int = 3,
       addK: Double = 0.5,
       alphabetSize: Int = 64): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyLmGateBatch(batch, batchId, model, idCol, textCol, maxPpl,
-          outPath, n, addK, alphabetSize)
-        ()
-      }
+    appendBatches(docs, checkpoint) { (batch, batchId) =>
+      applyLmGateBatch(batch, batchId, model, idCol, textCol, maxPpl,
+        outPath, n, addK, alphabetSize)
+    }
 
   /** One perplexity-gate batch (testable redelivery unit). */
   private[graft] def applyLmGateBatch(
@@ -828,14 +816,10 @@ object EventStream {
       outPath: String,
       checkpoint: String,
       salt: String = "doremi"): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMixtureGateBatch(
-          batch, batchId, weights, idCol, domainCol, outPath, salt)
-        ()
-      }
+    appendBatches(docs, checkpoint) { (batch, batchId) =>
+      applyMixtureGateBatch(
+        batch, batchId, weights, idCol, domainCol, outPath, salt)
+    }
 
   /** One mixture-gate batch (testable redelivery unit). */
   private[graft] def applyMixtureGateBatch(
@@ -870,7 +854,8 @@ object EventStream {
     * `retainIndexCache` (default false — full scoped release, nothing
     * outlives the trigger) can keep the collapsed index frame cached
     * across triggers; CacheManager dedupes the identical plan to ONE
-    * entry per snapshot. Measured at sf0.1 (`graft.Prof s1retain`,
+    * entry per snapshot. Measured at sf0.1 (the removed `s1retain` study,
+    * `git show 52f1ea3:src/main/scala/graft/Prof.scala`;
     * plans/r16/s1retain.log): warm triggers read the same with retention
     * on and off — the pre-collapsed artifact re-materializes per trigger
     * for the cost of one small parquet read — so the leak-proof posture
@@ -888,15 +873,11 @@ object EventStream {
       numHashes: Int = 64,
       bands: Int = 16,
       retainIndexCache: Boolean = false): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyNearDupPairsBatch(batch, batchId, collapsedIndex, idCol,
-          textCol, threshold, outPath, numHashes, bands,
-          retainIndexCache)
-        ()
-      }
+    appendBatches(docs, checkpoint) { (batch, batchId) =>
+      applyNearDupPairsBatch(batch, batchId, collapsedIndex, idCol,
+        textCol, threshold, outPath, numHashes, bands,
+        retainIndexCache)
+    }
 
   /** One near-dup-pairs batch (testable redelivery unit). */
   private[graft] def applyNearDupPairsBatch(
@@ -929,7 +910,9 @@ object EventStream {
     * `retainIndexCache` (default false — full scoped release, nothing
     * outlives the trigger) can keep the index-side frame cached across
     * triggers (one CacheManager entry per snapshot). Measured neutral at
-    * sf0.1 (`graft.Prof s1retain`, plans/r16/s1retain.log) — the
+    * sf0.1 (the removed `s1retain` study,
+    * `git show 52f1ea3:src/main/scala/graft/Prof.scala`;
+    * plans/r16/s1retain.log) — the
     * pre-collapsed artifact re-materializes per trigger for one small
     * parquet read — so the leak-proof posture is the default.
     */
@@ -945,15 +928,11 @@ object EventStream {
       bands: Int = 16,
       indexPreCollapsed: Boolean = false,
       retainIndexCache: Boolean = false): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDedupGateBatch(batch, batchId, index, idCol, textCol,
-          threshold, outPath, numHashes, bands, indexPreCollapsed,
-          retainIndexCache)
-        ()
-      }
+    appendBatches(docs, checkpoint) { (batch, batchId) =>
+      applyDedupGateBatch(batch, batchId, index, idCol, textCol,
+        threshold, outPath, numHashes, bands, indexPreCollapsed,
+        retainIndexCache)
+    }
 
   /** One dedup-gate batch (testable redelivery unit). Runs through the
     * SCOPED pair plan so the per-batch persisted frames are released
@@ -1001,14 +980,10 @@ object EventStream {
       outPath: String,
       checkpoint: String,
       nprobe: Int = 4): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDecontamGateBatch(batch, batchId, evalSet, idCol, vecCol,
-          minCosine, centroids, outPath, nprobe)
-        ()
-      }
+    appendBatches(docs, checkpoint) { (batch, batchId) =>
+      applyDecontamGateBatch(batch, batchId, evalSet, idCol, vecCol,
+        minCosine, centroids, outPath, nprobe)
+    }
 
   /** One decontamination-gate batch (testable redelivery unit). */
   private[graft] def applyDecontamGateBatch(
@@ -1044,14 +1019,10 @@ object EventStream {
       sumCols: Seq[String] = Nil,
       rangeCols: Seq[String] = Nil,
       ndvCols: Seq[String] = Nil): DataStreamWriter[Row] =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySummaryBatch(batch, batchId, tablePath,
-          groupCols, sumCols, rangeCols, ndvCols)
-        ()
-      }
+    appendBatches(events, checkpoint) { (batch, batchId) =>
+      applySummaryBatch(batch, batchId, tablePath,
+        groupCols, sumCols, rangeCols, ndvCols)
+    }
 
   /** One summary-fold transaction; factored out so idempotence under
     * batch redelivery is directly testable. Returns true if the batch
@@ -1110,9 +1081,22 @@ object EventStream {
     }
   }
 
+  /** The append-mode `foreachBatch` writer every batch sink here shares:
+    * checkpointed at `checkpoint`, each micro-batch handed to `apply`
+    * with its batch id.
+    */
+  private def appendBatches(df: DataFrame, checkpoint: String)(
+      apply: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode(OutputMode.Append)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        apply(batch, batchId)
+      }
+
   /** Parquet sink into a lake layer path, checkpointed; exactly-once via
-    * the file-sink commit log. Caller `.start()`s (and picks a trigger —
-    * `Trigger.AvailableNow()` for incremental-batch semantics).
+    * the file-sink commit log. Run it with [[runAvailableNow]], or start
+    * it under a trigger of your own.
     */
   def parquetSink(
       df: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
@@ -1124,13 +1108,14 @@ object EventStream {
 
   /** One-shot incremental run: process exactly the data available now and
     * stop — the scheduler-free equivalent of the reference's incremental
-    * load flag.
+    * load flag, and the one way the streaming declarations run a stream.
+    * Starts `writer` under the AvailableNow trigger, which ends with a
+    * no-data micro-batch (where watermark-finalized state emits), awaits
+    * termination, and returns the stopped query for its progress.
     */
-  def runAvailableNow(
-      df: DataFrame, path: String, checkpoint: String): Unit = {
-    val q = parquetSink(df, path, checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  def runAvailableNow(writer: DataStreamWriter[Row]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
+    q
   }
 }

@@ -5,25 +5,41 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-/** Drift gate for the local session posture: one factory
-  * ([[Sessions.local]]) builds every runner's session, and the suite's
-  * shared session carries that posture.
+/** Drift gate for the one-way-to-do-it helpers: each pattern below may
+  * appear in `src/main/scala` only in the one file that owns it — the
+  * session factory ([[Sessions.local]]), the stream drain
+  * ([[streaming.EventStream.runAvailableNow]]), and the ordered-replay
+  * file source and run dir ([[SparkEntry.orderedFileStream]],
+  * [[SparkEntry.streamRunDir]]). Also: the suite's shared session carries
+  * the local runner posture.
   */
 class LocalSessionSpec extends SparkSpec {
 
-  test("SparkSession.builder() appears in src/main only in Sessions.scala") {
+  private val owners = Seq(
+    "SparkSession.builder()" -> "Sessions.scala",
+    "Trigger.AvailableNow()" -> "EventStream.scala",
+    "\"maxFilesPerTrigger\"" -> "SparkEntry.scala",
+    "streamRuns.incrementAndGet" -> "SparkEntry.scala")
+
+  private lazy val sources: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
     val stream = Files.walk(root)
-    val offenders = try stream.iterator.asScala
+    try stream.iterator.asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => p.getFileName.toString != "Sessions.scala")
-      .filter(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .contains("SparkSession.builder()"))
-      .map(root.relativize(_: Path).toString).toList
+      .map(p => root.relativize(p: Path).toString ->
+        new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+      .toList
     finally stream.close()
-    assert(offenders.isEmpty,
-      s"build local sessions with Sessions.local, not in $offenders")
   }
+
+  for ((pattern, owner) <- owners)
+    test(s"$pattern appears in src/main only in $owner") {
+      val offenders = sources.collect {
+        case (path, text) if text.contains(pattern) &&
+          Paths.get(path).getFileName.toString != owner => path
+      }
+      assert(offenders.isEmpty, s"$pattern belongs in $owner, not in $offenders")
+    }
 
   test("the shared test session has the local runner posture") {
     val sc = spark.sparkContext

@@ -172,9 +172,9 @@ class EventStreamSpec extends SparkSpec {
 
     val schema = new org.apache.spark.sql.types.StructType()
       .add("user_id", "long").add("event_type", "string")
-    def run(): Unit = EventStream.runAvailableNow(
+    def run(): Unit = EventStream.runAvailableNow(EventStream.parquetSink(
       EventStream.readJsonlStream(spark, src, schema),
-      s"$root/out", s"$root/ckpt")
+      s"$root/out", s"$root/ckpt"))
     run()
     assert(spark.read.parquet(s"$root/out").count() === 2)
     run() // second incremental run: no new input, no duplicate rows

@@ -3,55 +3,86 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.{Sessions, SparkEntry, SparkSpec}
 
-/** The s5 shape (watermarked windowed aggregation into a parquet sink)
-  * gives the same output when stopped after its first batch and restarted
-  * on the same checkpoint as in one run, under both state-store providers.
+/** Every stateful shape the streaming rows run gives the same output when
+  * stopped after its first batch and restarted on the same checkpoint as
+  * in one run, under both state-store providers:
+  *
+  *  - s5's watermarked windowed aggregation (built-in window state),
+  *  - s6's sessionization and s9's funnel (flatMapGroupsWithState with
+  *    event-time timeouts).
+  *
   * The restart reads back the offset log, commit log, state-store files
   * and file-sink log, so it covers every file the checkpoint manager
-  * writes. A window open across the restart proves the state was
-  * restored, not rebuilt.
+  * writes. Each shape keeps a window, session or chain open across the
+  * restart, which proves its state was restored, not rebuilt.
   */
 class RestartEquivalenceSpec extends SparkSpec {
+  import RestartEquivalenceSpec.Shape
 
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-03-01 10:$minute%02d:00")
 
-  /** b0.parquet .. b2.parquet: the 10:00 click window spans b0 and b1;
-    * b2's 10:59 row moves the watermark past every real window.
-    */
-  private lazy val staged: String = {
+  private lazy val shapes: Seq[Shape] = {
     import spark.implicits._
-    val cols = Seq("ts", "event_type", "value")
-    val b0 = Seq((ts(1), "click", 1.0), (ts(2), "click", 2.0),
-      (ts(4), "view", 5.0), (ts(8), "click", 4.0)).toDF(cols: _*)
-    val b1 = Seq((ts(9), "click", 8.0), (ts(12), "click", 3.0),
-      (ts(23), "view", 7.0)).toDF(cols: _*)
-    val b2 = Seq((ts(59), "view", 1.0)).toDF(cols: _*)
-    SparkEntry.stageOrderedBatches(
-      Files.createTempDirectory("restart-eq-stage").toString, Seq(b0, b1, b2))
+    Seq(
+      // the 10:00 click window spans b0 and b1; b2's 10:59 row moves the
+      // watermark past every real window
+      Shape("windowed agg",
+        Seq(Seq((ts(1), "click", 1.0), (ts(2), "click", 2.0),
+            (ts(4), "view", 5.0), (ts(8), "click", 4.0)),
+          Seq((ts(9), "click", 8.0), (ts(12), "click", 3.0),
+            (ts(23), "view", 7.0)),
+          Seq((ts(59), "view", 1.0)))
+          .map(_.toDF("ts", "event_type", "value")),
+        EventStream.windowedEventAgg(_, "ts", "10 minutes", "5 minutes"),
+        "[2024-03-01 10:00:00.0,2024-03-01 10:10:00.0,click,4,15.0]", 4),
+      // user 1's session opens in b0 and takes b1's 10:12 event (within
+      // the 10-minute gap); user 2's 10:30 event closes its b0 session
+      // and opens one that b2's 10:59 row times out
+      Shape("sessionize",
+        Seq(Seq((1L, ts(0), 1.0), (1L, ts(5), 2.0), (2L, ts(1), 3.0)),
+          Seq((1L, ts(12), 4.0), (2L, ts(30), 5.0)),
+          Seq((9L, ts(59), 0.0)))
+          .map(_.toDF("user_id", "ts", "value")),
+        df => EventStream.sessionizeStream(
+          df.as[(Long, Timestamp, Double)], gapMs = 10L * 60 * 1000,
+          lateness = "5 minutes").toDF(),
+        "[1,2024-03-01 10:00:00.0,2024-03-01 10:12:00.0,3,7.0]", 3),
+      // user 1's chain reaches click in b0 and completes in b1; user 2's
+      // completes in b2, whose 10:59 signup moves the watermark on
+      Shape("funnel",
+        Seq(Seq((1L, ts(0), "signup"), (1L, ts(5), "click"),
+            (2L, ts(2), "signup")),
+          Seq((1L, ts(10), "purchase"), (2L, ts(20), "click")),
+          Seq((2L, ts(25), "purchase"), (9L, ts(59), "signup")))
+          .map(_.toDF("user_id", "ts", "event_type")),
+        df => EventStream.funnelStream(
+          df.as[(Long, Timestamp, String)], Seq("signup", "click", "purchase"),
+          windowMs = 30L * 60 * 1000, lateness = "5 minutes").toDF(),
+        "[1,2024-03-01 10:00:00.0,2024-03-01 10:10:00.0,600000]", 2))
   }
 
-  private def land(in: String, names: Seq[String]): Unit = names.foreach { n =>
-    Files.copy(Paths.get(staged, n), Paths.get(in, n),
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** Copy staged files into `in` with their staged mtimes: back-to-back
+    * copies can share a millisecond, and the file source orders ties by
+    * listing order, not by name.
+    */
+  private def land(shape: Shape, in: String, names: Seq[String]): Unit =
+    names.foreach { n =>
+      Files.copy(Paths.get(shape.staged, n), Paths.get(in, n),
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.COPY_ATTRIBUTES)
+    }
 
-  private def drain(ss: SparkSession, base: String): StreamingQuery = {
-    val in = s"$base/in"
-    val stream = ss.readStream.schema(spark.read.parquet(staged).schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = EventStream.parquetSink(
-      EventStream.windowedEventAgg(stream, "ts", "10 minutes", "5 minutes"),
-      s"$base/out", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
+  private def drain(ss: SparkSession, shape: Shape, base: String)
+      : StreamingQuery =
+    EventStream.runAvailableNow(EventStream.parquetSink(
+      shape.stream(SparkEntry.orderedFileStream(
+        ss, shape.batches.head.schema, s"$base/in")),
+      s"$base/out", s"$base/ckpt"))
 
   private def session(rocksDb: Boolean): SparkSession = {
     val ss = SparkEntry.isolatedStreamSession(spark, shufflePartitions = 2)
@@ -67,32 +98,45 @@ class RestartEquivalenceSpec extends SparkSpec {
     base
   }
 
-  for ((name, rocksDb) <- Seq("HDFS" -> false, "RocksDB" -> true)) {
-    test(s"windowed agg ($name state store): stop after batch 1 and " +
-        "restart on the same checkpoint equals the one-shot run") {
-      val all = Seq("b0.parquet", "b1.parquet", "b2.parquet")
-      val oneShot = freshBase()
-      land(s"$oneShot/in", all)
-      drain(session(rocksDb), oneShot)
+  for {
+    shape <- Seq("windowed agg", "sessionize", "funnel")
+    (provider, rocksDb) <- Seq("HDFS" -> false, "RocksDB" -> true)
+  } test(s"$shape ($provider state store): stop after batch 1 and " +
+      "restart on the same checkpoint equals the one-shot run") {
+    val s = shapes.find(_.name == shape).get
+    val all = Seq("b0.parquet", "b1.parquet", "b2.parquet")
+    val oneShot = freshBase()
+    land(s, s"$oneShot/in", all)
+    drain(session(rocksDb), s, oneShot)
 
-      val restarted = freshBase()
-      land(s"$restarted/in", all.take(1))
-      val first = drain(session(rocksDb), restarted)
-      first.recentProgress.filter(_.numInputRows > 0).map(_.batchId) shouldBe
-        Array(0L)
-      land(s"$restarted/in", all.drop(1))
-      val second = drain(session(rocksDb), restarted)
-      second.recentProgress.map(_.batchId).min should be > 0L
-      if (rocksDb)
-        second.lastProgress.stateOperators.head.customMetrics.keySet()
-          .toString.toLowerCase should include("rocksdb")
+    val restarted = freshBase()
+    land(s, s"$restarted/in", all.take(1))
+    val first = drain(session(rocksDb), s, restarted)
+    first.recentProgress.filter(_.numInputRows > 0).map(_.batchId) shouldBe
+      Array(0L)
+    land(s, s"$restarted/in", all.drop(1))
+    val second = drain(session(rocksDb), s, restarted)
+    second.recentProgress.map(_.batchId).min should be > 0L
+    if (rocksDb)
+      second.lastProgress.stateOperators.head.customMetrics.keySet()
+        .toString.toLowerCase should include("rocksdb")
 
-      val expected = output(oneShot)
-      output(restarted) shouldBe expected
-      // the 10:00 click window took rows from both sides of the restart
-      expected should contain("[2024-03-01 10:00:00.0,2024-03-01 10:10:00.0," +
-        "click,4,15.0]")
-      expected.size shouldBe 4
-    }
+    val expected = output(oneShot)
+    output(restarted) shouldBe expected
+    expected should contain(s.open)
+    expected.size shouldBe s.rows
+  }
+}
+
+object RestartEquivalenceSpec {
+
+  /** A stateful shape over three staged batches: `stream` maps the file
+    * source to the sink's frame; `open` is an output row fed from both
+    * sides of the restart, and `rows` the output's size.
+    */
+  private final case class Shape(name: String, batches: Seq[DataFrame],
+      stream: DataFrame => DataFrame, open: String, rows: Int) {
+    lazy val staged: String = SparkEntry.stageOrderedBatches(
+      Files.createTempDirectory(s"restart-eq-$name").toString, batches)
   }
 }

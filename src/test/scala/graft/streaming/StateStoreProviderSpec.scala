@@ -3,9 +3,9 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.{SparkSpec, Sessions, SparkEntry}
 
@@ -33,19 +33,19 @@ class StateStoreProviderSpec extends SparkSpec {
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-03-01 10:$minute%02d:00")
 
-  /** Run `pipeline` (stage input under `base`, start the stream with
-    * AvailableNow, await) on a child session with the given provider;
-    * returns (canonical rows of base/out, rocksdb-metric key count).
+  /** Run `pipeline` (stage input under `base`, return the stream's
+    * writer) to completion with [[EventStream.runAvailableNow]] on a child
+    * session with the given provider; returns (canonical rows of
+    * base/out, rocksdb-metric key count).
     */
   private def runShape(rocksDb: Boolean)(
-      pipeline: (SparkSession, String) => org.apache.spark.sql.streaming.StreamingQuery)
+      pipeline: (SparkSession, String) => DataStreamWriter[Row])
       : (Seq[String], Int) = {
     val base = Files.createTempDirectory("ssp").toString
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "2")
     if (rocksDb) Sessions.useRocksDbStateStore(ss)
-    val q = pipeline(ss, base)
-    q.awaitTermination()
+    val q = EventStream.runAvailableNow(pipeline(ss, base))
     val rocksMetrics = q.recentProgress.flatMap(p =>
       p.stateOperators.flatMap(_.customMetrics.keySet()
         .toArray.map(_.toString)))
@@ -59,7 +59,7 @@ class StateStoreProviderSpec extends SparkSpec {
     * RocksDB leg must show rocksdb metrics in its progress.
     */
   private def assertProviderInvariant(name: String)(
-      pipeline: (SparkSession, String) => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      pipeline: (SparkSession, String) => DataStreamWriter[Row]): Unit = {
     val (defaultRows, _) = runShape(rocksDb = false)(pipeline)
     val (rocksRows, rocksMetrics) = runShape(rocksDb = true)(pipeline)
     assert(defaultRows.nonEmpty, s"$name: empty output proves nothing")
@@ -77,12 +77,10 @@ class StateStoreProviderSpec extends SparkSpec {
       val b2 = Seq((ts(12), "click", 3.0)).toDF("ts", "event_type", "value")
       val adv = Seq((ts(59), "view", 1.0)).toDF("ts", "event_type", "value")
       SparkEntry.stageOrderedBatches(base, Seq(b1, b2, adv))
-      val stream = ss.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      val stream = SparkEntry.orderedFileStream(ss, b1.schema, s"$base/in")
       EventStream.parquetSink(
         EventStream.windowedEventAgg(stream, "ts", "10 minutes", "5 minutes"),
         s"$base/out", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
     }
   }
 
@@ -94,14 +92,12 @@ class StateStoreProviderSpec extends SparkSpec {
       val b2 = Seq((1L, ts(25), 4.0)).toDF("user_id", "ts", "value")
       val adv = Seq((9L, ts(59), 0.0)).toDF("user_id", "ts", "value")
       SparkEntry.stageOrderedBatches(base, Seq(b1, b2, adv))
-      val stream = ss.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      val stream = SparkEntry.orderedFileStream(ss, b1.schema, s"$base/in")
         .as[(Long, Timestamp, Double)]
       EventStream.parquetSink(
         EventStream.sessionizeStream(
           stream, gapMs = 10L * 60 * 1000, lateness = "5 minutes").toDF(),
         s"$base/out", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
     }
   }
 
@@ -112,13 +108,11 @@ class StateStoreProviderSpec extends SparkSpec {
         .toDF("ts", "text")
       val b2 = Seq((ts(4), "beta"), (ts(5), "gamma")).toDF("ts", "text")
       SparkEntry.stageOrderedBatches(base, Seq(b1, b2))
-      val stream = ss.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      val stream = SparkEntry.orderedFileStream(ss, b1.schema, s"$base/in")
       EventStream.parquetSink(
         EventStream.dedupStream(stream, "text", "ts", lateness = "1 hour")
           .select(col("text"), date_format(col("ts"), "HH:mm").as("hm")),
         s"$base/out", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
     }
   }
 
@@ -133,10 +127,8 @@ class StateStoreProviderSpec extends SparkSpec {
       val r2 = Seq((102L, 20L, ts(6)), (103L, 10L, ts(22)))
         .toDF("r_id", "r_user", "r_ts")
       SparkEntry.stageOrderedBatches(s"$base/R", Seq(r1, r2))
-      val left = ss.readStream.schema(l1.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/L/in")
-      val right = ss.readStream.schema(r1.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/R/in")
+      val left = SparkEntry.orderedFileStream(ss, l1.schema, s"$base/L/in")
+      val right = SparkEntry.orderedFileStream(ss, r1.schema, s"$base/R/in")
       EventStream.parquetSink(
         EventStream.intervalJoinStream(left, right,
           "l_user", "r_user", "l_ts", "r_ts",
@@ -144,7 +136,6 @@ class StateStoreProviderSpec extends SparkSpec {
           lateness = "5 minutes")
           .select(col("l_id"), col("r_id")),
         s"$base/out", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
     }
   }
 }
