@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
@@ -139,8 +138,7 @@ object Plans {
         sb.append(s"\n## $name\n\n```\n${elideLiterals(plan)}```\n")
       }
     }
-    Files.write(Paths.get(outFile),
-      sb.toString.getBytes(StandardCharsets.UTF_8))
+    Runner.write(Paths.get(outFile), sb.toString)
     // stderr keeps stdout clean for tooling
     System.err.println(s"[plans] wrote ${headline.size} plans to $outFile")
     spark.stop()

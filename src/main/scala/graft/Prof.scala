@@ -52,7 +52,7 @@ object Prof {
 
   /** The A/B core. Both sides' confs are tried before anything runs; then
     * one untimed warm pass per side and `passes` timed passes alternating
-    * A, B, each the Bench action (`count()`) followed by [[Bench.settle]].
+    * A, B, each a [[Runner.pass]] of the Bench action (`count()`).
     * Last, each side's output is pinned on the executors
     * (`localCheckpoint`) under its own confs, and the two are compared
     * with `exceptAll` both ways, counted where they live, without
@@ -65,12 +65,7 @@ object Prof {
     sides.foreach { case (_, c, f) =>
       withConfs(spark, c)(f().count()); Bench.settle(spark) }
     val times = for (i <- 1 to passes; (tag, c, f) <- sides) yield {
-      val dt = withConfs(spark, c) {
-        val t0 = System.nanoTime()
-        f().count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      Bench.settle(spark)
+      val dt = withConfs(spark, c)(Runner.pass(spark)(f().count())).secondsOrThrow
       println(f"[prof] $label pass $i $tag $dt%.3f s")
       tag -> dt
     }
@@ -108,10 +103,9 @@ object Prof {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-prof")
     spark.sparkContext.setLogLevel("WARN")
-    val data = Scratch.stage(dir)
+    val data = Scratch.stage(Runner.sfDir)
     try names.foreach { n =>
       val q = () => SparkEntry.queries(n)(spark, data)
       val r = ab(spark, passes, confsA, confsB, n)(q, q)

@@ -1,18 +1,18 @@
 package graft
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
 /** Generator for `QUERIES.md` — the navigable index of the declared
-  * query surface (judge r14 ask #4): query id → declaration site
-  * (file:line) → oracle kind → one-line summary scraped from the
-  * declaration's own leading comment. At 189 queries across seven
-  * `Entry*` traits, "where is x11 and what does it test" is otherwise a
-  * grep per question; the index answers it in one lookup and
-  * `QueriesIndexSpec` fails the build when the file drifts from the
-  * declared map (so it can never go stale silently).
+  * query surface: query id → declaring file → oracle kind → one-line
+  * summary scraped from the declaration's own leading comment. At 189
+  * queries across seven `Entry*` traits, "where is x11 and what does it
+  * test" is otherwise a grep per question; the index answers it in one
+  * lookup and `QueriesIndexSpec` fails the build when the file drifts
+  * from the declared map (so it can never go stale silently). It names
+  * the file, not the line, so an edit that only moves a declaration
+  * leaves it unchanged.
   *
   * Regenerate: `sbt "runMain graft.QueriesIndex"` (writes `QUERIES.md`
   * in the repo root).
@@ -25,7 +25,7 @@ object QueriesIndex {
     */
   private val declPattern = """"([a-z0-9_]+)" -> \(\(s, dir\)""".r.unanchored
 
-  final case class Decl(name: String, file: String, line: Int, summary: String)
+  final case class Decl(name: String, file: String, summary: String)
 
   /** Scan the `Entry*` traits for declaration sites and their leading
     * comment summaries.
@@ -37,8 +37,8 @@ object QueriesIndex {
       .toSeq.sortBy(_.toString)
     files.flatMap { p =>
       val lines = Files.readAllLines(p).asScala.toVector
-      lines.zipWithIndex.flatMap { case (l, i) =>
-        declPattern.findFirstMatchIn(l).map { m =>
+      lines.indices.flatMap { i =>
+        declPattern.findFirstMatchIn(lines(i)).map { m =>
           val comment = lines.drop(i + 1)
             .takeWhile(_.trim.startsWith("//"))
             .map(_.trim.stripPrefix("//").trim)
@@ -48,8 +48,7 @@ object QueriesIndex {
           val summary =
             if (fromComment.nonEmpty) fromComment
             else m.group(1).split("_").drop(1).mkString(" ")
-          Decl(m.group(1), s"src/main/scala/graft/${p.getFileName}",
-            i + 1, summary)
+          Decl(m.group(1), s"src/main/scala/graft/${p.getFileName}", summary)
         }
       }
     }.map(d => d.name -> d).toMap
@@ -90,24 +89,24 @@ object QueriesIndex {
     sb ++= "# QUERIES — generated index of the declared query surface\n\n"
     sb ++= "Generated by `graft.QueriesIndex` (`sbt \"runMain graft.QueriesIndex\"`).\n"
     sb ++= "`QueriesIndexSpec` fails when this file drifts from `SparkEntry.queries`\n"
-    sb ++= "— regenerate after adding or moving a declaration.\n\n"
+    sb ++= "— regenerate after adding, renaming or re-describing a declaration.\n\n"
     sb ++= s"Total: ${names.size} queries, $withOracle with DuckDB value oracles"
     sb ++= (if (withOracle == names.size) " (full coverage).\n\n" else ".\n\n")
     sb ++= "Families: `q` relational/pipeline · `t` text analysis · `x` dedup/"
     sb ++= "curation chains · `y` ANN/similarity · `m` multimodal · `s` streaming.\n\n"
-    sb ++= "| query | declared at | oracle | what it tests |\n"
+    sb ++= "| query | declared in | oracle | what it tests |\n"
     sb ++= "|---|---|---|---|\n"
     names.foreach { n =>
       val d = decls(n)
       val oracle = if (SparkEntry.oracleSql.contains(n)) "sql" else "rows-only"
-      sb ++= s"| $n | `${d.file}:${d.line}` | $oracle | ${d.summary} |\n"
+      sb ++= s"| $n | `${d.file}` | $oracle | ${d.summary} |\n"
     }
     sb.result()
   }
 
   def main(args: Array[String]): Unit = {
     val out = Paths.get("QUERIES.md")
-    Files.write(out, generate().getBytes(StandardCharsets.UTF_8))
+    Runner.write(out, generate())
     println(s"wrote $out")
   }
 }

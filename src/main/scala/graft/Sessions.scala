@@ -64,22 +64,14 @@ object Sessions {
   final val RocksDbStateStoreProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Builder-time switch onto [[RocksDbStateStoreProvider]] for every
-    * stateful streaming query of the session. Changelog checkpointing
-    * uploads per-batch deltas instead of full RocksDB snapshots — the
-    * production posture for large state at short trigger intervals.
-    */
-  def withRocksDbStateStore(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.streaming.stateStore.providerClass",
-        RocksDbStateStoreProvider)
-      .config("spark.sql.streaming.stateStore.rocksdb."
-        + "changelogCheckpointing.enabled", "true")
-
-  /** Runtime twin of [[withRocksDbStateStore]] for an existing session
-    * (the provider class is read per QUERY at stream start, so a
-    * runtime conf on an isolated child session scopes the choice to the
-    * streams declared on it — the [[SparkEntry.isolatedStreamSession]]
-    * pattern). Returns the same session for chaining.
+  /** Switch a session onto [[RocksDbStateStoreProvider]] for the stateful
+    * streaming queries started on it, with changelog checkpointing
+    * (per-batch deltas instead of full RocksDB snapshots: the production
+    * posture for large state at short trigger intervals). The provider
+    * class is read per QUERY at stream start, so on an isolated child
+    * session the choice is scoped to the streams declared there (the
+    * [[SparkEntry.isolatedStreamSession]] pattern). Returns the same
+    * session for chaining.
     */
   def useRocksDbStateStore(s: SparkSession): SparkSession = {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",

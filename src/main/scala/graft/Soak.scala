@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -116,10 +115,15 @@ object Soak {
 
   // ------------------------------------------------------------- harness
 
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
+  /** Each action's fastest of 2 timed passes, interleaved so drift hits
+    * every side equally (the same-warmth statistic Bench uses for 2
+    * passes). A settle precedes the first pass; [[Runner.pass]] settles
+    * after each.
+    */
+  private def minOf2(s: SparkSession, actions: (() => Long)*): Seq[Double] = {
+    Bench.settle(s)
+    (1 to 2).map(_ => actions.map(a => Runner.pass(s)(a()).secondsOrThrow))
+      .transpose.map(_.min)
   }
 
   /** The headline chains and their input families (all grow 10×).
@@ -228,21 +232,11 @@ object Soak {
     }
     val (cal, curve, nExact) = (calib.nprobe, calib.curve, calib.nExact)
 
-    // A/B interleaved min-of-2 at the CALIBRATED point, same statistic
-    // as the chains
-    def run2(a: => Unit, b: => Unit, c: => Unit): (Double, Double, Double) = {
-      val ts = (1 to 2).map { _ =>
-        Bench.settle(s); val ta = timed(a)
-        Bench.settle(s); val tb = timed(b)
-        Bench.settle(s); val tc = timed(c)
-        (ta, tb, tc)
-      }
-      (ts.map(_._1).min, ts.map(_._2).min, ts.map(_._3).min)
-    }
-    val (tBase, tFixed, tGrown) = run2(
-      serve(batchBase, snapBase, coarseB, pqB, nprobeB).count(),
-      serve(batchBase, snapSoak, coarseS, pqS, cal).count(),
-      serve(batchSoak, snapSoak, coarseS, pqS, cal).count())
+    // A/B at the CALIBRATED point, same statistic as the chains
+    val Seq(tBase, tFixed, tGrown) = minOf2(s,
+      () => serve(batchBase, snapBase, coarseB, pqB, nprobeB).count(),
+      () => serve(batchBase, snapSoak, coarseS, pqS, cal).count(),
+      () => serve(batchSoak, snapSoak, coarseS, pqS, cal).count())
 
     val p = AnnPosture(nlistB, nlistS, nprobeB, nprobeS, cal, curve,
       tBase, tFixed, tGrown, nExact)
@@ -259,11 +253,9 @@ object Soak {
   /** s9's funnel shape over `dir`'s events, staged as s9 stages it
     * (time thirds, the sentinel in the final third, where the closing
     * no-data micro-batch evicts), drained to completion under the given
-    * provider; returns (drain seconds, output dir, peak state rows, peak
-    * state bytes, rocksdb-metric count).
+    * provider in one [[Runner.pass]] (so a settle follows it).
     */
-  private def funnelSoak(s: SparkSession, dir: String, rocksDb: Boolean)
-      : (Double, String, Long, Long, Int) = {
+  private def funnelSoak(s: SparkSession, dir: String, rocksDb: Boolean): Drain = {
     val events = SparkEntry.rd(s, dir, "events")
     val base = SparkEntry.streamRunDir("soak-funnel")
     val fe = events
@@ -276,15 +268,12 @@ object Soak {
     import ss.implicits._
     val stream = SparkEntry.orderedFileStream(ss, fe.schema, in, Some("ts"))
       .as[(Long, java.sql.Timestamp, String)]
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    val t = timed {
-      q = EventStream.runAvailableNow(EventStream.parquetSink(
-        EventStream.funnelStream(
-          stream, Seq("signup", "click", "purchase"),
-          windowMs = 7L * 24 * 3600 * 1000L, lateness = "1 hour").toDF(),
-        s"$base/out", s"$base/ckpt"))
-    }
-    val progress = q.recentProgress
+    val drain = Runner.pass(s)(EventStream.runAvailableNow(EventStream.parquetSink(
+      EventStream.funnelStream(
+        stream, Seq("signup", "click", "purchase"),
+        windowMs = 7L * 24 * 3600 * 1000L, lateness = "1 hour").toDF(),
+      s"$base/out", s"$base/ckpt")))
+    val progress = drain.get.recentProgress
     val stateRows = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
       .foldLeft(0L)(math.max)
     val stateBytes = progress.flatMap(_.stateOperators.map(_.memoryUsedBytes))
@@ -292,27 +281,34 @@ object Soak {
     val rocksMetrics = progress.flatMap(_.stateOperators.flatMap(
       _.customMetrics.keySet().toArray.map(_.toString)))
       .count(_.toLowerCase.contains("rocksdb"))
-    (t, s"$base/out", stateRows, stateBytes, rocksMetrics)
+    Drain(drain.seconds, s"$base/out", stateRows, stateBytes, rocksMetrics)
   }
+
+  /** A funnel drain: its seconds, output dir, peak state rows and bytes,
+    * and how many RocksDB metrics its progress carried. */
+  private final case class Drain(seconds: Double, out: String,
+      stateRows: Long, stateBytes: Long, rocksMetrics: Int)
 
   // ---------------------------------------------------------------- main
 
+  /** Corpus growth: the soak corpus is this many copies of sf0.1. */
+  private val Replicas = 10
+
   def main(args: Array[String]): Unit = {
-    val srcEnv = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SOAK_REPLICAS", "10").toInt
+    val srcEnv = Runner.sfDir
     val spark = Sessions.local("graft-soak")
     spark.sparkContext.setLogLevel("WARN")
 
     val src = Scratch.stage(srcEnv)
-    val soak = Scratch.ephemeralDir(s"soak${replicas}x")
+    val soak = Scratch.ephemeralDir(s"soak${Replicas}x")
     val canary0 = Bench.canaryPass(spark)
 
-    println(s"[soak] synthesizing ${replicas}× corpus from $srcEnv -> $soak")
-    val tSynth = timed {
-      synthDocuments(spark, src, soak, replicas)
-      synthEmbeddings(spark, src, soak, replicas)
-      synthEvents(spark, src, soak, replicas)
-    }
+    println(s"[soak] synthesizing ${Replicas}× corpus from $srcEnv -> $soak")
+    val tSynth = Runner.pass(spark) {
+      synthDocuments(spark, src, soak, Replicas)
+      synthEmbeddings(spark, src, soak, Replicas)
+      synthEvents(spark, src, soak, Replicas)
+    }.secondsOrThrow
     val nDocs = spark.read.parquet(s"$soak/documents.parquet").count()
     val nVecs = spark.read.parquet(s"$soak/embeddings.parquet").count()
     val nEvts = spark.read.parquet(s"$soak/events.parquet").count()
@@ -321,133 +317,111 @@ object Soak {
     // one-time model training for BOTH dirs lands here, never in a
     // timed pass (the prewarm posture Bench uses)
     println("[soak] prewarming ANN models (untimed, per-snapshot cost)")
-    val tTrain = timed {
+    val tTrain = Runner.pass(spark) {
       SparkEntry.y6Models(spark, src); SparkEntry.y7Models(spark, src)
       SparkEntry.y6Models(spark, soak); SparkEntry.y7Models(spark, soak)
-    }
+    }.secondsOrThrow
     println(f"[soak] models trained in $tTrain%.1f s")
 
-    // iteration switch: run a subset of sections (artifacts are only
-    // written by a full run, so partial runs can't ship partial reports)
-    val sections = sys.env.getOrElse(
-      "SPARK_GRAFT_SOAK_SECTIONS", "chains,ann,stream")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val full = Set("chains", "ann", "stream").subsetOf(sections)
-
-    // A/B timed passes in one JVM: warm both sides, then two timed
-    // passes each, interleaved so drift hits both sides equally; min of
-    // the two (the same-warmth statistic Bench uses for 2 passes)
-    val results = if (!sections("chains")) Seq.empty else Chains.map { name =>
+    // A/B timed passes in one JVM: warm both sides (the warm passes carry
+    // the counts; the previous chain's last pass settled), then [[minOf2]]
+    val results = Chains.map { name =>
       val fn = SparkEntry.queries(name)
       def run(dir: String): Long = fn(spark, dir).count()
-      Bench.settle(spark); val nBase = run(src)
-      Bench.settle(spark); val nSoak = run(soak) // warm passes carry the counts
-      val ts = (1 to 2).flatMap { _ =>
-        Bench.settle(spark); val a = timed(run(src))
-        Bench.settle(spark); val b = timed(run(soak))
-        Seq((a, b))
-      }
-      val r = ChainResult(name, ts.map(_._1).min, ts.map(_._2).min,
-        nBase, nSoak)
+      val nBase = run(src)
+      Bench.settle(spark); val nSoak = run(soak)
+      val Seq(tBase, tSoak) = minOf2(spark, () => run(src), () => run(soak))
+      val r = ChainResult(name, tBase, tSoak, nBase, nSoak)
       println(f"[soak] ${r.name}%-28s ${r.tBase}%7.2f s -> ${r.tSoak}%7.2f s  ratio ${r.ratio}%5.2f  ${if (r.flagged) "FLAG" else "ok"}")
       r
     }
 
     // recall companions at 10×: the declared queries already emit
     // (n_exact, recall_ok at their bars); collect the verdicts
-    val recalls = if (!sections("chains")) Seq.empty else Seq(
+    val recalls = Seq(
       "x2pr_minhash_prod_recall" -> 0.95,
       "y6r_knn_indexed_recall" -> 0.9,
       "y7r_knn_artifact_recall" -> 0.9).map { case (name, bar) =>
       val row = SparkEntry.queries(name)(spark, soak).head()
       val ok = row.getAs[Int]("recall_ok") == 1
-      println(s"[soak] recall $name at ${replicas}x: n_exact=${row.getAs[Long]("n_exact")} >=$bar ok=$ok")
+      println(s"[soak] recall $name at ${Replicas}x: n_exact=${row.getAs[Long]("n_exact")} >=$bar ok=$ok")
       (name, bar, row.getAs[Long]("n_exact"), ok)
     }
 
     // ANN serving-posture study: root-cause + fix for the y6/y7 flags
-    val posture = if (!sections("ann")) None else {
-      println("[soak] ann serving-posture study (y6/y7 flag root-cause)")
-      Some(annPostureStudy(spark, src, soak))
-    }
+    println("[soak] ann serving-posture study (y6/y7 flag root-cause)")
+    val ann = annPostureStudy(spark, src, soak)
 
-    if (!sections("stream")) {
-      println(s"[soak] partial run (sections=$sections) — no artifacts written")
-      spark.stop(); return
-    }
     // stateful-stream soak: s9's funnel shape at 10× events under both
     // providers — identical output, state metrics recorded
     println("[soak] stream soak: funnel at 10x events, both providers")
     Bench.settle(spark)
-    val (tDef, outDef, stateRowsDef, stateBytesDef, _) =
-      funnelSoak(spark, soak, rocksDb = false)
-    Bench.settle(spark)
-    val (tRocks, outRocks, stateRowsRocks, _, rocksMetrics) =
-      funnelSoak(spark, soak, rocksDb = true)
+    val default = funnelSoak(spark, soak, rocksDb = false)
+    val rocks = funnelSoak(spark, soak, rocksDb = true)
     // multiset difference both ways, counted on the executors
-    val (rowsDef, rocksRows) = (spark.read.parquet(outDef), spark.read.parquet(outRocks))
+    val (rowsDef, rocksRows) = (spark.read.parquet(default.out), spark.read.parquet(rocks.out))
     val (onlyDef, onlyRocks) =
       (rowsDef.exceptAll(rocksRows).count(), rocksRows.exceptAll(rowsDef).count())
     require(onlyDef == 0 && onlyRocks == 0, "provider outputs diverged: "
       + s"$onlyDef rows only under the default provider, $onlyRocks only under RocksDB")
-    require(rocksMetrics > 0, "rocksdb provider did not engage")
+    require(rocks.rocksMetrics > 0, "rocksdb provider did not engage")
     val nRowsDef = rowsDef.count()
     // and the sf0.1-sized run for the growth ratio
     Bench.settle(spark)
-    val (tDefBase, outBase, stateRowsBase, _, _) =
-      funnelSoak(spark, src, rocksDb = false)
-    val nRowsBase = spark.read.parquet(outBase).count()
+    val base = funnelSoak(spark, src, rocksDb = false)
+    val nRowsBase = spark.read.parquet(base.out).count()
     require(nRowsBase > 0, "base funnel run produced no rows")
-    println(f"[soak] stream: base ${tDefBase}%.2f s ($nRowsBase rows,"
-      + f" peak state $stateRowsBase), 10x default ${tDef}%.2f s"
-      + f" ($nRowsDef rows, peak state $stateRowsDef),"
-      + f" 10x rocksdb ${tRocks}%.2f s (peak state $stateRowsRocks)")
+    println(f"[soak] stream: base ${base.seconds}%.2f s ($nRowsBase rows,"
+      + f" peak state ${base.stateRows}), 10x default ${default.seconds}%.2f s"
+      + f" ($nRowsDef rows, peak state ${default.stateRows}),"
+      + f" 10x rocksdb ${rocks.seconds}%.2f s (peak state ${rocks.stateRows})")
     val canary1 = Bench.canaryPass(spark)
 
-    if (!full) {
-      println(s"[soak] partial run (sections=$sections) — no artifacts written")
-      spark.stop(); return
-    }
     val flagged = results.filter(_.flagged)
-    val report = renderReport(srcEnv, replicas, nDocs, nVecs, nEvts,
-      tSynth, tTrain, canary0, canary1, results, recalls, posture.get,
-      tDefBase, tDef, tRocks, stateRowsBase, stateRowsDef, stateBytesDef,
-      stateRowsRocks, nRowsDef)
-    Files.write(Paths.get("SCALING_SOAK.md"),
-      report.getBytes(StandardCharsets.UTF_8))
+    val report = renderReport(srcEnv, nDocs, nVecs, nEvts,
+      tSynth, tTrain, canary0, canary1, results, recalls, ann,
+      base, default, rocks, nRowsDef)
+    Runner.write(Paths.get("SCALING_SOAK.md"), report)
 
-    val json = new StringBuilder
-    json ++= s"""{"replicas":$replicas,"docs":$nDocs,"vecs":$nVecs,"""
-    json ++= s""""events":$nEvts,"canary":[$canary0,$canary1],"""
-    json ++= s""""bound":$GrowthBound,"flagged":${flagged.size},"chains":{"""
-    json ++= results.map(r =>
-      s""""${r.name}":{"t_base":${r.tBase},"t_soak":${r.tSoak},"ratio":${f"${r.ratio}%.3f"},"rows_base":${r.outBase},"rows_soak":${r.outSoak}}""")
-      .mkString(",")
-    json ++= s"""},"recall":{"""
-    json ++= recalls.map(r =>
-      s""""${r._1}":{"bar":${r._2},"n_exact":${r._3},"ok":${r._4}}""")
-      .mkString(",")
-    val p = posture.get
-    json ++= s"""},"ann_posture":{"nlist_base":${p.nlistBase},"nlist_10x":${p.nlistSoak},"nprobe_base":${p.nprobeBase},"nprobe_tied_10x":${p.nprobeTied},"nprobe_calibrated_10x":${p.nprobeCal},"recall_curve":{${p.curve.map(c => s""""${c._1}":${f"${c._2}%.4f"}""").mkString(",")}},"t_base":${p.tBase},"t_fixed_batch":${p.tFixedBatch},"t_grown_batch":${p.tGrownBatch},"per_query_ratio":${f"${p.perQueryRatio}%.3f"},"bound":${f"${p.bound}%.3f"},"recall_calibrated_10x":${f"${p.recallCal}%.4f"},"n_exact":${p.nExact},"flagged":${p.flagged}"""
-    json ++= s"""},"stream":{"t_base":$tDefBase,"t_default":$tDef,"t_rocksdb":$tRocks,"state_rows_base":$stateRowsBase,"state_rows_10x":$stateRowsDef,"state_bytes_10x":$stateBytesDef,"outputs_identical":true}}"""
-    Files.write(Paths.get("SOAK_10X.json"),
-      (json.result() + "\n").getBytes(StandardCharsets.UTF_8))
-    println(json.result())
+    val json = Runner.record("replicas" -> Replicas, "docs" -> nDocs,
+      "vecs" -> nVecs, "events" -> nEvts, "canary" -> Seq(canary0, canary1),
+      "bound" -> GrowthBound, "flagged" -> flagged.size,
+      "chains" -> Runner.record(results.map(r => r.name -> Runner.record(
+        "t_base" -> r.tBase, "t_soak" -> r.tSoak, "ratio" -> Runner.round(r.ratio, 3),
+        "rows_base" -> r.outBase, "rows_soak" -> r.outSoak)): _*),
+      "recall" -> Runner.record(recalls.map { case (n, bar, nExact, ok) =>
+        n -> Runner.record("bar" -> bar, "n_exact" -> nExact, "ok" -> ok) }: _*),
+      "ann_posture" -> Runner.record("nlist_base" -> ann.nlistBase,
+        "nlist_10x" -> ann.nlistSoak, "nprobe_base" -> ann.nprobeBase,
+        "nprobe_tied_10x" -> ann.nprobeTied, "nprobe_calibrated_10x" -> ann.nprobeCal,
+        "recall_curve" -> Runner.record(ann.curve.map { case (np, r) =>
+          np.toString -> Runner.round(r, 4) }: _*),
+        "t_base" -> ann.tBase, "t_fixed_batch" -> ann.tFixedBatch,
+        "t_grown_batch" -> ann.tGrownBatch,
+        "per_query_ratio" -> Runner.round(ann.perQueryRatio, 3),
+        "bound" -> Runner.round(ann.bound, 3),
+        "recall_calibrated_10x" -> Runner.round(ann.recallCal, 4),
+        "n_exact" -> ann.nExact, "flagged" -> ann.flagged),
+      "stream" -> Runner.record("t_base" -> base.seconds,
+        "t_default" -> default.seconds, "t_rocksdb" -> rocks.seconds,
+        "state_rows_base" -> base.stateRows, "state_rows_10x" -> default.stateRows,
+        "state_bytes_10x" -> default.stateBytes,
+        "outputs_identical" -> true))
+    Runner.write(Paths.get("SOAK_10X.json"), json)
+    println(Runner.line(json))
     println(s"[soak] wrote SCALING_SOAK.md + SOAK_10X.json; flagged: ${flagged.map(_.name)}")
     spark.stop()
   }
 
   private def renderReport(
-      srcEnv: String, replicas: Int, nDocs: Long, nVecs: Long, nEvts: Long,
+      srcEnv: String, nDocs: Long, nVecs: Long, nEvts: Long,
       tSynth: Double, tTrain: Double, canary0: Double, canary1: Double,
       results: Seq[ChainResult],
       recalls: Seq[(String, Double, Long, Boolean)],
       posture: AnnPosture,
-      tStreamBase: Double, tStreamDef: Double, tStreamRocks: Double,
-      stateRowsBase: Long, stateRows10x: Long, stateBytes10x: Long,
-      stateRowsRocks: Long, funnelRows: Long): String = {
+      base: Drain, default: Drain, rocks: Drain, funnelRows: Long): String = {
     val sb = new StringBuilder
-    sb ++= s"# SCALING_SOAK — measured ${replicas}× decade past sf0.1 (round 15)\n\n"
+    sb ++= s"# SCALING_SOAK — measured ${Replicas}× decade past sf0.1 (round 15)\n\n"
     sb ++= s"Generated by `graft.Soak` on ${java.time.LocalDate.now}. "
     sb ++= s"Corpus synthesized in-engine from `$srcEnv` (see Soak.scala's\n"
     sb ++= "recipe scaladoc: alphabet-rotation replicas — isomorphic duplicate\n"
@@ -460,7 +434,7 @@ object Soak {
     sb ++= f"Canary ${canary0}%.3f s start / ${canary1}%.3f s end. Timings are\n"
     sb ++= "min-of-2 interleaved A/B passes in ONE JVM — weather cancels out\n"
     sb ++= "of the ratio.\n\n"
-    sb ++= s"**Bound: ratio ≤ $GrowthBound (1.5 × the ${replicas}× data growth"
+    sb ++= s"**Bound: ratio ≤ $GrowthBound (1.5 × the ${Replicas}× data growth"
     sb ++= s" — SCALING.md's family rule). Flagged: ${results.count(_.flagged)}.**\n\n"
     sb ++= "| chain | t(sf0.1) s | t(10×) s | ratio | rows sf0.1 → 10× | verdict |\n"
     sb ++= "|---|---|---|---|---|---|\n"
@@ -526,10 +500,10 @@ object Soak {
     sb ++= s"row-for-row, $funnelRows hits); RocksDB engagement asserted via\n"
     sb ++= "its progress metrics.\n\n"
     sb ++= "| run | seconds | peak state rows |\n|---|---|---|\n"
-    sb ++= f"| sf0.1, default provider | $tStreamBase%.2f | $stateRowsBase |\n"
-    sb ++= f"| 10×, default provider | $tStreamDef%.2f | $stateRows10x |\n"
-    sb ++= f"| 10×, RocksDB provider | $tStreamRocks%.2f | $stateRowsRocks |\n"
-    sb ++= f"\nPeak state memory at 10× (default provider): $stateBytes10x bytes.\n"
+    sb ++= f"| sf0.1, default provider | ${base.seconds}%.2f | ${base.stateRows} |\n"
+    sb ++= f"| 10×, default provider | ${default.seconds}%.2f | ${default.stateRows} |\n"
+    sb ++= f"| 10×, RocksDB provider | ${rocks.seconds}%.2f | ${rocks.stateRows} |\n"
+    sb ++= f"\nPeak state memory at 10× (default provider): ${default.stateBytes} bytes.\n"
     sb ++= "\n## Streaming trigger audit (round-15 ask #5)\n\n"
     sb ++= "The seven STATELESS sink rows (s1–s4, s13, s16, s17) now stage 2\n"
     sb ++= "micro-batches — the semantic minimum: ≥2 triggers prove\n"

@@ -1,5 +1,5 @@
 package graft
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -18,21 +18,8 @@ object Verify {
     val spark = Sessions.local("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Runner.write(Paths.get(outDir, "oracle_sql.json"),
+      Runner.record(SparkEntry.oracleSql.toSeq: _*))
 
     val data = Scratch.stage(sfDir)
     // result parquet goes to tmpfs, then one plain file copy into outDir —
@@ -49,24 +36,17 @@ object Verify {
         org.apache.commons.io.FileUtils.deleteQuietly(dst)
         org.apache.commons.io.FileUtils.copyDirectory(tmp, dst)
     }
-    // optional comma-separated query-name filter for focused re-runs
-    // (the driver never sets it, so its runs always cover everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        emit(name, path => fn(spark, data).coalesce(1).write
-          .mode("overwrite").parquet(path))
-        System.err.println(
-          f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    // between queries only the cache is dropped: nothing here is timed
+    // against anything, so Bench's GC settle would only slow the run
+    Runner.selected.foreach { case (name, fn) =>
+      val p = Runner.pass(spark, _.catalog.clearCache())(emit(name,
+        path => fn(spark, data).coalesce(1).write.mode("overwrite").parquet(path)))
+      p.result match {
+        case Right(_) =>
+          System.err.println(f"[verify] $name ok in ${p.seconds}%.1fs")
+        case Left(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators may persist intermediates; drop them between queries
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -2,6 +2,11 @@ package graft.lake
 
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.core.util.MinimalPrettyPrinter
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -44,19 +49,13 @@ object ObjectStore {
     finally in.close()
   }
 
-  private def toJson(fields: Map[String, String]): String =
-    fields
-      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }
-      .mkString("{", ", ", "}")
+  /** `{"k": "v", "k2": "v2"}`: Jackson's escaping, a space after each
+    * colon and comma. */
+  private val spaced = new ObjectMapper().writer(new MinimalPrettyPrinter() {
+    override def writeObjectFieldValueSeparator(g: JsonGenerator): Unit = g.writeRaw(": ")
+    override def writeObjectEntrySeparator(g: JsonGenerator): Unit = g.writeRaw(", ")
+  })
 
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case '\n'         => "\\n"
-      case '\r'         => "\\r"
-      case '\t'         => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    } + "\""
+  private def toJson(fields: Map[String, String]): String =
+    spaced.writeValueAsString(fields.asJava)
 }

@@ -1,13 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.matchers.should.Matchers
 
 /** The bench's budget governor is artifact policy, not measurement — but a
   * wrong decision silently degrades every recorded number (round 8: a
   * fixed 50%-spent cliff turned a full surface into single cold passes on
   * a throttled host). These pin the pace math as pure functions.
   */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends AnyFunSuite with Matchers {
 
   // passesFor(est, elapsed, budget, remainingQueries)
 
@@ -91,5 +92,28 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.flagRule(-1.0, 0.0, 1.0, 1.0)) // failed query sentinel
     assert(!Bench.flagRule(2.4, 0.0, 0.0, 1.0))  // no baseline entry
     assert(Bench.flagRule(2.4, -1.0, 1.0, 1.0))  // spread sentinel -> 0
+  }
+
+  // Baseline.binds(sfDir, cpus) — the record binds only a run like itself
+
+  private lazy val record = Bench.baselineRecord()
+
+  test("baseline: a 32-core sf0.1 run binds the committed record") {
+    record.cpus shouldBe Some(32)
+    assert(record.binds("testdata/sf0.1", 32))
+  }
+
+  test("baseline: an 8-core run or an sf0.01 run does not bind") {
+    assert(!record.binds("testdata/sf0.1", 8))
+    assert(!record.binds("testdata/sf0.01", 32))
+  }
+
+  test("baseline: a record without cpus binds no run") {
+    val f = java.nio.file.Files.createTempFile("baseline", ".json")
+    java.nio.file.Files.writeString(f, """{"same_surface_record": {"sf": 0.1,
+      |"queries_s": {"q01_agg": 0.2}, "canary_s": [0.3]}}""".stripMargin)
+    val noCpus = Bench.baselineRecord(f.toString)
+    noCpus shouldBe Bench.Baseline(Map("q01_agg" -> 0.2), 0.3, "sf0.1", None)
+    assert(!noCpus.binds("testdata/sf0.1", 32))
   }
 }

@@ -8,18 +8,31 @@ import scala.jdk.CollectionConverters._
 /** Drift gate for the one-way-to-do-it helpers: each pattern below may
   * appear in `src/main/scala` only in the one file that owns it — the
   * session factory ([[Sessions.local]]), the stream drain
-  * ([[streaming.EventStream.runAvailableNow]]), and the ordered-replay
+  * ([[streaming.EventStream.runAvailableNow]]), the ordered-replay
   * file source and run dir ([[SparkEntry.orderedFileStream]],
-  * [[SparkEntry.streamRunDir]]). Also: the suite's shared session carries
-  * the local runner posture.
+  * [[SparkEntry.streamRunDir]]), the runners' atomic record writer
+  * ([[Runner.write]]) and each runner option's one read. Also: the
+  * suite's shared session carries the local runner posture.
   */
 class LocalSessionSpec extends SparkSpec {
+
+  /** The runner options: each name is read, as a string literal, in its
+    * owner only.
+    */
+  private val options = Seq(
+    "SPARK_GRAFT_SF_DIR" -> "Runner.scala",
+    "SPARK_GRAFT_ONLY" -> "Runner.scala",
+    "SPARK_GRAFT_BENCH_OUT" -> "Runner.scala",
+    "SPARK_GRAFT_LOCAL_DIR" -> "Scratch.scala",
+    "SPARK_GRAFT_CPUS" -> "Sessions.scala")
 
   private val owners = Seq(
     "SparkSession.builder()" -> "Sessions.scala",
     "Trigger.AvailableNow()" -> "EventStream.scala",
     "\"maxFilesPerTrigger\"" -> "SparkEntry.scala",
-    "streamRuns.incrementAndGet" -> "SparkEntry.scala")
+    "streamRuns.incrementAndGet" -> "SparkEntry.scala",
+    "ATOMIC_MOVE" -> "Runner.scala") ++
+    options.map { case (name, owner) => s"\"$name\"" -> owner }
 
   private lazy val sources: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
@@ -40,6 +53,13 @@ class LocalSessionSpec extends SparkSpec {
       }
       assert(offenders.isEmpty, s"$pattern belongs in $owner, not in $offenders")
     }
+
+  test("src/main reads only the listed options, each at one site") {
+    val read = sources.flatMap { case (_, text) =>
+      "\"(SPARK_GRAFT_[A-Z0-9_]+)\"".r.findAllMatchIn(text).map(_.group(1))
+    }
+    read.sorted shouldBe options.map(_._1).sorted
+  }
 
   test("the shared test session has the local runner posture") {
     val sc = spark.sparkContext

@@ -14,12 +14,15 @@ import graft.{Sessions, SparkEntry, SparkSpec}
   *
   *  - s5's watermarked windowed aggregation (built-in window state),
   *  - s6's sessionization and s9's funnel (flatMapGroupsWithState with
-  *    event-time timeouts).
+  *    event-time timeouts),
+  *  - s14's `dropDuplicatesWithinWatermark` (dedup state keyed on the
+  *    content fingerprint).
   *
   * The restart reads back the offset log, commit log, state-store files
   * and file-sink log, so it covers every file the checkpoint manager
   * writes. Each shape keeps a window, session or chain open across the
-  * restart, which proves its state was restored, not rebuilt.
+  * restart (the dedup shape, a fingerprint seen before it), which proves its
+  * state was restored, not rebuilt.
   */
 class RestartEquivalenceSpec extends SparkSpec {
   import RestartEquivalenceSpec.Shape
@@ -64,7 +67,17 @@ class RestartEquivalenceSpec extends SparkSpec {
         df => EventStream.funnelStream(
           df.as[(Long, Timestamp, String)], Seq("signup", "click", "purchase"),
           windowMs = 30L * 60 * 1000, lateness = "5 minutes").toDF(),
-        "[1,2024-03-01 10:00:00.0,2024-03-01 10:10:00.0,600000]", 2))
+        "[1,2024-03-01 10:00:00.0,2024-03-01 10:10:00.0,600000]", 2),
+      // s14's dedup: doc 1's text comes back in b1 and b2 and doc 2's in
+      // b2, so only restored state keeps the copies out
+      Shape("dedup within watermark",
+        Seq(Seq((1L, "alpha beta", ts(0)), (2L, "gamma", ts(1))),
+          Seq((3L, "alpha beta", ts(5)), (4L, "delta", ts(6))),
+          Seq((5L, "gamma", ts(8)), (6L, "alpha beta", ts(9)),
+            (7L, "epsilon", ts(10))))
+          .map(_.toDF("doc_id", "text", "ts")),
+        EventStream.dedupStream(_, "text", "ts", lateness = "1 hour"),
+        "[1,alpha beta,2024-03-01 10:00:00.0]", 4))
   }
 
   /** Copy staged files into `in` with their staged mtimes: back-to-back
@@ -99,7 +112,7 @@ class RestartEquivalenceSpec extends SparkSpec {
   }
 
   for {
-    shape <- Seq("windowed agg", "sessionize", "funnel")
+    shape <- Seq("windowed agg", "sessionize", "funnel", "dedup within watermark")
     (provider, rocksDb) <- Seq("HDFS" -> false, "RocksDB" -> true)
   } test(s"$shape ($provider state store): stop after batch 1 and " +
       "restart on the same checkpoint equals the one-shot run") {
