@@ -40,7 +40,8 @@ import org.apache.spark.sql.SparkSession
   * [[Runner.write]] (atomic: a reader never observes a half-written
   * record, and a timeout still leaves the last complete state on disk).
   * The record carries the run's `sf` directory and `cpus`, the two things
-  * [[Baseline.binds]] matches.
+  * [[Baseline.binds]] matches; when the baseline does not bind,
+  * `vs_baseline` holds only `unbound`, the reason ([[Baseline.unbound]]).
   */
 object Bench {
   /** Pace-governed pass count for the next query. `est` is the observed
@@ -148,23 +149,38 @@ object Bench {
       med - w * base > math.max(relSpread, 0.0) * med
 
   /** `BASELINE.json.same_surface_record`: per-query seconds, canary
-    * median, scale factor (`sf0.1`) and core count; an absent file or field
-    * reads as empty or unset, never an error (a bench must run anywhere).
-    * It binds only a run like itself, at its scale factor AND core count:
-    * an 8-core run compared with the 32-core record flagged x2 and x2pr
-    * (`BENCH_r16_c8.json`). A record without `cpus` binds nothing.
+    * median, scale factor (`sf0.1`) and core count, read from `file` (an
+    * absolute path); an absent file or field reads as empty or unset,
+    * never an error (a bench must run anywhere). It binds only a run like
+    * itself, at its scale factor AND core count: an 8-core run compared
+    * with the 32-core record flagged x2 and x2pr (`BENCH_r16_c8.json`). A
+    * record without `cpus` binds nothing.
     */
   private[graft] final case class Baseline(queries: Map[String, Double],
-      canary: Double, sf: String, cpus: Option[Int]) {
+      canary: Double, sf: String, cpus: Option[Int], file: String) {
+    /** Why this record does not bind a run over `sfDir` on `runCpus`
+      * cores (the record's `vs_baseline.unbound`), or None when it binds. */
+    def unbound(sfDir: String, runCpus: Int): Option[String] =
+      if (!new java.io.File(file).isFile) Some(s"baseline not found: $file")
+      else if (queries.isEmpty || sf.isEmpty)
+        Some(s"no same_surface_record in $file")
+      else if (Runner.sfLabel(sfDir) != sf)
+        Some(s"sf differs: record $sf, run ${Runner.sfLabel(sfDir)}")
+      else cpus match {
+        case None => Some("record has no cpus")
+        case Some(c) if c != runCpus => Some(s"cpus differ: record $c, run $runCpus")
+        case _ => None
+      }
+
     def binds(sfDir: String, runCpus: Int): Boolean =
-      queries.nonEmpty && sf.nonEmpty && sfDir.contains(sf) &&
-        cpus.contains(runCpus)
+      unbound(sfDir, runCpus).isEmpty
   }
 
-  private[graft] def baselineRecord(path: String = "BASELINE.json"): Baseline =
+  private[graft] def baselineRecord(path: String = "BASELINE.json"): Baseline = {
+    val file = new java.io.File(path).getAbsolutePath
     try {
       val rec = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new java.io.File(path)).path("same_surface_record")
+        .readTree(new java.io.File(file)).path("same_surface_record")
       val qs = rec.path("queries_s").properties().asScala.collect {
         case e if e.getValue.isNumber && e.getValue.asDouble > 0 =>
           e.getKey -> e.getValue.asDouble
@@ -176,8 +192,9 @@ object Bench {
         if (canaries.isEmpty) -1.0 else canaries(canaries.size / 2)
       val sf = rec.path("sf")
       Baseline(qs, cMed, if (sf.isNumber) "sf" + sf.asDouble else "",
-        Some(rec.path("cpus")).filter(_.isInt).map(_.asInt))
-    } catch { case _: Exception => Baseline(Map.empty, -1.0, "", None) }
+        Some(rec.path("cpus")).filter(_.isInt).map(_.asInt), file)
+    } catch { case _: Exception => Baseline(Map.empty, -1.0, "", None, file) }
+  }
 
   // seconds: the run's wall-clock budget; the most the opening canary may
   // read before anything is timed, and how long the gate waits for that
@@ -282,7 +299,8 @@ object Bench {
     // weather-adjusted by canary medians (this run's vs the baseline's).
     val baseline = baselineRecord()
     val baseQ = baseline.queries
-    val binds = baseline.binds(sfDir, cpus)
+    val unbound = baseline.unbound(sfDir, cpus)
+    val binds = unbound.isEmpty
     def weatherFactor(): Double = {
       val cs = canary.filter(_ > 0).sorted
       if (cs.isEmpty || baseline.canary <= 0) 1.0
@@ -306,7 +324,7 @@ object Bench {
     def flaggedVsBaseline() =
       vsRecord((r, base, w) => flagRule(r.median, r.spread, base, w))
     def vsBaseline(): ObjectNode =
-      if (!binds) Runner.record()
+      if (!binds) Runner.record("unbound" -> unbound.get)
       else {
         val adjusted = vsRecord((_, _, _) => true).map(_._3)
         Runner.record("n_compared" -> adjusted.size,

@@ -166,9 +166,8 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
     // contract (see streamRunDir): each states its fixture, its session,
     // its operator and sink, and its read-back.
     "s1_stream_dedup_gate" -> ((s, dir) => {
-      // first ORACLE-BACKED foreachBatch surface (every other
-      // streaming/EventStream sink is spec-pinned batch-equality only):
-      // the x9 daily-crawl shape run THROUGH the streaming dedup gate.
+      // first ORACLE-BACKED landing-sink surface: the x9 daily-crawl
+      // shape run THROUGH the streaming dedup gate.
       // 80% of documents (doc_id % 10 < 8) is the prebuilt minhash index;
       // the 20% crawl replays as 2 micro-batches against the static index
       // (a 3rd trigger adds only fixed micro-batch cost; round-15 trigger
@@ -184,28 +183,37 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
       // live plan: built once per corpus snapshot (memoized + prewarmed,
       // so repeated bench passes measure the GATE, not the per-snapshot
       // training), read by every micro-batch — a live plan would re-run
-      // the minhash scan per foreachBatch invocation. Round-15: the
-      // artifact is the COLLAPSED unique-set form (s13IndexPath — s13's
-      // snapshot contract), so the gate stops re-aggregating the whole
-      // corpus index inside every trigger (that collapse was most of
-      // this row's cost; the raw-index path stays spec-covered via the
-      // sink's default indexPreCollapsed = false)
+      // the minhash scan per micro-batch. Round-15: the artifact is the
+      // COLLAPSED unique-set form (s13IndexPath — s13's snapshot
+      // contract), so the gate stops re-aggregating the whole corpus
+      // index inside every trigger (that collapse was most of this
+      // row's cost; the raw-index path stays spec-covered through the
+      // operator's default indexPreCollapsed = false)
       val index = s.read.parquet(s13IndexPath(s, dir))
       val crawl = docs.filter(pmod(col("doc_id"), lit(10)) >= 8)
         .select("doc_id", "text", "lang", "source")
       val in = stagedStreamInput(s, dir, "s1")(stageTwoBatches(_, crawl))
-      EventStream.runAvailableNow(EventStream.dedupGateSink(
-        orderedFileStream(s, crawl.schema, in), index, "doc_id", "text",
-        threshold = 0.8, outPath = s"$base/out", checkpoint = s"$base/ckpt",
-        numHashes = 128, bands = 32, indexPreCollapsed = true))
+      // the gate drops every crawl row that has a pair in the index; the
+      // scoped operator releases its caches after the batch lands
+      EventStream.runAvailableNow(EventStream.landingSink(
+        orderedFileStream(s, crawl.schema, in), s"$base/out",
+        s"$base/ckpt") { (batch, land) =>
+        Dedup.withNearDuplicatesAgainstIndex(index, batch, "doc_id", "text",
+          threshold = 0.8, numHashes = 128, bands = 32,
+          indexPreCollapsed = true) { pairs =>
+          land(batch.join(pairs.select(col("new_id").as("doc_id")),
+            Seq("doc_id"), "left_anti"))
+        }
+      })
       s.read.parquet(s"$base/out")
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
     }),
 
     "s2_stream_lm_gate" -> ((s, dir) => {
-      // second oracle-backed foreachBatch surface: the CCNet-style
-      // perplexity gate (EventStream.lmGateSink) on s1's crawl split.
+      // second oracle-backed landing-sink surface: the CCNet-style
+      // perplexity gate (LanguageModel.filterByPerplexity) on s1's crawl
+      // split.
       // The char-trigram LM trains on the 80% trusted split
       // and reaches the gate THROUGH a parquet model artifact
       // (LanguageModel.save/load — train offline per snapshot, gate the
@@ -225,17 +233,22 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
       val crawl = docs.filter(pmod(col("doc_id"), lit(10)) >= 8)
         .select("doc_id", "text", "lang", "source")
       val in = stagedStreamInput(s, dir, "s2")(stageTwoBatches(_, crawl))
-      EventStream.runAvailableNow(EventStream.lmGateSink(
-        orderedFileStream(s, crawl.schema, in), model, "doc_id", "text",
-        maxPpl = 2.2, outPath = s"$base/out", checkpoint = s"$base/ckpt"))
+      // the O(vocab) model broadcasts into map-side joins, so the gate
+      // keeps no state and survivors keep their full payload
+      EventStream.runAvailableNow(EventStream.landingSink(
+        orderedFileStream(s, crawl.schema, in), s"$base/out",
+        s"$base/ckpt") { (batch, land) =>
+        land(LanguageModel.filterByPerplexity(
+          batch, Seq("doc_id"), col("text"), model, maxPpl = 2.2))
+      })
       s.read.parquet(s"$base/out")
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
     }),
 
     "s3_stream_mixture_gate" -> ((s, dir) => {
-      // third oracle-backed foreachBatch surface: the DoReMi mixture
-      // gate (EventStream.mixtureGateSink). The domain weights FIT
+      // third oracle-backed landing-sink surface: the DoReMi mixture
+      // gate (Doremi.resample). The domain weights FIT
       // OFFLINE on the 80% trusted split (the q98 recipe at salt s3fit)
       // and reach the gate through a parquet artifact; each of the 2
       // crawl micro-batches keeps a document with its domain's resample
@@ -259,9 +272,14 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
       val crawl = docs.filter(pmod(col("doc_id"), lit(10)) >= 8)
         .select("doc_id", "text", "lang", "source")
       val in = stagedStreamInput(s, dir, "s3")(stageTwoBatches(_, crawl))
-      EventStream.runAvailableNow(EventStream.mixtureGateSink(
-        orderedFileStream(s, crawl.schema, in), weights, "doc_id", "lang",
-        outPath = s"$base/out", checkpoint = s"$base/ckpt", salt = "s3"))
+      // downsample-only: the online gate lands exactly the mixture the
+      // offline fit prescribed
+      EventStream.runAvailableNow(EventStream.landingSink(
+        orderedFileStream(s, crawl.schema, in), s"$base/out",
+        s"$base/ckpt") { (batch, land) =>
+        land(graft.ext.Doremi.resample(batch, "doc_id", "lang", weights,
+          salt = "s3"))
+      })
       s.read.parquet(s"$base/out")
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
@@ -389,10 +407,10 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
     }),
 
     "s4_stream_decontam_gate" -> ((s, dir) => {
-      // fourth oracle-backed foreachBatch surface — with this one every
-      // GATE sink in streaming/EventStream (dedup s1, perplexity s2,
-      // mixture s3, semantic decontamination s4) carries a full value
-      // oracle. The x16 shape run through the stream: the corpus
+      // fourth oracle-backed landing-sink surface — with this one every
+      // crawl GATE (dedup s1, perplexity s2, mixture s3, semantic
+      // decontamination s4) carries a full value oracle. The x16 shape
+      // run through the stream: the corpus
       // (vec_id % 10 < 9) replays as 2 micro-batches, each dropping
       // every vector within cosine 0.45 of ANY eval vector (% 10 == 9)
       // under the corpus-trained k=8 quantizer (x16Model — production
@@ -406,10 +424,13 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
       val corpus = emb.filter(pmod(col("vec_id"), lit(10)) < 9)
       val base = streamRunDir("s4")
       val in = stagedStreamInput(s, dir, "s4")(stageTwoBatches(_, corpus))
-      EventStream.runAvailableNow(EventStream.decontamGateSink(
-        orderedFileStream(s, corpus.schema, in), evalSet, "vec_id",
-        "embedding", minCosine = 0.45, centroids = x16Model(s, dir).centroids,
-        outPath = s"$base/out", checkpoint = s"$base/ckpt", nprobe = 4))
+      val centroids = x16Model(s, dir).centroids
+      EventStream.runAvailableNow(EventStream.landingSink(
+        orderedFileStream(s, corpus.schema, in), s"$base/out",
+        s"$base/ckpt") { (batch, land) =>
+        land(Curation.semanticDecontaminate(batch, evalSet, "vec_id",
+          "embedding", minCosine = 0.45, centroids, nprobe = 4))
+      })
       s.read.parquet(s"$base/out")
         .select("vec_id")
         .orderBy("vec_id")
@@ -638,7 +659,8 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
 
     "s13_stream_neardup_index" -> ((s, dir) => {
       // x9's incremental near-dup shape streamed
-      // (EventStream.nearDupPairsSink): the 80% corpus index is
+      // (Dedup.withNearDuplicatesAgainstIndex through
+      // EventStream.landingSink): the 80% corpus index is
       // prebuilt once and materialized to parquet (snapshot cadence —
       // the static side re-plans per trigger, so an unmaterialized
       // index would re-run the 128-hash build every batch), the 20%
@@ -662,12 +684,16 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
       val in = stagedStreamInput(s, dir, "s13")(stageTwoBatches(_, newDocs))
       // no isolated 4-partition session: stateless and data-heavy
       // (~950k true pairs at sf0.1) — wants full shuffle parallelism
-      EventStream.runAvailableNow(EventStream.nearDupPairsSink(
-        orderedFileStream(s, newDocs.schema, in), idx, "doc_id", "text",
-        threshold = 0.8, outPath = s"$base/out", checkpoint = s"$base/ckpt",
-        numHashes = 128, bands = 32))
+      // each batch lands its distinct pairs inside the operator's loan
+      EventStream.runAvailableNow(EventStream.landingSink(
+        orderedFileStream(s, newDocs.schema, in), s"$base/out",
+        s"$base/ckpt") { (batch, land) =>
+        Dedup.withNearDuplicatesAgainstIndex(idx, batch, "doc_id", "text",
+          threshold = 0.8, numHashes = 128, bands = 32,
+          indexPreCollapsed = true)(land)
+      })
       s.read.parquet(s"$base/out")
-        .drop("batch") // landBatch's per-trigger partition column
+        .drop("batch") // the landing sink's per-trigger partition column
         .orderBy("corpus_id", "new_id")
     }),
 
@@ -746,8 +772,9 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
     }),
 
     "s16_stream_dsir_score" -> ((s, dir) => {
-      // the DSIR scoring sink joins the oracle surface
-      // (EventStream.dsirScoreSink): the log-ratio model is fit ONCE
+      // DSIR scoring joins the streaming oracle surface
+      // (Dsir.scoreWithModel through EventStream.landingSink): the
+      // log-ratio model is fit ONCE
       // batch-side on the q95 split (target = doc_id%17==0), persisted
       // to parquet (the artifact cadence: fit per snapshot, gate the
       // crawl continuously), and each of the 2 raw micro-batches
@@ -772,10 +799,13 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
       val lam = s.read.parquet(modelPath)
       val in = stagedStreamInput(s, dir, "s16")(stageTwoBatches(_, raw))
       val ss = isolatedStreamSession(s, shufflePartitions = 4)
-      EventStream.runAvailableNow(EventStream.dsirScoreSink(
-        orderedFileStream(ss, raw.schema, in), lam, "doc_id", "text",
-        buckets = 8192, salt = "dsir",
-        outPath = s"$base/out", checkpoint = s"$base/ckpt"))
+      // top-k is a corpus-level decision, so the stream lands SCORES
+      EventStream.runAvailableNow(EventStream.landingSink(
+        orderedFileStream(ss, raw.schema, in), s"$base/out",
+        s"$base/ckpt") { (batch, land) =>
+        land(graft.ext.Dsir.scoreWithModel(batch, lam, "doc_id", "text",
+          buckets = 8192, salt = "dsir"))
+      })
       val w = Window.orderBy(col("score").desc, col("doc_id"))
       s.read.parquet(s"$base/out")
         .withColumn("rank", row_number().over(w))
@@ -784,8 +814,9 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
     }),
 
     "s17_stream_ann_serve" -> ((s, dir) => {
-      // the ANN serving sink joins the oracle surface
-      // (EventStream.annServeSink): y6's snapshot index — coarse cells,
+      // ANN serving joins the streaming oracle surface
+      // (Similarity.searchIvfPqIndex through EventStream.landingSink):
+      // y6's snapshot index — coarse cells,
       // PQ codes, norms, built once from the deterministic
       // snapshot-trained models — serves 2 micro-batches of new query
       // vectors with no retraining and no re-encoding. Per-batch top-k
@@ -803,13 +834,15 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
       val base = streamRunDir("s17")
       val in = stagedStreamInput(s, dir, "s17")(stageTwoBatches(_, batch))
       val ss = isolatedStreamSession(s, shufflePartitions = 4)
-      EventStream.runAvailableNow(EventStream.annServeSink(
-        orderedFileStream(ss, batch.schema, in), index, snapshot,
-        "vec_id", "embedding", k = 5, coarse = coarse, pq = pq,
-        nprobe = 12, rescoreFactor = 16,
-        outPath = s"$base/out", checkpoint = s"$base/ckpt"))
+      EventStream.runAvailableNow(EventStream.landingSink(
+        orderedFileStream(ss, batch.schema, in), s"$base/out",
+        s"$base/ckpt") { (queries, land) =>
+        land(Similarity.searchIvfPqIndex(queries, index, snapshot,
+          "vec_id", "embedding", k = 5, coarse = coarse, pq = pq,
+          nprobe = 12, rescoreFactor = 16))
+      })
       s.read.parquet(s"$base/out")
-        .drop("batch") // landBatch's per-trigger partition column
+        .drop("batch") // the landing sink's per-trigger partition column
         .orderBy("query_id", "rank")
     }),
 

@@ -20,6 +20,12 @@ object Runner {
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+  /** The scale-factor label of a tables dir: its last `sf<number>`
+    * (`/data/sf0.01` → `sf0.01`), else the whole path. */
+  def sfLabel(sfDir: String): String =
+    "sf[0-9]+(?:\\.[0-9]+)?".r.findAllIn(sfDir).toSeq.lastOption
+      .getOrElse(sfDir)
+
   /** The declared queries the comma-separated `SPARK_GRAFT_ONLY` names, or
     * all of them when it is unset; Bench and Verify run these. */
   def selected: Map[String, (SparkSession, String) => DataFrame] = {

@@ -286,7 +286,7 @@ object Soak {
 
   /** A funnel drain: its seconds, output dir, peak state rows and bytes,
     * and how many RocksDB metrics its progress carried. */
-  private final case class Drain(seconds: Double, out: String,
+  private[graft] final case class Drain(seconds: Double, out: String,
       stateRows: Long, stateBytes: Long, rocksMetrics: Int)
 
   // ---------------------------------------------------------------- main
@@ -413,15 +413,18 @@ object Soak {
     spark.stop()
   }
 
-  private def renderReport(
+  /** SCALING_SOAK.md's text; the base scale is labelled from `srcEnv`
+    * ([[Runner.sfLabel]]), the tables dir the soak synthesized from. */
+  private[graft] def renderReport(
       srcEnv: String, nDocs: Long, nVecs: Long, nEvts: Long,
       tSynth: Double, tTrain: Double, canary0: Double, canary1: Double,
       results: Seq[ChainResult],
       recalls: Seq[(String, Double, Long, Boolean)],
       posture: AnnPosture,
       base: Drain, default: Drain, rocks: Drain, funnelRows: Long): String = {
+    val sf = Runner.sfLabel(srcEnv)
     val sb = new StringBuilder
-    sb ++= s"# SCALING_SOAK — measured ${Replicas}× decade past sf0.1 (round 15)\n\n"
+    sb ++= s"# SCALING_SOAK — measured ${Replicas}× decade past $sf (round 15)\n\n"
     sb ++= s"Generated by `graft.Soak` on ${java.time.LocalDate.now}. "
     sb ++= s"Corpus synthesized in-engine from `$srcEnv` (see Soak.scala's\n"
     sb ++= "recipe scaladoc: alphabet-rotation replicas — isomorphic duplicate\n"
@@ -436,7 +439,7 @@ object Soak {
     sb ++= "of the ratio.\n\n"
     sb ++= s"**Bound: ratio ≤ $GrowthBound (1.5 × the ${Replicas}× data growth"
     sb ++= s" — SCALING.md's family rule). Flagged: ${results.count(_.flagged)}.**\n\n"
-    sb ++= "| chain | t(sf0.1) s | t(10×) s | ratio | rows sf0.1 → 10× | verdict |\n"
+    sb ++= s"| chain | t($sf) s | t(10×) s | ratio | rows $sf → 10× | verdict |\n"
     sb ++= "|---|---|---|---|---|---|\n"
     results.foreach { r =>
       sb ++= f"| ${r.name} | ${r.tBase}%.2f | ${r.tSoak}%.2f | ${r.ratio}%.2f | "
@@ -473,8 +476,8 @@ object Soak {
     sb ++= s"${posture.nprobeTied}):\n\n"
     sb ++= "| posture | queries | nprobe/nlist | seconds | vs base |\n"
     sb ++= "|---|---|---|---|---|\n"
-    sb ++= f"| base serve (sf0.1 index) | sf0.1 batch | ${posture.nprobeBase}/${posture.nlistBase} | ${posture.tBase}%.2f | 1.00 |\n"
-    sb ++= f"| 10× index, calibrated nprobe, same batch | sf0.1 batch | ${posture.nprobeCal}/${posture.nlistSoak} | ${posture.tFixedBatch}%.2f | ${posture.perQueryRatio}%.2f |\n"
+    sb ++= f"| base serve ($sf index) | $sf batch | ${posture.nprobeBase}/${posture.nlistBase} | ${posture.tBase}%.2f | 1.00 |\n"
+    sb ++= f"| 10× index, calibrated nprobe, same batch | $sf batch | ${posture.nprobeCal}/${posture.nlistSoak} | ${posture.tFixedBatch}%.2f | ${posture.perQueryRatio}%.2f |\n"
     sb ++= f"| 10× index, calibrated nprobe, 10× batch | 10× batch | ${posture.nprobeCal}/${posture.nlistSoak} | ${posture.tGrownBatch}%.2f | ${posture.tGrownBatch / posture.tBase}%.2f |\n\n"
     sb ++= f"**Per-query growth across the decade: ${posture.perQueryRatio}%.2f× vs the\n"
     sb ++= f"IVF design curve's bound 1.5·√10 ≈ ${posture.bound}%.2f — "
@@ -500,7 +503,7 @@ object Soak {
     sb ++= s"row-for-row, $funnelRows hits); RocksDB engagement asserted via\n"
     sb ++= "its progress metrics.\n\n"
     sb ++= "| run | seconds | peak state rows |\n|---|---|---|\n"
-    sb ++= f"| sf0.1, default provider | ${base.seconds}%.2f | ${base.stateRows} |\n"
+    sb ++= f"| $sf, default provider | ${base.seconds}%.2f | ${base.stateRows} |\n"
     sb ++= f"| 10×, default provider | ${default.seconds}%.2f | ${default.stateRows} |\n"
     sb ++= f"| 10×, RocksDB provider | ${rocks.seconds}%.2f | ${rocks.stateRows} |\n"
     sb ++= f"\nPeak state memory at 10× (default provider): ${default.stateBytes} bytes.\n"

@@ -459,9 +459,9 @@ object SparkEntry extends EntryRelA with EntryRelB with EntryText with EntryDedu
 
   /** s13's snapshot artifact: the COLLAPSED form of the s1 index
     * ([[ext.Dedup.collapseIndex]] — unique shingle sets as groups),
-    * which is what [[graft.streaming.EventStream.nearDupPairsSink]]
-    * reads per trigger (the collapsed groups skip the per-batch
-    * re-aggregation the raw per-doc form would pay).
+    * which is what the s1 and s13 gates read per trigger (the collapsed
+    * groups skip the per-batch re-aggregation the raw per-doc form would
+    * pay).
     */
   private[graft] def s13IndexPath(s: SparkSession, dir: String): String =
     cachedModel(s"s13idx|$dir") {

@@ -439,11 +439,9 @@ object Dedup {
       threshold: Double,
       numHashes: Int = 64,
       bands: Int = 16,
-      preIndexedBatch: Option[DataFrame] = None,
       indexPreCollapsed: Boolean = false): DataFrame =
     nearDuplicatesAgainstIndexPlan(index, newDocs, idCol, textCol,
-      threshold, numHashes, bands, preIndexedBatch,
-      indexPreCollapsed)._1
+      threshold, numHashes, bands, indexPreCollapsed)._1
 
   /** Scoped form of [[nearDuplicatesAgainstIndex]] that OWNS the persist
     * lifecycle (same contract as [[withNearDuplicatesMinhash]]): hands the
@@ -452,16 +450,10 @@ object Dedup {
     * repeated incremental batches in a long-lived session never accumulate
     * cached frames. `f` must CONSUME the DataFrame before returning; an
     * escaped lazy plan would re-run the index scan + collapse per
-    * downstream action once the caches drop.
-    *
-    * `retainIndexCache = true` keeps the INDEX-side frame cached past
-    * the call — the streaming-sink posture: a serving gate hits the same
-    * snapshot index every trigger, and Spark's CacheManager dedupes
-    * identical plans, so the retained entry is ONE hot frame per index
-    * snapshot, not an accumulation (measured at sf0.1: re-materializing
-    * it per trigger cost more than the per-batch pair work itself). The
-    * batch-side frame is always released — its plan differs per batch
-    * and WOULD accumulate.
+    * downstream action once the caches drop. This is the streaming
+    * dedup gates' operator (s1, s13): through
+    * [[graft.streaming.EventStream.landingSink]] each micro-batch lands
+    * inside `f`, and a redelivered batch recomputes the same pairs.
     */
   def withNearDuplicatesAgainstIndex[T](
       index: DataFrame,
@@ -471,18 +463,12 @@ object Dedup {
       threshold: Double,
       numHashes: Int = 64,
       bands: Int = 16,
-      indexPreCollapsed: Boolean = false,
-      retainIndexCache: Boolean = false)(f: DataFrame => T): T = {
+      indexPreCollapsed: Boolean = false)(f: DataFrame => T): T = {
     val (pairs, caches) = nearDuplicatesAgainstIndexPlan(
-      index, newDocs, idCol, textCol, threshold, numHashes, bands, None,
+      index, newDocs, idCol, textCol, threshold, numHashes, bands,
       indexPreCollapsed)
     try f(pairs)
-    finally {
-      // named sides (not a positional Seq): a reorder in the plan helper
-      // can never silently retain the per-batch frame instead of the index
-      caches.gBatch.unpersist(blocking = false)
-      if (!retainIndexCache) caches.gIndex.unpersist(blocking = false)
-    }
+    finally caches.foreach(_.unpersist(blocking = false))
   }
 
   /** Collapse a [[minhashIndex]] frame into unique-shingle-set GROUPS:
@@ -509,14 +495,6 @@ object Dedup {
       first(col("bands")).as("bands"))
     .drop("set_key")
 
-  /** The two persisted collapsed-group frames of an against-index pair
-    * plan, by NAME — the index side (the corpus snapshot, one cache
-    * entry per snapshot plan under CacheManager dedup) and the batch
-    * side (a fresh plan per batch; must always be released).
-    */
-  private[graft] final case class AgainstIndexCaches(
-      gIndex: DataFrame, gBatch: DataFrame)
-
   private def nearDuplicatesAgainstIndexPlan(
       index: DataFrame,
       newDocs: DataFrame,
@@ -525,10 +503,8 @@ object Dedup {
       threshold: Double,
       numHashes: Int,
       bands: Int,
-      preIndexedBatch: Option[DataFrame],
-      indexPreCollapsed: Boolean): (DataFrame, AgainstIndexCaches) = {
-    val batch = preIndexedBatch.getOrElse(
-      minhashIndex(newDocs, idCol, textCol, numHashes, bands))
+      indexPreCollapsed: Boolean): (DataFrame, Seq[DataFrame]) = {
+    val batch = minhashIndex(newDocs, idCol, textCol, numHashes, bands)
 
     def persistG(g: DataFrame): DataFrame =
       g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -580,7 +556,7 @@ object Dedup {
       .select(explode(col("ma")).as("corpus_id"), col("mb"), col("jaccard"))
       .select(
         col("corpus_id"), explode(col("mb")).as("new_id"), col("jaccard"))
-    (pairs, AgainstIndexCaches(gIndex, gBatch))
+    (pairs, Seq(gIndex, gBatch))
   }
 
   // -------------------------------------------------------------- simhash

@@ -236,9 +236,10 @@ object Dsir {
   /** Per-document Gumbel-perturbed importance scores against a PRE-FIT
     * model: one tokenize scan (the fused kernel), the model broadcast,
     * one map-side-combined per-doc sum — stateless per input row set,
-    * which is what lets the streaming sink
-    * ([[graft.streaming.EventStream.dsirScoreSink]]) run it per
-    * micro-batch with no state store. Returns (idCol, score) on the
+    * which is what lets s16 run it per micro-batch through
+    * [[graft.streaming.EventStream.landingSink]] with no state store:
+    * fit once per snapshot offline, score the incoming crawl
+    * continuously. Returns (idCol, score) on the
     * 1e-4 grid; `buckets` and `salt` must match the fit.
     */
   def scoreWithModel(

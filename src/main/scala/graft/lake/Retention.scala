@@ -14,9 +14,8 @@ import graft.ops.PartitionOps._
   * so their unit of work — and of failure — is a partition, never the
   * table: expiry is directory deletes driven by a driver-side listing of
   * O(partitions) names (no data read at all), and compaction rewrites one
-  * partition's rows through a crash-recoverable `._next`/`._bak` swap
-  * (the [[graft.streaming.EventStream.cdcSink]] protocol), leaving every
-  * other partition readable throughout.
+  * partition's rows through [[TableSwap.replace]], leaving every other
+  * partition readable throughout.
   */
 object Retention {
 
@@ -49,35 +48,27 @@ object Retention {
     expired.map(_._2).toSeq
   }
 
-  /** Rewrite one partition directory into ~`recordsPerFile`-row files.
-    * Read → resize → write `._next` → swap; the swap is the only moment
-    * the partition changes, and a crash at any point leaves either the
-    * old or the new complete directory (recovery from `._bak` on the
-    * next run, same as the CDC sink). Returns (filesBefore, filesAfter).
+  /** Rewrite one partition directory into ~`recordsPerFile`-row files
+    * through [[TableSwap.replace]]: the swap is the only moment the
+    * partition changes, so a crash at any point leaves either the old or
+    * the new complete directory. Returns (filesBefore, filesAfter).
     */
   def compactPartition(
       spark: SparkSession,
       partitionPath: String,
       recordsPerFile: Long): (Int, Int) = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(partitionPath)
-    val next = new Path(partitionPath + "._next")
-    val bak = new Path(partitionPath + "._bak")
-    if (!fs.exists(cur) && fs.exists(bak))
-      require(fs.rename(bak, cur), s"compact: recovery rename $bak -> $cur failed")
-
-    def dataFiles(p: Path): Int =
-      fs.listStatus(p).count(s => s.isFile && !s.getPath.getName.startsWith("_"))
-
-    val before = dataFiles(cur)
-    spark.read.parquet(partitionPath)
-      .optimizePartition(recordsPerFile)
-      .write.mode("overwrite").parquet(next.toString)
-    fs.delete(bak, true)
-    require(fs.rename(cur, bak), s"compact: rename $cur -> $bak failed")
-    require(fs.rename(next, cur), s"compact: rename $next -> $cur failed")
-    fs.delete(bak, true)
-    (before, dataFiles(cur))
+    def dataFiles(): Int = fs.listStatus(new Path(partitionPath))
+      .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
+    val before = TableSwap.replace(spark, partitionPath, "compact") {
+      (_, next) =>
+        val n = dataFiles()
+        spark.read.parquet(partitionPath)
+          .optimizePartition(recordsPerFile)
+          .write.mode("overwrite").parquet(next.toString)
+        n
+    }
+    (before, dataFiles())
   }
 
   /** Compaction candidates: partitions of `tablePath` with more than

@@ -73,27 +73,6 @@ object EventStream {
     t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
 
 
-  /** Idempotent landing zone shared by every append-mode foreachBatch
-    * sink below: batch `batchId`'s rows land under
-    * `outPath/batch=<batchId>` in overwrite mode. foreachBatch is
-    * at-least-once — after a crash between the sink write and the
-    * checkpoint commit the SAME batch (same id, same rows — the
-    * replayed source offsets are in the checkpoint) is redelivered,
-    * and a plain `mode("append")` would double-land it. Keying the
-    * write by the stable batch id turns redelivery into an overwrite
-    * of the identical directory: at-least-once delivery ×
-    * per-batch-keyed overwrite = effectively-once output, with no
-    * applied-id marker protocol (that is [[summarySink]]'s job, where
-    * the fold is non-idempotent) and no cross-batch state. Readers
-    * `spark.read.parquet(outPath)` exactly as before; partition
-    * discovery surfaces the extra `batch` column — drop/ignore it, or
-    * filter on it for a per-trigger audit. The shared redelivery
-    * property over all sinks lives in `SinkRedeliverySpec`.
-    */
-  private[graft] def landBatch(
-      rows: DataFrame, outPath: String, batchId: Long): Unit =
-    rows.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-
   /** Landed-JSONL streaming source: the streaming twin of
     * [[graft.ingest.JsonlSource.read]] (schema must be declared — streaming
     * sources cannot infer).
@@ -174,10 +153,10 @@ object EventStream {
     * stream side cannot collapse its own identical sets (a stateless
     * plan has no groupBy), so every member of an exact-dup batch row
     * verifies against every colliding group × band — use
-    * [[nearDupPairsSink]] instead, which runs the FULL batch plan
-    * (both-side collapse, distinct group candidates, one verify per
-    * group pair) inside foreachBatch (measured 5× faster on the sf0.1
-    * near-clique).
+    * [[graft.ext.Dedup.withNearDuplicatesAgainstIndex]] through
+    * [[landingSink]] instead, which runs the FULL batch plan (both-side
+    * collapse, distinct group candidates, one verify per group pair) per
+    * micro-batch (measured 5× faster on the sf0.1 near-clique).
     */
   def nearDupAgainstIndexStream(
       docs: DataFrame,
@@ -607,18 +586,10 @@ object EventStream {
     * why the fold delegates to `Cdc.applyChanges`, whose latest-wins
     * semantics make re-applying an already-applied batch a no-op (the
     * CdcSpec idempotence property) — at-least-once delivery composes with
-    * an idempotent fold into effectively-once table state.
-    *
-    * The table swap is crash-recoverable: write `._next`, rename current
-    * → `._bak`, rename `._next` → current, drop `._bak` — every rename's
-    * return value is require()d, and each batch first recovers a missing
-    * current table from `._bak` (a crash can only land between the two
-    * renames, at which point `._bak` is the complete pre-batch snapshot;
-    * the batch whose fold was lost is REDELIVERED by the checkpoint and
-    * re-applied idempotently). On an object store you'd land each snapshot
-    * under a new prefix and flip a pointer instead; a transactional table
-    * format would make the swap atomic — out of sandbox scope, the fold
-    * logic is unchanged either way.
+    * an idempotent fold into effectively-once table state. Each fold
+    * replaces the table through [[graft.lake.TableSwap.replace]], whose
+    * crash recovery restores the pre-batch table; the batch whose fold was
+    * lost is then redelivered by the checkpoint and re-applied.
     */
   def cdcSink(
       changes: DataFrame,
@@ -642,358 +613,49 @@ object EventStream {
       batch: DataFrame, tablePath: String,
       keys: Seq[String], seqCol: String, opCol: String): Unit = {
     val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val cur = new org.apache.hadoop.fs.Path(tablePath)
-    val next = new org.apache.hadoop.fs.Path(tablePath + "._next")
-    val bak = new org.apache.hadoop.fs.Path(tablePath + "._bak")
-    // recover from a crash inside a previous swap: current is missing
-    // exactly when the crash hit between rename(cur→bak) and
-    // rename(next→cur), so bak holds the intact pre-batch table
-    if (!fs.exists(cur) && fs.exists(bak))
-      require(fs.rename(bak, cur), s"cdcSink: recovery rename $bak -> $cur failed")
-    val base =
-      if (fs.exists(cur)) spark.read.parquet(tablePath)
-      else batch.drop(seqCol, opCol).limit(0)
-    graft.pipeline.Cdc.applyChanges(base, batch, keys, seqCol, opCol)
-      .write.mode("overwrite").parquet(next.toString)
-    if (fs.exists(cur)) {
-      fs.delete(bak, true)
-      require(fs.rename(cur, bak), s"cdcSink: rename $cur -> $bak failed")
+    graft.lake.TableSwap.replace(spark, tablePath, "cdcSink") { (fs, next) =>
+      val base =
+        if (fs.exists(new org.apache.hadoop.fs.Path(tablePath)))
+          spark.read.parquet(tablePath)
+        else batch.drop(seqCol, opCol).limit(0)
+      graft.pipeline.Cdc.applyChanges(base, batch, keys, seqCol, opCol)
+        .write.mode("overwrite").parquet(next.toString)
     }
-    require(fs.rename(next, cur), s"cdcSink: rename $next -> $cur failed")
-    fs.delete(bak, true)
   }
 
-  /** Streaming ANN serving: each micro-batch of query vectors is searched
-    * against a STATIC, prebuilt IVF-PQ index —
-    * [[graft.ext.Similarity.searchIvfPqIndex]]'s serving split (y6)
-    * lifted to Structured Streaming, which is the actual deployment shape
-    * of an embedding index: the snapshot index is built once
-    * ([[graft.ext.Similarity.buildIvfPqIndex]], parquet in production)
-    * and new vectors arrive continuously.
+  /** The landing sink: each micro-batch goes through `gate`, which runs
+    * the batch's operator and hands its output to `land` — call it once,
+    * inside any loan the operator holds (a scoped operator such as
+    * [[graft.ext.Dedup.withNearDuplicatesAgainstIndex]] releases its
+    * caches only after the write). The gates this serves — dedup, near-dup
+    * pairs, perplexity, mixture, decontamination, DSIR scores, ANN serving
+    * (s1–s4, s13, s16, s17) — share one cadence: their model or index is
+    * fit offline once per snapshot and read back as an artifact, and each
+    * micro-batch is gated against it with no state store, because the
+    * verdict on a row depends only on that row and the fixed artifact.
     *
-    * Per-batch top-k needs no cross-batch state: a query id occurs within
-    * exactly one micro-batch, so ranking is complete where it happens —
-    * foreachBatch runs the identical batch search plan per trigger (one
-    * definition, two execution modes, same posture as the rest of this
-    * module). Cost per trigger: the batch ships probe rows against the
-    * by-cell index; corpus float vectors are touched only by the
-    * id-list-sized rescore.
-    *
-    * Delivery: results land per batch under `outPath/batch=<id>`
-    * ([[landBatch]]) — an at-least-once replay overwrites the same
-    * directory with byte-identical rows (scoring is deterministic:
-    * total order score desc, id asc), so the output is effectively
-    * exactly-once with no reader-side dedup.
+    * Delivery: batch `batchId`'s rows land under `outPath/batch=<batchId>`
+    * in overwrite mode. foreachBatch is at-least-once — after a crash
+    * between the write and the checkpoint commit the SAME batch (same id,
+    * same rows: the replayed source offsets are in the checkpoint) is
+    * redelivered, and a plain `mode("append")` would land it twice. Keying
+    * the write by the stable batch id turns redelivery into an overwrite
+    * of the identical directory: effectively-once output, with no
+    * applied-id marker (that is [[summarySink]]'s job, where the fold is
+    * not idempotent) and no cross-batch state. This holds as long as the
+    * gate is deterministic per batch, which each of the operators above
+    * is. Readers `spark.read.parquet(outPath)`; partition discovery adds
+    * a `batch` column — drop it, or filter on it for a per-trigger audit.
+    * `SinkRedeliverySpec` pins the property for every gate.
     */
-  def annServeSink(
-      queries: DataFrame,
-      index: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      coarse: Seq[Array[Float]],
-      pq: Seq[Seq[Seq[Float]]],
-      nprobe: Int,
-      rescoreFactor: Int,
-      outPath: String,
-      checkpoint: String): DataStreamWriter[Row] =
-    appendBatches(queries, checkpoint) { (batch, batchId) =>
-      applyAnnServeBatch(batch, batchId, index, corpus, idCol, vecCol,
-        k, coarse, pq, nprobe, rescoreFactor, outPath)
-    }
+  def landingSink(df: DataFrame, outPath: String, checkpoint: String)(
+      gate: (DataFrame, DataFrame => Unit) => Unit): DataStreamWriter[Row] =
+    appendBatches(df, checkpoint)(landBatch(_, _, outPath)(gate))
 
-  /** One ANN-serving batch, factored out so redelivery idempotence is
-    * directly testable (SinkRedeliverySpec).
-    */
-  private[graft] def applyAnnServeBatch(
-      batch: DataFrame, batchId: Long,
-      index: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, coarse: Seq[Array[Float]], pq: Seq[Seq[Seq[Float]]],
-      nprobe: Int, rescoreFactor: Int, outPath: String): Unit =
-    landBatch(
-      graft.ext.Similarity.searchIvfPqIndex(
-        batch, index, corpus, idCol, vecCol, k, coarse, pq,
-        nprobe, rescoreFactor),
-      outPath, batchId)
-
-  /** Streaming DSIR scoring sink: score each micro-batch of raw documents
-    * against a PRE-FIT hashed-n-gram log-ratio model
-    * ([[graft.ext.Dsir.fit]] → parquet → this) and append the
-    * Gumbel-perturbed importance scores — the streaming half of the
-    * selection lifecycle: fit once per snapshot offline, gate the
-    * incoming crawl continuously. Top-k selection is a corpus-level
-    * decision, so the sink emits SCORES (threshold or rank downstream);
-    * per-batch everything is stateless — the model broadcasts, the
-    * text tokenizes once through the fused kernel, no state store.
-    * Scores land per batch under `outPath/batch=<id>` ([[landBatch]]),
-    * so a redelivered batch overwrites itself — effectively-once.
-    */
-  def dsirScoreSink(
-      docs: DataFrame,
-      lam: DataFrame,
-      idCol: String,
-      textCol: String,
-      buckets: Int,
-      salt: String,
-      outPath: String,
-      checkpoint: String): DataStreamWriter[Row] =
-    appendBatches(docs, checkpoint) { (batch, batchId) =>
-      applyDsirScoreBatch(
-        batch, batchId, lam, idCol, textCol, buckets, salt, outPath)
-    }
-
-  /** One DSIR-scoring batch (testable redelivery unit). */
-  private[graft] def applyDsirScoreBatch(
-      batch: DataFrame, batchId: Long, lam: DataFrame,
-      idCol: String, textCol: String, buckets: Int, salt: String,
-      outPath: String): Unit =
-    landBatch(
-      graft.ext.Dsir.scoreWithModel(batch, lam, idCol, textCol, buckets, salt),
-      outPath, batchId)
-
-  /** CCNet-style streaming quality gate: score each micro-batch of raw
-    * documents against a PRE-TRAINED char-n-gram LM (the parquet model
-    * artifact [[graft.ext.LanguageModel.save]] writes) and land only
-    * the at-or-under-`maxPpl` survivors — [[dsirScoreSink]]'s
-    * train-offline/gate-continuously cadence applied to the perplexity
-    * filter, which is Wenzek et al.'s production shape (the crawl is
-    * gated as it arrives; the trusted-corpus model retrains per
-    * snapshot, not per batch). Stateless per micro-batch: the O(vocab)
-    * model and its derived context table broadcast into map-side joins
-    * ([[graft.ext.LanguageModel.filterByPerplexity]]), so there is no
-    * state store, and a redelivered batch overwrites its own
-    * `batch=<id>` directory ([[landBatch]] — effectively-once, no
-    * reader-side dedup). Survivors keep their full payload — the gate
-    * slots directly in front of [[cdcSink]]/[[parquetSink]].
-    */
-  def lmGateSink(
-      docs: DataFrame,
-      model: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxPpl: Double,
-      outPath: String,
-      checkpoint: String,
-      n: Int = 3,
-      addK: Double = 0.5,
-      alphabetSize: Int = 64): DataStreamWriter[Row] =
-    appendBatches(docs, checkpoint) { (batch, batchId) =>
-      applyLmGateBatch(batch, batchId, model, idCol, textCol, maxPpl,
-        outPath, n, addK, alphabetSize)
-    }
-
-  /** One perplexity-gate batch (testable redelivery unit). */
-  private[graft] def applyLmGateBatch(
-      batch: DataFrame, batchId: Long, model: DataFrame,
-      idCol: String, textCol: String, maxPpl: Double, outPath: String,
-      n: Int, addK: Double, alphabetSize: Int): Unit =
-    landBatch(
-      graft.ext.LanguageModel.filterByPerplexity(
-        batch, Seq(idCol), col(textCol), model, maxPpl, n, addK,
-        alphabetSize),
-      outPath, batchId)
-
-  /** Streaming domain-mixture gate — apply a PRE-FIT DoReMi weight table
-    * ([[graft.ext.Doremi.domainWeights]], persisted as parquet) to the
-    * crawl as it lands: each micro-batch keeps every document with its
-    * domain's resample rate, decided by the md5 coin
-    * ([[graft.ext.Doremi.resample]] — membership is a pure function of
-    * the id, so a redelivered batch overwrites its own `batch=<id>`
-    * directory with identical rows, [[landBatch]]). Fit the mixture
-    * offline per corpus snapshot, gate continuously; stateless per
-    * batch, no state store. The downsample-only contract means the
-    * online gate materializes exactly the mixture the offline fit
-    * prescribed.
-    */
-  def mixtureGateSink(
-      docs: DataFrame,
-      weights: DataFrame,
-      idCol: String,
-      domainCol: String,
-      outPath: String,
-      checkpoint: String,
-      salt: String = "doremi"): DataStreamWriter[Row] =
-    appendBatches(docs, checkpoint) { (batch, batchId) =>
-      applyMixtureGateBatch(
-        batch, batchId, weights, idCol, domainCol, outPath, salt)
-    }
-
-  /** One mixture-gate batch (testable redelivery unit). */
-  private[graft] def applyMixtureGateBatch(
-      batch: DataFrame, batchId: Long, weights: DataFrame,
-      idCol: String, domainCol: String, outPath: String,
-      salt: String): Unit =
-    landBatch(
-      graft.ext.Doremi.resample(batch, idCol, domainCol, weights, salt),
-      outPath, batchId)
-
-  /** Streaming near-duplicate PAIR emitter against a static corpus
-    * index — [[dedupGateSink]]'s sibling that emits the
-    * `(corpus_id, new_id, jaccard)` pairs instead of dropping rows:
-    * each micro-batch runs the FULL batch plan
-    * ([[graft.ext.Dedup.withNearDuplicatesAgainstIndex]] — both-side
-    * unique-shingle-set collapse, distinct group candidates, exactly
-    * one Jaccard verify per group pair, scoped persist lifecycle) and
-    * lands its distinct pairs under `batch=<id>` ([[landBatch]] — a
-    * micro-batch redelivered after a sink crash overwrites itself, so
-    * the distinct-pairs claim survives at-least-once delivery). Use
-    * this over the
-    * [[nearDupAgainstIndexStream]] transform whenever the corpus or
-    * the stream is duplicate-heavy — the stateless transform cannot
-    * collapse the stream side's identical sets, so its verify count is
-    * members × bands where this sink's is group pairs (5× end-to-end
-    * on the sf0.1 near-clique). `collapsedIndex` is the
-    * [[graft.ext.Dedup.collapseIndex]] form, materialized to parquet as
-    * the snapshot artifact — every trigger re-reads it, so storing the
-    * collapsed groups (not the raw per-doc index) also skips a per-batch
-    * re-aggregation.
-    *
-    * `retainIndexCache` (default false — full scoped release, nothing
-    * outlives the trigger) can keep the collapsed index frame cached
-    * across triggers; CacheManager dedupes the identical plan to ONE
-    * entry per snapshot. Measured at sf0.1 (the removed `s1retain` study,
-    * `git show 52f1ea3:src/main/scala/graft/Prof.scala`;
-    * plans/r16/s1retain.log): warm triggers read the same with retention
-    * on and off — the pre-collapsed artifact re-materializes per trigger
-    * for the cost of one small parquet read — so the leak-proof posture
-    * is the default and retention is an opt-in for deployments whose
-    * artifact read is demonstrably expensive.
-    */
-  def nearDupPairsSink(
-      docs: DataFrame,
-      collapsedIndex: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double,
-      outPath: String,
-      checkpoint: String,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      retainIndexCache: Boolean = false): DataStreamWriter[Row] =
-    appendBatches(docs, checkpoint) { (batch, batchId) =>
-      applyNearDupPairsBatch(batch, batchId, collapsedIndex, idCol,
-        textCol, threshold, outPath, numHashes, bands,
-        retainIndexCache)
-    }
-
-  /** One near-dup-pairs batch (testable redelivery unit). */
-  private[graft] def applyNearDupPairsBatch(
-      batch: DataFrame, batchId: Long, collapsedIndex: DataFrame,
-      idCol: String, textCol: String, threshold: Double, outPath: String,
-      numHashes: Int, bands: Int,
-      retainIndexCache: Boolean = false): Unit =
-    graft.ext.Dedup.withNearDuplicatesAgainstIndex(
-      collapsedIndex, batch, idCol, textCol, threshold, numHashes,
-      bands, indexPreCollapsed = true, retainIndexCache) {
-      pairs => landBatch(pairs, outPath, batchId)
-    }
-
-  /** Streaming near-duplicate gate against the persisted minhash index —
-    * the crawl-side twin of incremental dedup (x9): each micro-batch of
-    * candidate documents drops every row whose token-set Jaccard against
-    * the STATIC corpus index reaches `threshold`
-    * ([[graft.ext.Dedup.nearDuplicatesAgainstIndex]] — build the index
-    * once per corpus snapshot, gate the crawl continuously). Stateless
-    * per batch: the verdict depends only on the row and the fixed index,
-    * so no state store, and a redelivered batch overwrites its own
-    * `batch=<id>` directory ([[landBatch]] — effectively-once, no
-    * reader-side dedup). Survivors keep their full payload.
-    *
-    * Duplicates WITHIN the stream are out of scope by design — that is
-    * the batch pipeline's job at the next snapshot boundary (re-index,
-    * then the next crawl gates against the refreshed index), matching
-    * the published crawl cadence.
-    *
-    * `retainIndexCache` (default false — full scoped release, nothing
-    * outlives the trigger) can keep the index-side frame cached across
-    * triggers (one CacheManager entry per snapshot). Measured neutral at
-    * sf0.1 (the removed `s1retain` study,
-    * `git show 52f1ea3:src/main/scala/graft/Prof.scala`;
-    * plans/r16/s1retain.log) — the
-    * pre-collapsed artifact re-materializes per trigger for one small
-    * parquet read — so the leak-proof posture is the default.
-    */
-  def dedupGateSink(
-      docs: DataFrame,
-      index: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double,
-      outPath: String,
-      checkpoint: String,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      indexPreCollapsed: Boolean = false,
-      retainIndexCache: Boolean = false): DataStreamWriter[Row] =
-    appendBatches(docs, checkpoint) { (batch, batchId) =>
-      applyDedupGateBatch(batch, batchId, index, idCol, textCol,
-        threshold, outPath, numHashes, bands, indexPreCollapsed,
-        retainIndexCache)
-    }
-
-  /** One dedup-gate batch (testable redelivery unit). Runs through the
-    * SCOPED pair plan so the per-batch persisted frames are released
-    * when the batch lands (the public unscoped form leaked one cached
-    * index-collapse per trigger into a long-lived session's
-    * CacheManager). `indexPreCollapsed` is [[nearDupPairsSink]]'s
-    * artifact contract: store the unique-set collapse once per snapshot
-    * (Dedup.collapseIndex → parquet) instead of re-aggregating the full
-    * corpus index inside EVERY micro-batch — at sf0.1 that per-trigger
-    * collapse was most of the gate's cost.
-    */
-  private[graft] def applyDedupGateBatch(
-      batch: DataFrame, batchId: Long, index: DataFrame,
-      idCol: String, textCol: String, threshold: Double, outPath: String,
-      numHashes: Int, bands: Int,
-      indexPreCollapsed: Boolean = false,
-      retainIndexCache: Boolean = false): Unit =
-    graft.ext.Dedup.withNearDuplicatesAgainstIndex(
-      index, batch, idCol, textCol, threshold, numHashes, bands,
-      indexPreCollapsed, retainIndexCache) { pairs =>
-      val dupIds = pairs.select(col("new_id").as(idCol))
-      landBatch(batch.join(dupIds, Seq(idCol), "left_anti"), outPath,
-        batchId)
-    }
-
-  /** Streaming semantic decontamination gate — [[lmGateSink]]'s sibling
-    * for the embedding check (x16): each micro-batch of candidate
-    * documents drops every row whose embedding sits within `minCosine`
-    * of ANY vector in the STATIC eval-set frame
-    * ([[graft.ext.Curation.semanticDecontaminate]] under the persisted
-    * quantizer — train offline per eval-suite snapshot, gate the crawl
-    * continuously). Stateless per batch: the verdict depends only on
-    * the row and the fixed eval set, so there is no state store, and a
-    * redelivered batch overwrites its own `batch=<id>` directory
-    * ([[landBatch]] — effectively-once, no reader-side dedup).
-    * Survivors keep their full payload.
-    */
-  def decontamGateSink(
-      docs: DataFrame,
-      evalSet: DataFrame,
-      idCol: String,
-      vecCol: String,
-      minCosine: Double,
-      centroids: Seq[Array[Float]],
-      outPath: String,
-      checkpoint: String,
-      nprobe: Int = 4): DataStreamWriter[Row] =
-    appendBatches(docs, checkpoint) { (batch, batchId) =>
-      applyDecontamGateBatch(batch, batchId, evalSet, idCol, vecCol,
-        minCosine, centroids, outPath, nprobe)
-    }
-
-  /** One decontamination-gate batch (testable redelivery unit). */
-  private[graft] def applyDecontamGateBatch(
-      batch: DataFrame, batchId: Long, evalSet: DataFrame,
-      idCol: String, vecCol: String, minCosine: Double,
-      centroids: Seq[Array[Float]], outPath: String, nprobe: Int): Unit =
-    landBatch(
-      graft.ext.Curation.semanticDecontaminate(
-        batch, evalSet, idCol, vecCol, minCosine, centroids, nprobe),
-      outPath, batchId)
+  /** One landing-sink batch (testable redelivery unit). */
+  private[graft] def landBatch(batch: DataFrame, batchId: Long, outPath: String)(
+      gate: (DataFrame, DataFrame => Unit) => Unit): Unit =
+    gate(batch, _.write.mode("overwrite").parquet(s"$outPath/batch=$batchId"))
 
   /** Streaming materialized summary view: fold each micro-batch into a
     * parquet-backed [[graft.pipeline.IncrementalAgg]] summary table — the
@@ -1005,11 +667,10 @@ object EventStream {
     * Unlike the CDC fold, additive aggregation is NOT naturally
     * idempotent — a redelivered batch would double-count. The sink
     * therefore records the applied `batchId` INSIDE the summary table
-    * directory (written before the crash-recoverable swap, same
-    * `._next`/`._bak` protocol as [[cdcSink]]), and skips any batch at
-    * or below the recorded id: at-least-once delivery × applied-id
-    * fencing = effectively-once totals
-    * (`EventStreamSpec`/`IncrementalAggSpec` pin both halves).
+    * directory (written into `._next` before [[graft.lake.TableSwap]]
+    * swaps it in), and skips any batch at or below the recorded id:
+    * at-least-once delivery × applied-id fencing = effectively-once
+    * totals (`EventStreamSpec`/`IncrementalAggSpec` pin both halves).
     */
   def summarySink(
       events: DataFrame,
@@ -1032,58 +693,46 @@ object EventStream {
       batch: DataFrame, batchId: Long, tablePath: String,
       groupCols: Seq[String], sumCols: Seq[String],
       rangeCols: Seq[String], ndvCols: Seq[String]): Boolean = {
+    import org.apache.hadoop.fs.Path
+    import java.nio.charset.StandardCharsets.UTF_8
     val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val cur = new org.apache.hadoop.fs.Path(tablePath)
-    val next = new org.apache.hadoop.fs.Path(tablePath + "._next")
-    val bak = new org.apache.hadoop.fs.Path(tablePath + "._bak")
     val marker = "_applied_batch"
-    if (!fs.exists(cur) && fs.exists(bak))
-      require(fs.rename(bak, cur),
-        s"summarySink: recovery rename $bak -> $cur failed")
-
-    def appliedId(dir: org.apache.hadoop.fs.Path): Long = {
-      val m = new org.apache.hadoop.fs.Path(dir, marker)
-      if (!fs.exists(m)) -1L
+    graft.lake.TableSwap.replace(spark, tablePath, "summarySink") { (fs, next) =>
+      val cur = new Path(tablePath)
+      def appliedId: Long = {
+        val m = new Path(cur, marker)
+        if (!fs.exists(m)) -1L
+        else {
+          val in = fs.open(m)
+          try new String(in.readAllBytes(), UTF_8).trim.toLong
+          finally in.close()
+        }
+      }
+      // declining (no ._next written) leaves the table as it is
+      if (fs.exists(cur) && appliedId >= batchId) false
       else {
-        val in = fs.open(m)
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        finally in.close()
+        val batchSummary = graft.pipeline.IncrementalAgg.summarize(
+          batch, groupCols, sumCols, rangeCols, ndvCols)
+        val folded =
+          if (fs.exists(cur))
+            graft.pipeline.IncrementalAgg.merge(
+              Seq(spark.read.parquet(tablePath), batchSummary),
+              groupCols, sumCols, rangeCols, ndvCols)
+          else batchSummary
+        folded.write.mode("overwrite").parquet(next.toString)
+        // the marker travels inside the directory, so table + fence swap
+        // as one unit
+        val out = fs.create(new Path(next, marker), true)
+        try out.write(batchId.toString.getBytes(UTF_8))
+        finally out.close()
+        true
       }
-    }
-
-    if (fs.exists(cur) && appliedId(cur) >= batchId) false
-    else {
-      val batchSummary = graft.pipeline.IncrementalAgg.summarize(
-        batch, groupCols, sumCols, rangeCols, ndvCols)
-      val folded =
-        if (fs.exists(cur))
-          graft.pipeline.IncrementalAgg.merge(
-            Seq(spark.read.parquet(tablePath), batchSummary),
-            groupCols, sumCols, rangeCols, ndvCols)
-        else batchSummary
-      folded.write.mode("overwrite").parquet(next.toString)
-      // the marker travels inside the directory, so table + fence swap
-      // as one unit
-      val out = fs.create(new org.apache.hadoop.fs.Path(next, marker), true)
-      try out.write(batchId.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (fs.exists(cur)) {
-        fs.delete(bak, true)
-        require(fs.rename(cur, bak), s"summarySink: rename $cur -> $bak failed")
-      }
-      require(fs.rename(next, cur), s"summarySink: rename $next -> $cur failed")
-      fs.delete(bak, true)
-      true
     }
   }
 
-  /** The append-mode `foreachBatch` writer every batch sink here shares:
-    * checkpointed at `checkpoint`, each micro-batch handed to `apply`
-    * with its batch id.
+  /** The append-mode `foreachBatch` writer [[landingSink]] and
+    * [[summarySink]] share: checkpointed at `checkpoint`, each
+    * micro-batch handed to `apply` with its batch id.
     */
   private def appendBatches(df: DataFrame, checkpoint: String)(
       apply: (DataFrame, Long) => Unit): DataStreamWriter[Row] =

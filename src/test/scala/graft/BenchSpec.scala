@@ -113,7 +113,36 @@ class BenchSpec extends AnyFunSuite with Matchers {
     java.nio.file.Files.writeString(f, """{"same_surface_record": {"sf": 0.1,
       |"queries_s": {"q01_agg": 0.2}, "canary_s": [0.3]}}""".stripMargin)
     val noCpus = Bench.baselineRecord(f.toString)
-    noCpus shouldBe Bench.Baseline(Map("q01_agg" -> 0.2), 0.3, "sf0.1", None)
+    noCpus shouldBe Bench.Baseline(Map("q01_agg" -> 0.2), 0.3, "sf0.1", None,
+      f.toAbsolutePath.toString)
     assert(!noCpus.binds("testdata/sf0.1", 32))
+  }
+
+  // Baseline.unbound — the reason vs_baseline records when it does not bind
+
+  test("unbound: a baseline file that is not there names its absolute path") {
+    val missing = Bench.baselineRecord("no-such-dir/BASELINE.json")
+    val abs = new java.io.File("no-such-dir/BASELINE.json").getAbsolutePath
+    missing.unbound("testdata/sf0.1", 32) shouldBe
+      Some(s"baseline not found: $abs")
+  }
+
+  test("unbound: a run at another scale factor says the sf differs") {
+    record.unbound("testdata/sf0.01", 32) shouldBe
+      Some("sf differs: record sf0.1, run sf0.01")
+  }
+
+  test("unbound: a run on another core count says the cpus differ") {
+    record.unbound("testdata/sf0.1", 8) shouldBe
+      Some("cpus differ: record 32, run 8")
+    record.unbound("testdata/sf0.1", 32) shouldBe None
+  }
+
+  test("unbound: a record without cpus says so") {
+    val f = java.nio.file.Files.createTempFile("baseline", ".json")
+    java.nio.file.Files.writeString(f, """{"same_surface_record": {"sf": 0.1,
+      |"queries_s": {"q01_agg": 0.2}, "canary_s": [0.3]}}""".stripMargin)
+    Bench.baselineRecord(f.toString).unbound("testdata/sf0.1", 32) shouldBe
+      Some("record has no cpus")
   }
 }

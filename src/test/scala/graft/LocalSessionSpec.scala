@@ -11,7 +11,9 @@ import scala.jdk.CollectionConverters._
   * ([[streaming.EventStream.runAvailableNow]]), the ordered-replay
   * file source and run dir ([[SparkEntry.orderedFileStream]],
   * [[SparkEntry.streamRunDir]]), the runners' atomic record writer
-  * ([[Runner.write]]) and each runner option's one read. Also: the
+  * ([[Runner.write]]), the table swap ([[lake.TableSwap.replace]]), the
+  * streaming sinks' `foreachBatch` writers ([[streaming.EventStream]])
+  * and each runner option's one read. Also: the
   * suite's shared session carries the local runner posture.
   */
 class LocalSessionSpec extends SparkSpec {
@@ -31,7 +33,9 @@ class LocalSessionSpec extends SparkSpec {
     "Trigger.AvailableNow()" -> "EventStream.scala",
     "\"maxFilesPerTrigger\"" -> "SparkEntry.scala",
     "streamRuns.incrementAndGet" -> "SparkEntry.scala",
-    "ATOMIC_MOVE" -> "Runner.scala") ++
+    "ATOMIC_MOVE" -> "Runner.scala",
+    "\"._bak\"" -> "TableSwap.scala",
+    "foreachBatch" -> "EventStream.scala") ++
     options.map { case (name, owner) => s"\"$name\"" -> owner }
 
   private lazy val sources: Seq[(String, String)] = {

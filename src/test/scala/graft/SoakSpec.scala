@@ -123,4 +123,19 @@ class SoakSpec extends SparkSpec {
     sHi shouldBe bHi
     base.unpersist(); synR.unpersist()
   }
+
+  test("renderReport labels the base scale from the sf dir it ran on") {
+    val drain = Soak.Drain(1.0, "/unused", 10L, 100L, 0)
+    val report = Soak.renderReport("/data/sf0.01", 50L, 50L, 50L,
+      1.0, 1.0, 0.3, 0.3,
+      Seq(Soak.ChainResult("s9_stream_funnel", 1.0, 4.0, 10L, 100L)),
+      Seq(("x2pr_minhash_prod_recall", 0.95, 5L, true)),
+      Soak.AnnPosture(4, 12, 3, 9, 5, Seq(5 -> 0.95), 1.0, 2.0, 3.0, 10L),
+      drain, drain, drain, 10L)
+    report should include("past sf0.01")
+    report should include("| chain | t(sf0.01) s |")
+    report should include("rows sf0.01 → 10×")
+    report should include("| sf0.01, default provider |")
+    report should not include "sf0.1"
+  }
 }

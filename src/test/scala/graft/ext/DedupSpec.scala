@@ -190,12 +190,6 @@ class DedupSpec extends SparkSpec {
       idx, batch, "doc_id", "text", threshold = 0.5)
       .select("corpus_id", "new_id", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
-    val pre = Dedup.nearDuplicatesAgainstIndex(
-      idx, batch, "doc_id", "text", threshold = 0.5,
-      preIndexedBatch = Some(Dedup.minhashIndex(batch, "doc_id", "text")))
-      .select("corpus_id", "new_id", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(direct === pre)
     assert(direct.nonEmpty) // 9 is a near-dup of 1/2/4
     direct.foreach { case (_, _, j) => assert(j >= 0.5 && j <= 1.0) }
   }

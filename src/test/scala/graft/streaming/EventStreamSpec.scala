@@ -95,10 +95,12 @@ class EventStreamSpec extends SparkSpec {
       corpus, "doc_id", "text", numHashes = 128, bands = 32))
     val dir = Files.createTempDirectory("ndp_sink").toString
     val input = MemoryStream[(Long, String)]
-    val q = EventStream.nearDupPairsSink(
-      input.toDF().toDF("doc_id", "text"), index, "doc_id", "text",
-      threshold = 0.5, outPath = s"$dir/out", checkpoint = s"$dir/ckpt",
-      numHashes = 128, bands = 32).start()
+    val q = EventStream.landingSink(input.toDF().toDF("doc_id", "text"),
+        s"$dir/out", s"$dir/ckpt") { (batch, land) =>
+      graft.ext.Dedup.withNearDuplicatesAgainstIndex(index, batch, "doc_id",
+        "text", threshold = 0.5, numHashes = 128, bands = 32,
+        indexPreCollapsed = true)(land)
+    }.start()
     try {
       input.addData(
         (10L, "the quick brown fox jumps over the lazy cat near the river"),
@@ -109,7 +111,7 @@ class EventStreamSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     val rows = spark.read.parquet(s"$dir/out")
-      .select("corpus_id", "new_id", "jaccard") // landBatch adds `batch`
+      .select("corpus_id", "new_id", "jaccard") // the sink adds `batch`
       .as[(Long, Long, Double)].collect().toSet
     // group (1,2) expands to BOTH members against doc 10; pairs are
     // distinct (one row per pair, unlike the transform's per-band rows)
@@ -702,11 +704,13 @@ class EventStreamSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("ann-serve-out").toString
     val ckpt = Files.createTempDirectory("ann-serve-ckpt").toString
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = EventStream.annServeSink(
-      input.toDF().toDF("vec_id", "embedding"), index, corpus,
-      "vec_id", "embedding", k = 3, coarse = coarse, pq = pq,
-      nprobe = 2, rescoreFactor = 2, outPath = outDir, checkpoint = ckpt)
-      .start()
+    val q = EventStream.landingSink(
+        input.toDF().toDF("vec_id", "embedding"), outDir, ckpt) {
+      (batch, land) =>
+        land(Similarity.searchIvfPqIndex(batch, index, corpus,
+          "vec_id", "embedding", k = 3, coarse = coarse, pq = pq,
+          nprobe = 2, rescoreFactor = 2))
+    }.start()
     try {
       input.addData(queriesAll.take(5): _*)
       q.processAllAvailable()
@@ -744,10 +748,11 @@ class EventStreamSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("dsir-score-out").toString
     val ckpt = Files.createTempDirectory("dsir-score-ckpt").toString
     val input = MemoryStream[(Long, String)]
-    val q = EventStream.dsirScoreSink(
-      input.toDF().toDF("doc_id", "text"), lam, "doc_id", "text",
-      buckets = 256, salt = "dsir", outPath = outDir, checkpoint = ckpt)
-      .start()
+    val q = EventStream.landingSink(
+        input.toDF().toDF("doc_id", "text"), outDir, ckpt) { (batch, land) =>
+      land(Dsir.scoreWithModel(batch, lam, "doc_id", "text",
+        buckets = 256, salt = "dsir"))
+    }.start()
     try {
       input.addData(rawAll.take(7): _*)
       q.processAllAvailable()
@@ -756,7 +761,7 @@ class EventStreamSpec extends SparkSpec {
     } finally q.stop()
 
     val got = spark.read.parquet(outDir)
-      .select("doc_id", "score") // landBatch adds `batch`
+      .select("doc_id", "score") // the sink adds `batch`
       .as[(Long, Double)].collect().toSet
     got shouldBe expected
   }
@@ -789,10 +794,11 @@ class EventStreamSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("lm-gate-out").toString
     val ckpt = Files.createTempDirectory("lm-gate-ckpt").toString
     val input = MemoryStream[(Long, String)]
-    val q = EventStream.lmGateSink(
-      input.toDF().toDF("doc_id", "text"), model, "doc_id", "text",
-      maxPpl = 40.0, outPath = outDir, checkpoint = ckpt)
-      .start()
+    val q = EventStream.landingSink(
+        input.toDF().toDF("doc_id", "text"), outDir, ckpt) { (batch, land) =>
+      land(LanguageModel.filterByPerplexity(batch, Seq("doc_id"),
+        col("text"), model, maxPpl = 40.0))
+    }.start()
     try {
       input.addData(crawlAll.take(5): _*)
       q.processAllAvailable()
@@ -835,11 +841,12 @@ class EventStreamSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("mix-gate-out").toString
     val ckpt = Files.createTempDirectory("mix-gate-ckpt").toString
     val input = MemoryStream[(Long, String, String)]
-    val q = EventStream.mixtureGateSink(
-      input.toDF().toDF("doc_id", "source", "text"), weights,
-      "doc_id", "source", outPath = outDir, checkpoint = ckpt,
-      salt = "mixspec")
-      .start()
+    val q = EventStream.landingSink(
+        input.toDF().toDF("doc_id", "source", "text"), outDir, ckpt) {
+      (batch, land) =>
+        land(Doremi.resample(batch, "doc_id", "source", weights,
+          salt = "mixspec"))
+    }.start()
     try {
       input.addData(crawlAll.take(15): _*)
       q.processAllAvailable()
@@ -885,10 +892,14 @@ class EventStreamSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("dd-gate-out").toString
     val ckpt = Files.createTempDirectory("dd-gate-ckpt").toString
     val input = MemoryStream[(Long, String)]
-    val q = EventStream.dedupGateSink(
-      input.toDF().toDF("doc_id", "text"), index, "doc_id", "text",
-      threshold = 0.8, outPath = outDir, checkpoint = ckpt)
-      .start()
+    val q = EventStream.landingSink(
+        input.toDF().toDF("doc_id", "text"), outDir, ckpt) { (batch, land) =>
+      Dedup.withNearDuplicatesAgainstIndex(index, batch, "doc_id", "text",
+        threshold = 0.8) { pairs =>
+        land(batch.join(pairs.select(col("new_id").as("doc_id")),
+          Seq("doc_id"), "left_anti"))
+      }
+    }.start()
     try {
       input.addData(crawlAll.take(5): _*)
       q.processAllAvailable()
@@ -932,11 +943,12 @@ class EventStreamSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("dc-gate-out").toString
     val ckpt = Files.createTempDirectory("dc-gate-ckpt").toString
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = EventStream.decontamGateSink(
-      input.toDF().toDF("vec_id", "embedding"), evalSet,
-      "vec_id", "embedding", minCosine = 0.9, cents,
-      outPath = outDir, checkpoint = ckpt, nprobe = 2)
-      .start()
+    val q = EventStream.landingSink(
+        input.toDF().toDF("vec_id", "embedding"), outDir, ckpt) {
+      (batch, land) =>
+        land(Curation.semanticDecontaminate(batch, evalSet,
+          "vec_id", "embedding", minCosine = 0.9, cents, nprobe = 2))
+    }.start()
     try {
       input.addData(crawlAll.take(5): _*)
       q.processAllAvailable()

@@ -12,17 +12,18 @@ import graft.{Sessions, SparkEntry, SparkSpec}
   * stopped after its first batch and restarted on the same checkpoint as
   * in one run, under both state-store providers:
   *
-  *  - s5's watermarked windowed aggregation (built-in window state),
-  *  - s6's sessionization and s9's funnel (flatMapGroupsWithState with
-  *    event-time timeouts),
+  *  - s5's watermarked windowed aggregation (built-in window state) and
+  *    s12's windowed heavy hitters (a Misra-Gries summary per window),
+  *  - s6's sessionization, s9's funnel and s10's transitions
+  *    (flatMapGroupsWithState with event-time timeouts),
   *  - s14's `dropDuplicatesWithinWatermark` (dedup state keyed on the
   *    content fingerprint).
   *
   * The restart reads back the offset log, commit log, state-store files
   * and file-sink log, so it covers every file the checkpoint manager
-  * writes. Each shape keeps a window, session or chain open across the
-  * restart (the dedup shape, a fingerprint seen before it), which proves its
-  * state was restored, not rebuilt.
+  * writes. Each shape keeps a window, session, chain or last event open
+  * across the restart (the dedup shape, a fingerprint seen before it),
+  * which proves its state was restored, not rebuilt.
   */
 class RestartEquivalenceSpec extends SparkSpec {
   import RestartEquivalenceSpec.Shape
@@ -77,7 +78,29 @@ class RestartEquivalenceSpec extends SparkSpec {
             (7L, "epsilon", ts(10))))
           .map(_.toDF("doc_id", "text", "ts")),
         EventStream.dedupStream(_, "text", "ts", lateness = "1 hour"),
-        "[1,alpha beta,2024-03-01 10:00:00.0]", 4))
+        "[1,alpha beta,2024-03-01 10:00:00.0]", 4),
+      // s10's transitions: user 1's b0 view pairs with its b1 click and
+      // user 2's b1 view with its b2 click, so each pair bridges a batch
+      Shape("transitions",
+        Seq(Seq((1L, ts(0), "signup", 1L), (1L, ts(2), "view", 2L),
+            (2L, ts(1), "signup", 3L)),
+          Seq((1L, ts(5), "click", 4L), (2L, ts(6), "view", 5L)),
+          Seq((2L, ts(8), "click", 6L), (9L, ts(59), "signup", 7L)))
+          .map(_.toDF("user_id", "ts", "event_type", "event_id")),
+        df => EventStream.transitionsStream(
+          df.as[(Long, Timestamp, String, Long)], lateness = "5 minutes",
+          idleTimeout = "30m"),
+        "[1,view,click,2024-03-01 10:05:00.0]", 4),
+      // s12's heavy hitters: the 10:00 window's click count spans b0 and
+      // b1; b2's 10:59 row moves the watermark past every real window
+      Shape("heavy hitters",
+        Seq(Seq((ts(1), "click"), (ts(2), "click"), (ts(4), "view")),
+          Seq((ts(8), "click"), (ts(12), "view")),
+          Seq((ts(59), "view")))
+          .map(_.toDF("ts", "event_type")),
+        EventStream.heavyHittersStream(_, "ts", "event_type", capacity = 4,
+          window = "10 minutes", lateness = "5 minutes"),
+        "[2024-03-01 10:00:00.0,2024-03-01 10:10:00.0,1,click,3,0]", 3))
   }
 
   /** Copy staged files into `in` with their staged mtimes: back-to-back
@@ -112,7 +135,8 @@ class RestartEquivalenceSpec extends SparkSpec {
   }
 
   for {
-    shape <- Seq("windowed agg", "sessionize", "funnel", "dedup within watermark")
+    shape <- Seq("windowed agg", "sessionize", "funnel",
+      "dedup within watermark", "transitions", "heavy hitters")
     (provider, rocksDb) <- Seq("HDFS" -> false, "RocksDB" -> true)
   } test(s"$shape ($provider state store): stop after batch 1 and " +
       "restart on the same checkpoint equals the one-shot run") {

@@ -13,12 +13,13 @@ import graft.SparkSpec
   * the SAME micro-batch (same batchId, same rows: the source offsets
   * are replayed from the checkpoint) is delivered AGAIN. Each case
   * below applies one batch once into directory A and twice (the
-  * redelivery) into directory B through the sink's factored
-  * `applyXxxBatch` unit, then asserts the two final outputs are
-  * row-identical. Three idempotence mechanisms are on trial:
+  * redelivery) into directory B through the sink's per-batch unit, then
+  * asserts the two final outputs are row-identical. Three idempotence
+  * mechanisms are on trial:
   *
-  *  - the seven append sinks land per-batch via [[EventStream.landBatch]]
-  *    (`batch=<id>` overwrite — redelivery rewrites its own directory);
+  *  - [[EventStream.landingSink]] lands each gate's output per batch via
+  *    [[EventStream.landBatch]] (`batch=<id>` overwrite — redelivery
+  *    rewrites its own directory), for each of the seven gates;
   *  - the CDC fold is idempotent by latest-wins semantics
   *    ([[graft.pipeline.Cdc.applyChanges]] — re-applying applied
   *    changes is a no-op);
@@ -73,8 +74,13 @@ class SinkRedeliverySpec extends SparkSpec {
       (11L, "completely fresh unseen content number eleven with words"))
       .toDF("doc_id", "text")
     checkRedelivery("dedup-gate") { out =>
-      EventStream.applyDedupGateBatch(batch, 0L, index, "doc_id", "text",
-        threshold = 0.8, outPath = out, numHashes = 64, bands = 16)
+      EventStream.landBatch(batch, 0L, out) { (b, land) =>
+        graft.ext.Dedup.withNearDuplicatesAgainstIndex(index, b, "doc_id",
+          "text", threshold = 0.8, numHashes = 64, bands = 16) { pairs =>
+          land(b.join(pairs.select(col("new_id").as("doc_id")),
+            Seq("doc_id"), "left_anti"))
+        }
+      }
     }()
   }
 
@@ -87,9 +93,11 @@ class SinkRedeliverySpec extends SparkSpec {
       (11L, "zqx jwv qpt kzz vvv"))
       .toDF("doc_id", "text")
     checkRedelivery("lm-gate") { out =>
-      EventStream.applyLmGateBatch(batch, 0L, model, "doc_id", "text",
-        maxPpl = 40.0, outPath = out, n = 3, addK = 0.5,
-        alphabetSize = 64)
+      EventStream.landBatch(batch, 0L, out) { (b, land) =>
+        land(graft.ext.LanguageModel.filterByPerplexity(b, Seq("doc_id"),
+          col("text"), model, maxPpl = 40.0, n = 3, addK = 0.5,
+          alphabetSize = 64))
+      }
     }()
   }
 
@@ -105,8 +113,10 @@ class SinkRedeliverySpec extends SparkSpec {
       (i, if (i % 4 == 0) "b" else "a", s"payload $i")
     }.toDF("doc_id", "source", "text")
     checkRedelivery("mixture-gate") { out =>
-      EventStream.applyMixtureGateBatch(batch, 0L, weights,
-        "doc_id", "source", outPath = out, salt = "rds")
+      EventStream.landBatch(batch, 0L, out) { (b, land) =>
+        land(graft.ext.Doremi.resample(b, "doc_id", "source", weights,
+          salt = "rds"))
+      }
     }()
   }
 
@@ -125,9 +135,10 @@ class SinkRedeliverySpec extends SparkSpec {
       batch, "vec_id", "embedding", nlist = 2, iterations = 2,
       sampleSize = 8, seed = 42L)
     checkRedelivery("decontam-gate") { out =>
-      EventStream.applyDecontamGateBatch(batch, 0L, evalSet,
-        "vec_id", "embedding", minCosine = 0.9, cents, outPath = out,
-        nprobe = 2)
+      EventStream.landBatch(batch, 0L, out) { (b, land) =>
+        land(graft.ext.Curation.semanticDecontaminate(b, evalSet,
+          "vec_id", "embedding", minCosine = 0.9, cents, nprobe = 2))
+      }
     }()
   }
 
@@ -142,9 +153,11 @@ class SinkRedeliverySpec extends SparkSpec {
       (10L, "the quick brown fox jumps over the lazy cat near the river"))
       .toDF("doc_id", "text")
     checkRedelivery("neardup-pairs") { out =>
-      EventStream.applyNearDupPairsBatch(batch, 0L, index, "doc_id",
-        "text", threshold = 0.5, outPath = out, numHashes = 128,
-        bands = 32)
+      EventStream.landBatch(batch, 0L, out) { (b, land) =>
+        graft.ext.Dedup.withNearDuplicatesAgainstIndex(index, b, "doc_id",
+          "text", threshold = 0.5, numHashes = 128, bands = 32,
+          indexPreCollapsed = true)(land)
+      }
     }()
   }
 
@@ -156,8 +169,10 @@ class SinkRedeliverySpec extends SparkSpec {
     val lam = graft.ext.Dsir.fit(target, raw, "doc_id", "text",
       buckets = 256, salt = "rds")
     checkRedelivery("dsir-score") { out =>
-      EventStream.applyDsirScoreBatch(raw, 0L, lam, "doc_id", "text",
-        buckets = 256, salt = "rds", outPath = out)
+      EventStream.landBatch(raw, 0L, out) { (b, land) =>
+        land(graft.ext.Dsir.scoreWithModel(b, lam, "doc_id", "text",
+          buckets = 256, salt = "rds"))
+      }
     }()
   }
 
@@ -177,9 +192,11 @@ class SinkRedeliverySpec extends SparkSpec {
     val batch = (100L until 104L).map(i => (i, vec()))
       .toDF("vec_id", "embedding")
     checkRedelivery("ann-serve") { out =>
-      EventStream.applyAnnServeBatch(batch, 0L, index, corpus,
-        "vec_id", "embedding", k = 3, coarse = coarse, pq = pq,
-        nprobe = 2, rescoreFactor = 2, outPath = out)
+      EventStream.landBatch(batch, 0L, out) { (b, land) =>
+        land(Similarity.searchIvfPqIndex(b, index, corpus,
+          "vec_id", "embedding", k = 3, coarse = coarse, pq = pq,
+          nprobe = 2, rescoreFactor = 2))
+      }
     }()
   }
 
