@@ -201,6 +201,13 @@ object Bench {
   private val BudgetS = 1200.0
   private val CanaryGateS = 0.5
   private val CanaryGateWaitS = 300.0
+  // untimed canary passes before the gate's first reading: a fresh JVM's
+  // canary falls for about six readings as JIT and Spark warm up (three
+  // cold series on a 4-core host at SPARK_GRAFT_CPUS=4 read 0.72 0.67
+  // 0.56 0.56 0.51 0.56 | 0.43 0.40 0.29, 0.68 0.50 0.53 0.47 0.42 0.46 |
+  // 0.46 0.40 0.36 and 0.65 0.45 0.49 0.41 0.41 0.46 | 0.36 0.37 0.36 s),
+  // so an unwarmed gate waits out warm-up, not weather
+  private val CanaryWarmPasses = 6
 
   /** Median and relative spread of a query's timed passes (both -1 when
     * every pass failed), and the passes it got. */
@@ -233,6 +240,7 @@ object Bench {
     // quieted — says so itself. Gate time runs BEFORE the bench budget
     // clock: waiting for quiet must not eat timed passes.
     val gateReadings = ArrayBuffer[Double]()
+    (1 to CanaryWarmPasses).foreach(_ => canaryPass(spark))
     val gateStart = System.nanoTime()
     var c = canaryPass(spark)
     gateReadings += Runner.round(c, 3)

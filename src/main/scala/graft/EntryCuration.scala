@@ -194,16 +194,16 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
         .select("doc_id", "text", "lang", "source")
       val in = stagedStreamInput(s, dir, "s1")(stageTwoBatches(_, crawl))
       // the gate drops every crawl row that has a pair in the index; the
-      // scoped operator releases its caches after the batch lands
+      // sink's cache scope releases the operator's caches after the batch
+      // lands
       EventStream.runAvailableNow(EventStream.landingSink(
         orderedFileStream(s, crawl.schema, in), s"$base/out",
         s"$base/ckpt") { (batch, land) =>
-        Dedup.withNearDuplicatesAgainstIndex(index, batch, "doc_id", "text",
-          threshold = 0.8, numHashes = 128, bands = 32,
-          indexPreCollapsed = true) { pairs =>
-          land(batch.join(pairs.select(col("new_id").as("doc_id")),
-            Seq("doc_id"), "left_anti"))
-        }
+        val pairs = Dedup.nearDuplicatesAgainstIndex(index, batch, "doc_id",
+          "text", threshold = 0.8, numHashes = 128, bands = 32,
+          indexPreCollapsed = true)
+        land(batch.join(pairs.select(col("new_id").as("doc_id")),
+          Seq("doc_id"), "left_anti"))
       })
       s.read.parquet(s"$base/out")
         .select("doc_id", "lang", "source")
@@ -659,7 +659,7 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
 
     "s13_stream_neardup_index" -> ((s, dir) => {
       // x9's incremental near-dup shape streamed
-      // (Dedup.withNearDuplicatesAgainstIndex through
+      // (Dedup.nearDuplicatesAgainstIndex through
       // EventStream.landingSink): the 80% corpus index is
       // prebuilt once and materialized to parquet (snapshot cadence —
       // the static side re-plans per trigger, so an unmaterialized
@@ -684,13 +684,14 @@ private[graft] trait EntryCuration { this: SparkEntry.type =>
       val in = stagedStreamInput(s, dir, "s13")(stageTwoBatches(_, newDocs))
       // no isolated 4-partition session: stateless and data-heavy
       // (~950k true pairs at sf0.1) — wants full shuffle parallelism
-      // each batch lands its distinct pairs inside the operator's loan
+      // each batch lands its distinct pairs before the sink's cache
+      // scope releases the operator's caches
       EventStream.runAvailableNow(EventStream.landingSink(
         orderedFileStream(s, newDocs.schema, in), s"$base/out",
         s"$base/ckpt") { (batch, land) =>
-        Dedup.withNearDuplicatesAgainstIndex(idx, batch, "doc_id", "text",
+        land(Dedup.nearDuplicatesAgainstIndex(idx, batch, "doc_id", "text",
           threshold = 0.8, numHashes = 128, bands = 32,
-          indexPreCollapsed = true)(land)
+          indexPreCollapsed = true))
       })
       s.read.parquet(s"$base/out")
         .drop("batch") // the landing sink's per-trigger partition column

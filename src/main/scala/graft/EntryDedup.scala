@@ -390,13 +390,12 @@ private[graft] trait EntryDedup { this: SparkEntry.type =>
       // the curated id set feeds BOTH dsir sides (target sample + raw
       // pool) — persist the NARROW id frame so the whole curation chain
       // (dedup groupBy, gram join, anti joins) evaluates once, not once
-      // per side. Bytes per document; lifecycle = the session's
-      // clearCache between jobs, the bare-Dsir.select contract.
-      val curatedIds = CorpusPipeline.curate(docs, "doc_id", "text",
-          evalDocs, "doc_id", "text", minQuality = 0.5, nGram = 13,
+      // per side. Bytes per document; released by the session's
+      // clearCache between jobs (graft.Cached, unscoped).
+      val curatedIds = Cached.persist(CorpusPipeline.curate(docs, "doc_id",
+          "text", evalDocs, "doc_id", "text", minQuality = 0.5, nGram = 13,
           salt = "x15")
-        .select("doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id"))
       val corpus = docs.join(curatedIds, Seq("doc_id"), "left_semi")
       val target = corpus.filter(pmod(col("doc_id"), lit(17)) === 0)
       val raw = corpus.filter(pmod(col("doc_id"), lit(17)) =!= 0)
@@ -445,11 +444,10 @@ private[graft] trait EntryDedup { this: SparkEntry.type =>
       // x15's persist posture: the narrow curated-id frame evaluates the
       // curation chain once, not once per DoReMi pass (pg build, share
       // count, coin pass all read it)
-      val curatedIds = CorpusPipeline.curate(docs, "doc_id", "text",
-          evalDocs, "doc_id", "text", minQuality = 0.5, nGram = 13,
+      val curatedIds = Cached.persist(CorpusPipeline.curate(docs, "doc_id",
+          "text", evalDocs, "doc_id", "text", minQuality = 0.5, nGram = 13,
           salt = "x17")
-        .select("doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id"))
       val corpus = docs.join(curatedIds, Seq("doc_id"), "left_semi")
       graft.ext.Doremi.domainWeights(corpus, "doc_id", "text", "source",
         n = 3, addK = 0.01, alphabetSize = 64, steps = 3, eta = 1.0,

@@ -51,28 +51,25 @@ object Plans {
   /** x11 and q91 materialize eagerly in their public form (persist +
     * localCheckpoint — the executed plan of the DECLARED query is just a
     * checkpoint scan), so the audit dumps their REAL lazy plans via the
-    * `*Plan` splits the plan-shape spec uses. Returns (frame to explain,
-    * cleanup releasing any persist the split handed us).
+    * `*Plan` splits the plan-shape spec uses. Call inside a
+    * [[Cached.scope]]: the splits cache their intermediates.
     */
   private def buildFor(
       spark: SparkSession, sfDir: String,
-      name: String): Option[(org.apache.spark.sql.DataFrame, () => Unit)] =
+      name: String): Option[org.apache.spark.sql.DataFrame] =
     name match {
       case "x11_containment" =>
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val (plan, caches) = graft.ext.Dedup.containmentPairsPlan(
-          docs, "doc_id", "text", 0.8,
-          shingleFn = graft.ext.Shingles.charNGrams(_, 8))
-        Some((plan.orderBy("id", "container_id"),
-          () => { caches.foreach(_.unpersist(blocking = false)); () }))
+        Some(graft.ext.Dedup.containmentPairsPlan(docs, "doc_id", "text", 0.8,
+            shingleFn = graft.ext.Shingles.charNGrams(_, 8))
+          .orderBy("id", "container_id"))
       case "q91_span_excise" =>
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val (plan, pos) = graft.ext.Fingerprint.exciseSharedSpansPlan(
-          docs, "doc_id", "text", k = 15, maxDocs = 10, exact = true)
-        Some((plan.orderBy("doc_id"),
-          () => { pos.unpersist(blocking = false); () }))
+        Some(graft.ext.Fingerprint.exciseSharedSpansPlan(
+            docs, "doc_id", "text", k = 15, maxDocs = 10, exact = true)
+          .orderBy("doc_id"))
       case other =>
-        SparkEntry.queries.get(other).map(b => (b(spark, sfDir), () => ()))
+        SparkEntry.queries.get(other).map(_(spark, sfDir))
     }
 
   private val Num = """-?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"""
@@ -128,15 +125,15 @@ object Plans {
     sb.append("the shape invariants that must hold at any scale. Inlined ")
     sb.append("literal vectors longer than 16 values are elided.\n")
     headline.foreach { name =>
-      buildFor(spark, sfDir, name).foreach { case (df, cleanup) =>
+      Cached.scope(buildFor(spark, sfDir, name).foreach { df =>
         val plan = try {
           df.queryExecution
             .explainString(ExplainMode.fromString("formatted"))
         } catch {
           case e: Exception => s"(failed to plan: ${e.getMessage})"
-        } finally cleanup()
+        }
         sb.append(s"\n## $name\n\n```\n${elideLiterals(plan)}```\n")
-      }
+      })
     }
     Runner.write(Paths.get(outFile), sb.toString)
     // stderr keeps stdout clean for tooling

@@ -138,13 +138,13 @@ object CorpusPipeline {
       / 1e6 >= minQuality).as("_q")
     val base0 = docs.select(col(idCol), qOk)
       .join(canonical, Seq(idCol), "left")
-    val base = gopherMark.fold(base0.withColumn("_g", lit(true)))(gm =>
-        base0.join(gm, Seq(idCol), "left"))
-      .select(col(idCol),
-        coalesce(col("_d"), lit(false)).as("_d"),
-        coalesce(col("_q"), lit(false)).as("_q"),
-        coalesce(col("_g"), lit(false)).as("_g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = graft.Cached.persist(
+      gopherMark.fold(base0.withColumn("_g", lit(true)))(gm =>
+          base0.join(gm, Seq(idCol), "left"))
+        .select(col(idCol),
+          coalesce(col("_d"), lit(false)).as("_d"),
+          coalesce(col("_q"), lit(false)).as("_q"),
+          coalesce(col("_g"), lit(false)).as("_g")))
     // contamination runs against the FLOORED survivors (curate's input
     // to it) — the text rejoins from the scan, the expensive upstream
     // flags come from the persisted base
@@ -161,14 +161,13 @@ object CorpusPipeline {
     // cache each branch would re-run the gram join
     // hits joins shuffled (corpus-bounded, same reasoning as curate);
     // evalIds broadcasts (eval-set-bounded)
-    val flags = Curation.assignSplit(
+    val flags = graft.Cached.persist(Curation.assignSplit(
       base
         .join(hits, Seq(idCol), "left")
         .join(broadcast(evalIds), Seq(idCol), "left")
         .withColumn("_s", col("_d") && col("_q") && col("_g") &&
           col("_h").isNull && col("_e").isNull),
-      idCol, splits, salt)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      idCol, splits, salt))
     def row(name: String, c: Column) =
       flags.agg(sum(when(c, 1L).otherwise(0L)).as("n_docs"))
         .select(lit(name).as("stage"), col("n_docs"))

@@ -108,15 +108,11 @@ object Curation {
       maxDocsPerLine: Int): DataFrame = {
     require(maxDocsPerLine >= 1,
       s"maxDocsPerLine must be >= 1: $maxDocsPerLine")
-    // Persisted: referenced by the stop-list aggregation AND the kept-
+    // Cached: referenced by the stop-list aggregation AND the kept-
     // lines join — without it the corpus re-explodes per reference.
-    // Lifecycle: cached until the session clears it (clearCache between
-    // jobs, as Verify/Bench do) — the returned frame is lazy and reads
-    // it, so an internal unpersist would silently re-explode instead.
-    val lines = df
+    val lines = graft.Cached.persist(df
       .select(col(idCol).as("_id"),
-        posexplode(split(col(textCol), "\n")).as(Seq("_idx", "_line")))
-      .persist()
+        posexplode(split(col(textCol), "\n")).as(Seq("_idx", "_line"))))
     val stop = lines.groupBy("_line")
       .agg(count_distinct(col("_id")).as("_nd"))
       .filter(col("_nd") > maxDocsPerLine).select("_line")

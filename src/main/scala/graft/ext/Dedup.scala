@@ -91,7 +91,7 @@ object Dedup {
       threshold: Double,
       numHashes: Int = 64,
       bands: Int = 16): DataFrame =
-    buildMinhashPairs(df, idCol, textCol, threshold, numHashes, bands)._1
+    buildMinhashPairs(df, idCol, textCol, threshold, numHashes, bands)
 
   /** [[nearDuplicatesMinhash]] over the PORTABLE md5 hash family
     * ([[graft.functions.MinHashSignaturePortable]]): identical pipeline and
@@ -115,33 +115,9 @@ object Dedup {
       salt: String = "mh"): DataFrame =
     buildMinhashPairs(df, idCol, textCol, threshold, numHashes, bands,
       signature = minhash_signature_portable(_, numHashes, salt),
-      bandKey = identity)._1
+      bandKey = identity)
 
-  /** Scoped form of [[nearDuplicatesMinhash]] that OWNS the persist
-    * lifecycle: builds the plan, hands the pair DataFrame to `f`, and
-    * unpersists the cached group table when `f` returns (or throws) — no
-    * CacheManager entry outlives the call. Use this from long-running
-    * sessions; the unscoped form leaves the cache to the caller (documented
-    * on the persist below) because the returned plan stays lazy.
-    * `f` must CONSUME the DataFrame (collect/write/count) before returning;
-    * a plan that escapes `f` unevaluated would recompute the group
-    * aggregation per downstream action once the cache is dropped.
-    */
-  def withNearDuplicatesMinhash[T](
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double,
-      numHashes: Int = 64,
-      bands: Int = 16)(f: DataFrame => T): T = {
-    val (pairs, cached) =
-      buildMinhashPairs(df, idCol, textCol, threshold, numHashes, bands)
-    try f(pairs)
-    finally cached.unpersist()
-  }
-
-  /** Returns (pair plan, the persisted intermediate whose lifecycle the
-    * caller controls). `signature` builds the k-long signature column;
+  /** The doc-pair plan. `signature` builds the k-long signature column;
     * `bandKey` maps each band's r-long signature slice to the equi-join
     * key (default: Murmur3 of the slice — one int per banded row; the
     * portable path keys on the raw slice itself).
@@ -154,7 +130,7 @@ object Dedup {
       numHashes: Int,
       bands: Int,
       signature: Column => Column = null,
-      bandKey: Column => Column = hash(_)): (DataFrame, DataFrame) = {
+      bandKey: Column => Column = hash(_)): DataFrame = {
     val (repPairs, groups) = buildMinhashGroupPairs(
       df, idCol, textCol, threshold, numHashes, bands, signature, bandKey)
 
@@ -182,14 +158,14 @@ object Dedup {
       .filter(col("a") < col("b"))
       .select(col("a").as("id_a"), col("b").as("id_b"), col("jaccard"))
 
-    (cross.unionByName(intra), groups)
+    cross.unionByName(intra)
   }
 
   /** The GROUP-level half of [[buildMinhashPairs]]: unique-token-set
     * groups plus the verified near-duplicate pairs BETWEEN groups —
     * everything up to (but not including) the member expansion. Returns
     * `(repPairs (gid_a, gid_b, jaccard), groups (gid, members, shingles,
-    * …) persisted)`.
+    * …) cached)`.
     */
   private def buildMinhashGroupPairs(
       df: DataFrame,
@@ -219,19 +195,13 @@ object Dedup {
     // verify joins, and the intra-group branch of one output plan — without
     // persistence Spark re-runs the aggregation per reference (the
     // broadcast wrappers differ, so ReusedExchange cannot kick in).
-    // Lifecycle: the CacheManager keeps the entry until the session calls
-    // `spark.catalog.clearCache()` (or uncaches the plan); blocks are
-    // MEMORY_AND_DISK so storage pressure evicts them LRU rather than
-    // failing. Long-running sessions issuing many dedup calls should
-    // clearCache between jobs (Verify/Bench do).
-    val groups = shingled
+    val groups = graft.Cached.persist(shingled
       .groupBy(md5(to_json(col("shingles"))).as("set_key"))
       .agg(
         min(col("id")).as("gid"),
         collect_list(col("id")).as("members"),
         first(col("shingles")).as("shingles"))
-      .drop("set_key")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .drop("set_key"))
 
     val banded = groups
       .withColumn("sig", sigFn(col("shingles")))
@@ -294,11 +264,6 @@ object Dedup {
     * doc-level result by contract. Both cases are restored below.
     * `cluster_id` is unchanged: gid = min(member id), so the component's
     * min gid IS the component's min doc id.
-    *
-    * The group table is persisted (CacheManager lifecycle — callers issue
-    * `spark.catalog.clearCache()` between jobs, as Verify/Bench do);
-    * long-lived sessions should use [[withNearDuplicateComponents]],
-    * which unpersists it when the callback returns.
     */
   def nearDuplicateComponents(
       df: DataFrame,
@@ -306,35 +271,7 @@ object Dedup {
       textCol: String,
       threshold: Double,
       numHashes: Int = 64,
-      bands: Int = 16): DataFrame =
-    nearDuplicateComponentsPlan(df, idCol, textCol, threshold,
-      numHashes, bands)._1
-
-  /** Scoped form of [[nearDuplicateComponents]] that OWNS the persist
-    * lifecycle (same contract as [[withNearDuplicatesMinhash]]): the
-    * cached group table is unpersisted when `f` returns or throws. `f`
-    * must CONSUME the DataFrame before returning.
-    */
-  def withNearDuplicateComponents[T](
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double,
-      numHashes: Int = 64,
-      bands: Int = 16)(f: DataFrame => T): T = {
-    val (cc, groups) = nearDuplicateComponentsPlan(
-      df, idCol, textCol, threshold, numHashes, bands)
-    try f(cc)
-    finally groups.unpersist(blocking = false)
-  }
-
-  private def nearDuplicateComponentsPlan(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double,
-      numHashes: Int,
-      bands: Int): (DataFrame, DataFrame) = {
+      bands: Int = 16): DataFrame = {
     val (repPairs, groups) = buildMinhashGroupPairs(
       df, idCol, textCol, threshold, numHashes, bands)
     val gcc = Clusters.connectedComponents(repPairs, "gid_a", "gid_b")
@@ -347,10 +284,9 @@ object Dedup {
       .select(col("gid"))
       .join(gcc.select("gid"), Seq("gid"), "left_anti")
       .select(col("gid"), col("gid").as("cluster_id"))
-    val cc = gcc.unionByName(isolated)
+    gcc.unionByName(isolated)
       .join(groups.select(col("gid"), col("members")), Seq("gid"))
       .select(explode(col("members")).as("id"), col("cluster_id"))
-    (cc, groups)
   }
 
   // ------------------------------------------------ incremental (indexed)
@@ -413,14 +349,9 @@ object Dedup {
     * candidate-distinct shuffle, and the verify count by the duplication
     * factor; identical sets have identical signatures, so collapsing the
     * prebuilt `bands` column by set key is exact, not approximate. The
-    * collapsed frames are persisted (MEMORY_AND_DISK — each is read by
-    * the band join, the verify attach, and the member expansion; without
-    * persistence Spark re-runs the index scan + aggregation per
-    * reference). Lifecycle: entries live in the CacheManager until the
-    * session calls `spark.catalog.clearCache()` — same posture as
-    * [[nearDuplicatesMinhash]]; long-lived sessions should use
-    * [[withNearDuplicatesAgainstIndex]], which unpersists both collapsed
-    * frames when the callback returns.
+    * collapsed frames are cached: each is read by the band join, the
+    * verify attach, and the member expansion; without the cache Spark
+    * re-runs the index scan + aggregation per reference.
     *
     * Contract: id spaces of index and batch are disjoint (a recrawled doc
     * gets a new id; dedup is what finds the old one). Pairs WITHIN the new
@@ -439,36 +370,55 @@ object Dedup {
       threshold: Double,
       numHashes: Int = 64,
       bands: Int = 16,
-      indexPreCollapsed: Boolean = false): DataFrame =
-    nearDuplicatesAgainstIndexPlan(index, newDocs, idCol, textCol,
-      threshold, numHashes, bands, indexPreCollapsed)._1
+      indexPreCollapsed: Boolean = false): DataFrame = {
+    val batch = minhashIndex(newDocs, idCol, textCol, numHashes, bands)
 
-  /** Scoped form of [[nearDuplicatesAgainstIndex]] that OWNS the persist
-    * lifecycle (same contract as [[withNearDuplicatesMinhash]]): hands the
-    * pair plan to `f` and unpersists the collapsed frames when `f`
-    * returns or throws — no CacheManager entry outlives the call, so
-    * repeated incremental batches in a long-lived session never accumulate
-    * cached frames. `f` must CONSUME the DataFrame before returning; an
-    * escaped lazy plan would re-run the index scan + collapse per
-    * downstream action once the caches drop. This is the streaming
-    * dedup gates' operator (s1, s13): through
-    * [[graft.streaming.EventStream.landingSink]] each micro-batch lands
-    * inside `f`, and a redelivered batch recomputes the same pairs.
-    */
-  def withNearDuplicatesAgainstIndex[T](
-      index: DataFrame,
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      indexPreCollapsed: Boolean = false)(f: DataFrame => T): T = {
-    val (pairs, caches) = nearDuplicatesAgainstIndexPlan(
-      index, newDocs, idCol, textCol, threshold, numHashes, bands,
-      indexPreCollapsed)
-    try f(pairs)
-    finally caches.foreach(_.unpersist(blocking = false))
+    // indexPreCollapsed: the caller stores the COLLAPSED form as the
+    // snapshot artifact (collapseIndex -> parquet), so repeated batches
+    // (the streaming sink's cadence) skip the per-call re-aggregation
+    val gIndex = graft.Cached.persist(
+      if (indexPreCollapsed) index else collapseIndex(index))
+    val gBatch = graft.Cached.persist(collapseIndex(batch))
+
+    def exploded(ix: DataFrame, side: String): DataFrame = ix
+      .select(
+        col("gid").as(s"${side}_gid"),
+        col("nsh").as(s"${side}_nsh"),
+        explode(col("bands")).as("bb"))
+      .select(
+        col(s"${side}_gid"), col(s"${side}_nsh"),
+        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+
+    val candidates = exploded(gIndex, "corpus")
+      .join(exploded(gBatch, "new"), Seq("band", "bucket"))
+      .filter(
+        least(col("corpus_nsh"), col("new_nsh")).cast("double") >=
+          greatest(col("corpus_nsh"), col("new_nsh")) * threshold)
+      .select(col("corpus_gid"), col("new_gid"))
+      .distinct()
+
+    // verify once per group pair; members attach AFTER the threshold
+    // filter (to survivors) and expand by explode
+    candidates
+      .join(
+        gIndex.select(col("gid").as("corpus_gid"), col("shingles").as("sh_a")),
+        Seq("corpus_gid"))
+      .join(
+        gBatch.select(col("gid").as("new_gid"), col("shingles").as("sh_b")),
+        Seq("new_gid"))
+      .select(
+        col("corpus_gid"), col("new_gid"),
+        jaccard_sorted(col("sh_a"), col("sh_b")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+      .join(
+        gIndex.select(col("gid").as("corpus_gid"), col("members").as("ma")),
+        Seq("corpus_gid"))
+      .join(
+        gBatch.select(col("gid").as("new_gid"), col("members").as("mb")),
+        Seq("new_gid"))
+      .select(explode(col("ma")).as("corpus_id"), col("mb"), col("jaccard"))
+      .select(
+        col("corpus_id"), explode(col("mb")).as("new_id"), col("jaccard"))
   }
 
   /** Collapse a [[minhashIndex]] frame into unique-shingle-set GROUPS:
@@ -494,70 +444,6 @@ object Dedup {
       first(col("shingles")).as("shingles"),
       first(col("bands")).as("bands"))
     .drop("set_key")
-
-  private def nearDuplicatesAgainstIndexPlan(
-      index: DataFrame,
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double,
-      numHashes: Int,
-      bands: Int,
-      indexPreCollapsed: Boolean): (DataFrame, Seq[DataFrame]) = {
-    val batch = minhashIndex(newDocs, idCol, textCol, numHashes, bands)
-
-    def persistG(g: DataFrame): DataFrame =
-      g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def collapse(ix: DataFrame): DataFrame = persistG(collapseIndex(ix))
-
-    // indexPreCollapsed: the caller stores the COLLAPSED form as the
-    // snapshot artifact (collapseIndex -> parquet), so repeated batches
-    // (the streaming sink's cadence) skip the per-call re-aggregation
-    val gIndex =
-      if (indexPreCollapsed) persistG(index) else collapse(index)
-    val gBatch = collapse(batch)
-
-    def exploded(ix: DataFrame, side: String): DataFrame = ix
-      .select(
-        col("gid").as(s"${side}_gid"),
-        col("nsh").as(s"${side}_nsh"),
-        explode(col("bands")).as("bb"))
-      .select(
-        col(s"${side}_gid"), col(s"${side}_nsh"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-
-    val candidates = exploded(gIndex, "corpus")
-      .join(exploded(gBatch, "new"), Seq("band", "bucket"))
-      .filter(
-        least(col("corpus_nsh"), col("new_nsh")).cast("double") >=
-          greatest(col("corpus_nsh"), col("new_nsh")) * threshold)
-      .select(col("corpus_gid"), col("new_gid"))
-      .distinct()
-
-    // verify once per group pair; members attach AFTER the threshold
-    // filter (to survivors) and expand by explode
-    val pairs = candidates
-      .join(
-        gIndex.select(col("gid").as("corpus_gid"), col("shingles").as("sh_a")),
-        Seq("corpus_gid"))
-      .join(
-        gBatch.select(col("gid").as("new_gid"), col("shingles").as("sh_b")),
-        Seq("new_gid"))
-      .select(
-        col("corpus_gid"), col("new_gid"),
-        jaccard_sorted(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .join(
-        gIndex.select(col("gid").as("corpus_gid"), col("members").as("ma")),
-        Seq("corpus_gid"))
-      .join(
-        gBatch.select(col("gid").as("new_gid"), col("members").as("mb")),
-        Seq("new_gid"))
-      .select(explode(col("ma")).as("corpus_id"), col("mb"), col("jaccard"))
-      .select(
-        col("corpus_id"), explode(col("mb")).as("new_id"), col("jaccard"))
-    (pairs, Seq(gIndex, gBatch))
-  }
 
   // -------------------------------------------------------------- simhash
 
@@ -768,13 +654,14 @@ object Dedup {
     * large, Zipfian key space where the prefix filter bites.
     *
     * EAGER: the shingle-set frame is read by four stages (postings,
-    * probes, bitmap prune, verify), so it is persisted for the run and
-    * released in a finally once the (small — O(result pairs)) output is
-    * materialized via an eager `localCheckpoint`. Callers that re-read
-    * the result ([[dropContained]] reads it three times) get block reuse
-    * instead of re-running the prefix-join pipeline; the checkpoint
-    * blocks release via the ContextCleaner when the caller drops the
-    * result (same convention as [[Clusters.connectedComponents]]).
+    * probes, bitmap prune, verify), so it is cached for the run and
+    * released by a [[graft.Cached.scope]] once the (small — O(result
+    * pairs)) output is materialized via an eager `localCheckpoint`.
+    * Callers that re-read the result ([[dropContained]] reads it three
+    * times) get block reuse instead of re-running the prefix-join
+    * pipeline; the checkpoint blocks release via the ContextCleaner when
+    * the caller drops the result (same convention as
+    * [[Clusters.connectedComponents]]).
     */
   def containmentPairs(
       df: DataFrame,
@@ -782,20 +669,14 @@ object Dedup {
       textCol: String,
       threshold: Double,
       shingleFn: Column => Column = tokenSet,
-      bitmapWords: Int = 64): DataFrame = {
-    val (result, caches) =
-      containmentPairsPlan(df, idCol, textCol, threshold, shingleFn,
-        bitmapWords)
-    try result.localCheckpoint(true)
-    finally caches.foreach(_.unpersist(blocking = false))
-  }
+      bitmapWords: Int = 64): DataFrame =
+    graft.Cached.scope(containmentPairsPlan(df, idCol, textCol, threshold,
+      shingleFn, bitmapWords).localCheckpoint(true))
 
-  /** The lazy containment plan plus its persisted intermediates (the
-    * shingle frame and the df-ranked token view) — split out so
-    * [[containmentPairs]] can release the caches after materializing, and
-    * so the plan-shape spec can pin the REAL physical plan (the public
-    * method's executed plan is a checkpoint scan). Callers own
-    * unpersisting every frame in the returned seq.
+  /** The lazy containment plan (it caches the shingle frame and the
+    * df-ranked token view) — split out so the plan-shape spec and
+    * [[graft.Plans]] can pin the REAL physical plan (the public method's
+    * executed plan is a checkpoint scan).
     */
   private[graft] def containmentPairsPlan(
       df: DataFrame,
@@ -803,18 +684,18 @@ object Dedup {
       textCol: String,
       threshold: Double,
       shingleFn: Column => Column = tokenSet,
-      bitmapWords: Int = 64): (DataFrame, Seq[DataFrame]) = {
+      bitmapWords: Int = 64): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"containment threshold must be in (0, 1], got $threshold")
-    val sets = ensureParallelism(df.select(col(idCol), col(textCol)))
-      .select(
-        col(idCol).as("id"),
-        array_sort(shingleFn(col(textCol))).as("sh"))
-      .withColumn("nsh", size(col("sh")))
-      .filter(col("nsh") > 0)
-      .withColumn("bm",
-        graft.functions.BitmapFunctions.gram_bitmap(col("sh"), bitmapWords))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sets = graft.Cached.persist(
+      ensureParallelism(df.select(col(idCol), col(textCol)))
+        .select(
+          col(idCol).as("id"),
+          array_sort(shingleFn(col(textCol))).as("sh"))
+        .withColumn("nsh", size(col("sh")))
+        .filter(col("nsh") > 0)
+        .withColumn("bm",
+          graft.functions.BitmapFunctions.gram_bitmap(col("sh"), bitmapWords)))
 
     val toks = sets.select(col("id"), col("nsh"),
       explode(col("sh")).as("shingle"))
@@ -823,13 +704,12 @@ object Dedup {
     // total order (ascending df, shingle breaking ties) — shared by the
     // probe side (prefix) and the posting side (positional filter), so it
     // is computed and persisted once.
-    val ranked = toks
+    val ranked = graft.Cached.persist(toks
       .join(docFreq, Seq("shingle"))
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy("id").orderBy(col("df"), col("shingle"))))
-      .select(col("id"), col("nsh"), col("shingle"), col("rk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), col("nsh"), col("shingle"), col("rk")))
 
     // Probe prefix length is |A| − ceil(t·|A|) + 1, NOT floor((1−t)·|A|)+1:
     // both are equal in exact arithmetic, but the latter under-counts by
@@ -885,7 +765,7 @@ object Dedup {
         lit(threshold) * col("nsh_a"))
       .select(col("a"), col("b"))
 
-    val result = pruned
+    pruned
       .join(sets.select(col("id").as("a"), col("sh").as("sh_a"),
         col("nsh").as("nsh_a")), Seq("a"))
       .join(sets.select(col("id").as("b"), col("sh").as("sh_b")), Seq("b"))
@@ -897,7 +777,6 @@ object Dedup {
         col("a").as("id"),
         col("b").as("container_id"),
         (col("inter").cast("double") / col("nsh_a")).as("containment"))
-    (result, Seq(sets, ranked))
   }
 
   /** Drop documents subsumed by another document. A document drops iff it

@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** DoReMi — Domain Reweighting with Minimax Optimization (Xie et al.,
   * NeurIPS 2023): compute a domain-mixture weight vector for a grouped
@@ -96,33 +95,11 @@ object Doremi {
       eta: Double = 1.0,
       smoothing: Double = 1e-3,
       salt: String = "doremi"): DataFrame =
-    plan(docs, idCol, textCol, domainCol, n, addK, alphabetSize,
-      steps, eta, smoothing, salt)._1
-
-  /** [[domainWeights]] in a scope. Since the EG loop drives every
-    * consumer of the internal caches eagerly, [[plan]] releases them
-    * itself before returning — so the bare form already leaves nothing
-    * pinned and this wrapper adds no lifecycle work; it is kept for
-    * call-site symmetry with [[Dsir.withSelect]] and as the place a
-    * future lazy-output variant would re-own the persists.
-    */
-  def withDomainWeights[T](
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      domainCol: String,
-      n: Int = 3,
-      addK: Double = 0.5,
-      alphabetSize: Int = 64,
-      steps: Int = 3,
-      eta: Double = 1.0,
-      smoothing: Double = 1e-3,
-      salt: String = "doremi")(f: DataFrame => T): T = {
-    val (weights, persisted) = plan(docs, idCol, textCol, domainCol,
-      n, addK, alphabetSize, steps, eta, smoothing, salt)
-    try f(weights)
-    finally persisted.foreach(_.unpersist(blocking = false))
-  }
+    // every consumer of plan's per-doc cache runs eagerly inside the EG
+    // loop (the collects); the returned frame reads only `docs` and
+    // driver-built rows, so the scope releases the cache on return
+    graft.Cached.scope(plan(docs, idCol, textCol, domainCol, n, addK,
+      alphabetSize, steps, eta, smoothing, salt))
 
   /** Resample the corpus toward the computed mixture: keep each document
     * with probability `rate` of its domain, decided by the repo's pure
@@ -171,7 +148,7 @@ object Doremi {
       steps: Int,
       eta: Double,
       smoothing: Double,
-      salt: String): (DataFrame, Seq[DataFrame]) = {
+      salt: String): DataFrame = {
     require(n >= 2, s"order-$n model has no context; need n >= 2")
     require(steps >= 1, s"steps must be >= 1: $steps")
     require(addK > 0 && alphabetSize > 1, "bad smoothing parameters")
@@ -187,7 +164,7 @@ object Doremi {
     // grams (shorter than n) emit no row — they score under no model and
     // are excluded from the excess means, exactly as before.
     val nLocal = n
-    val docVec = docs
+    val docVec = graft.Cached.persist(docs
       .filter(col(textCol).isNotNull)
       .select(col(domainCol).as("_dom"), col(textCol).as("_txt"))
       .as[(String, String)]
@@ -216,8 +193,7 @@ object Doremi {
           }
         }
       }
-      .toDF("_dom", "grams", "cs")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .toDF("_dom", "grams", "cs"))
 
     // vocabulary-bounded INTEGER sufficient statistics (domain, gram,
     // count), aggregated in one pass and collected once — the previous
@@ -390,17 +366,10 @@ object Doremi {
         floor(col("rate") * 1048576L).cast("long"))
       .groupBy(col(domainCol))
       .agg(count(lit(1)).as("_nk"))
-    val weights = outDF
+    outDF
       .join(kept, Seq(domainCol), "left")
       .select(col(domainCol), col("n_docs"), col("share"), col("excess"),
         col("weight"), col("rate"),
         coalesce(col("_nk"), lit(0L)).as("n_kept"))
-
-    // every consumer of the persisted frame ran eagerly inside the EG
-    // loop (the collects above); the returned frame reads only `docs`
-    // and the driver-built rows — release the cache before returning
-    // so even the bare entry point leaves nothing pinned
-    docVec.unpersist(blocking = false)
-    (weights, Nil)
   }
 }

@@ -142,53 +142,17 @@ object Dsir {
       textCol: String,
       buckets: Int = 8192,
       k: Int = 500,
-      salt: String = "dsir"): DataFrame =
-    selectPlan(raw, target, idCol, textCol, buckets, k, salt)._1
-
-  /** [[select]] with the persist lifecycle OWNED: the per-(doc, bucket)
-    * count cache lives exactly as long as `f` runs over the selection
-    * frame, then is released — the scoped posture
-    * [[Dedup.withNearDuplicateComponents]] / [[Dedup
-    * .withNearDuplicatesAgainstIndex]] established, for long-lived
-    * sessions where repeated selections must not accumulate cached
-    * frames until LRU eviction. The bare [[select]] remains for the
-    * declare-then-clearCache cadence (Verify/Bench).
-    */
-  def withSelect[T](
-      raw: DataFrame,
-      target: DataFrame,
-      idCol: String,
-      textCol: String,
-      buckets: Int = 8192,
-      k: Int = 500,
-      salt: String = "dsir")(f: DataFrame => T): T = {
-    val (selected, rawCounts) =
-      selectPlan(raw, target, idCol, textCol, buckets, k, salt)
-    try f(selected)
-    finally rawCounts.unpersist(blocking = false)
-  }
-
-  private def selectPlan(
-      raw: DataFrame,
-      target: DataFrame,
-      idCol: String,
-      textCol: String,
-      buckets: Int,
-      k: Int,
-      salt: String): (DataFrame, DataFrame) = {
+      salt: String = "dsir"): DataFrame = {
     // The raw corpus is read TWICE (model fit + scoring), and tokenize +
     // md5 is the dominant cost — so reduce it once to per-(doc, bucket)
     // counts (map-side partial agg collapses gram multiplicity before the
     // shuffle) and persist THAT compact frame: the bucket model is a
     // cheap re-aggregation of it and scoring multiplies counts into the
     // broadcast log-ratios, so the text is scanned exactly once.
-    // Lifecycle: returned to the caller — [[withSelect]] unpersists after
-    // its body; the bare [[select]] leaves it to the session's
-    // clearCache() between jobs (Verify/Bench posture).
-    val rawCounts = hashedGramBuckets(raw, idCol, textCol, buckets, salt)
-      .groupBy(col(idCol), col("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rawCounts = graft.Cached.persist(
+      hashedGramBuckets(raw, idCol, textCol, buckets, salt)
+        .groupBy(col(idCol), col("bucket"))
+        .agg(count(lit(1)).as("cnt")))
     val targetGrams = hashedGramBuckets(target, idCol, textCol, buckets, salt)
     val lam = logRatiosFromCounts(
       targetGrams.groupBy("bucket").agg(count(lit(1)).as("ct")),
@@ -205,10 +169,9 @@ object Dsir {
       .limit(k)
     // rank the k survivors; the single-partition window is over k rows,
     // not the corpus — the global ordering above is a TakeOrdered.
-    val selected = scored.withColumn("rank",
+    scored.withColumn("rank",
         row_number().over(Window.orderBy(desc("score"), col(idCol))))
       .select(col(idCol), col("rank"), col("score"))
-    (selected, rawCounts)
   }
 
   // ------------------------------------------- model artifact lifecycle

@@ -52,27 +52,31 @@ object Fingerprint {
       w: Int = 8,
       minShared: Int = 2,
       maxDocsPerFp: Int = 1000,
-      portable: Boolean = true): DataFrame =
-    buildSpanCandidates(
-      df, idCol, textCol, k, w, minShared, maxDocsPerFp, portable)._1
-
-  /** Scoped form of [[spanCandidates]] that OWNS the persist lifecycle
-    * (same contract as [[Dedup.withNearDuplicatesMinhash]]): `f` must
-    * consume the frame before returning.
-    */
-  def withSpanCandidates[T](
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 30,
-      w: Int = 8,
-      minShared: Int = 2,
-      maxDocsPerFp: Int = 1000,
-      portable: Boolean = true)(f: DataFrame => T): T = {
-    val (pairs, cached) = buildSpanCandidates(
-      df, idCol, textCol, k, w, minShared, maxDocsPerFp, portable)
-    try f(pairs)
-    finally cached.unpersist()
+      portable: Boolean = true): DataFrame = {
+    require(minShared >= 1, s"minShared must be >= 1, got $minShared")
+    require(maxDocsPerFp >= 2, s"maxDocsPerFp must be >= 2, got $maxDocsPerFp")
+    // Cached: the exploded (id, fingerprint) frame is referenced by
+    // the stop-list aggregation AND both sides of the pair join — without
+    // the cache each reference re-scans the corpus and re-hashes every
+    // gram (the dominant cost), the same triple-evaluation hazard the
+    // minhash path documents. 16 bytes/row spills safely if it must.
+    val fp = graft.Cached.persist(Dedup.ensureParallelism(
+      df.select(col(idCol), col(textCol)))
+      .select(col(idCol).as("id"),
+        explode(fingerprints(col(textCol), k, w, portable)).as("f")))
+    // stop-fingerprint list: values carried by more docs than the cap.
+    // Tiny by construction (only the boilerplate outliers qualify), so it
+    // broadcasts and the cap costs one mergeable count plus an anti-join —
+    // the full explode is never windowed or re-shuffled.
+    val stop = fp.groupBy("f").agg(count(lit(1)).as("_n"))
+      .filter(col("_n") > maxDocsPerFp).select("f")
+    val kept = fp.join(broadcast(stop), Seq("f"), "left_anti")
+    kept.select(col("id").as("id_a"), col("f"))
+      .join(kept.select(col("id").as("id_b"), col("f")), Seq("f"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
   }
 
   /** Excise every character span that too many documents share — the
@@ -110,10 +114,9 @@ object Fingerprint {
     * and version-stable.
     *
     * EAGER ([[Dedup.containmentPairs]]'s convention): the result is
-    * materialized via `localCheckpoint` and the gram cache released in a
-    * finally. The output is corpus-sized, so at 100 TB prefer
-    * [[withExcisedSpans]], which streams the lazy plan straight into the
-    * caller's writer and still owns the cache lifecycle.
+    * materialized via `localCheckpoint` and the gram cache released by a
+    * [[graft.Cached.scope]]. The output is corpus-sized, and so is the
+    * checkpoint that holds it.
     *
     * `exact = true` (the oracle regime) counts distinct docs per gram
     * exactly; at corpus scale set it false for the mergeable
@@ -126,36 +129,13 @@ object Fingerprint {
       textCol: String,
       k: Int = 30,
       maxDocs: Int = 10,
-      exact: Boolean = true): DataFrame = {
-    val (result, cached) =
-      exciseSharedSpansPlan(df, idCol, textCol, k, maxDocs, exact)
-    try result.localCheckpoint(true)
-    finally cached.unpersist(blocking = false)
-  }
+      exact: Boolean = true): DataFrame =
+    graft.Cached.scope(exciseSharedSpansPlan(df, idCol, textCol, k, maxDocs,
+      exact).localCheckpoint(true))
 
-  /** Scoped form of [[exciseSharedSpans]] for corpus-scale outputs: `f`
-    * consumes the LAZY cleaned frame (typically `.write` straight to the
-    * lake — no corpus-sized checkpoint) while this owns the gram-frame
-    * persist lifecycle. `f` must consume the frame before returning.
-    */
-  def withExcisedSpans[T](
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 30,
-      maxDocs: Int = 10,
-      exact: Boolean = false)(f: DataFrame => T): T = {
-    val (result, cached) =
-      exciseSharedSpansPlan(df, idCol, textCol, k, maxDocs, exact)
-    try f(result)
-    finally cached.unpersist(blocking = false)
-  }
-
-  /** The lazy excision plan plus its persisted gram-position frame —
-    * split out so both public forms can release the cache, and so the
-    * plan-shape spec pins the REAL physical plan (the eager method's
-    * executed plan is a checkpoint scan). Callers own unpersisting the
-    * returned frame.
+  /** The lazy excision plan (it caches the gram-position frame) — split
+    * out so the plan-shape spec and [[graft.Plans]] pin the REAL physical
+    * plan (the eager method's executed plan is a checkpoint scan).
     */
   private[graft] def exciseSharedSpansPlan(
       df: DataFrame,
@@ -163,20 +143,19 @@ object Fingerprint {
       textCol: String,
       k: Int,
       maxDocs: Int,
-      exact: Boolean): (DataFrame, DataFrame) = {
+      exact: Boolean): DataFrame = {
     require(k >= 2, s"gram length k must be >= 2, got $k")
     require(maxDocs >= 1, s"maxDocs must be >= 1, got $maxDocs")
     val base = df.select(col(idCol), col(textCol).as("_text"))
     // every gram position: (id, i, hash) — linear in corpus chars; read by
-    // the hot aggregation AND the hit join, so hashed once and persisted
-    val pos = Dedup.ensureParallelism(base)
+    // the hot aggregation AND the hit join, so hashed once and cached
+    val pos = graft.Cached.persist(Dedup.ensureParallelism(base)
       .filter(col("_text").isNotNull && length(col("_text")) >= k)
       .select(col(idCol), col("_text"),
         explode(sequence(lit(1), length(col("_text")) - (k - 1))).as("_i"))
       .select(col(idCol), col("_i"),
         conv(substring(md5(expr(s"substring(_text, _i, $k)")), 1, 12),
-          16, 10).cast("long").as("_h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          16, 10).cast("long").as("_h")))
     val hot = pos.groupBy("_h")
       .agg((if (exact) count_distinct(col(idCol))
         else approx_count_distinct(col(idCol))).as("_nd"))
@@ -224,7 +203,7 @@ object Fingerprint {
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("_ord"), col("_piece")))),
         s => s.getField("_piece")), "").as("_clean"))
-    val result = base
+    base
       .join(rebuilt, Seq(idCol), "left")
       .join(cuts.select(col(idCol), col("_nsp"), col("_nch")),
         Seq(idCol), "left")
@@ -232,46 +211,5 @@ object Fingerprint {
         coalesce(col("_clean"), col("_text")).as("clean"),
         coalesce(col("_nsp"), lit(0L)).as("n_spans_removed"),
         coalesce(col("_nch"), lit(0L)).cast("long").as("n_chars_removed"))
-    (result, pos)
-  }
-
-  /** Returns (pair plan, the persisted fingerprint frame whose lifecycle
-    * the caller controls).
-    */
-  private def buildSpanCandidates(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      w: Int,
-      minShared: Int,
-      maxDocsPerFp: Int,
-      portable: Boolean): (DataFrame, DataFrame) = {
-    require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    require(maxDocsPerFp >= 2, s"maxDocsPerFp must be >= 2, got $maxDocsPerFp")
-    // Persisted: the exploded (id, fingerprint) frame is referenced by
-    // the stop-list aggregation AND both sides of the pair join — without
-    // persistence each reference re-scans the corpus and re-hashes every
-    // gram (the dominant cost), the same triple-evaluation hazard the
-    // minhash path documents. 16 bytes/row spills safely if it must.
-    val fp = Dedup.ensureParallelism(
-      df.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("id"),
-        explode(fingerprints(col(textCol), k, w, portable)).as("f"))
-      .persist()
-    // stop-fingerprint list: values carried by more docs than the cap.
-    // Tiny by construction (only the boilerplate outliers qualify), so it
-    // broadcasts and the cap costs one mergeable count plus an anti-join —
-    // the full explode is never windowed or re-shuffled.
-    val stop = fp.groupBy("f").agg(count(lit(1)).as("_n"))
-      .filter(col("_n") > maxDocsPerFp).select("f")
-    val kept = fp.join(broadcast(stop), Seq("f"), "left_anti")
-    val pairs = kept.select(col("id").as("id_a"), col("f"))
-      .join(kept.select(col("id").as("id_b"), col("f")), Seq("f"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-    (pairs, fp)
   }
 }

@@ -106,32 +106,31 @@ object QualityClassifier {
       l2: Double = 1e-6,
       countCap: Int = 3): Model = {
     require(dims >= 2 && epochs >= 1)
-    val rows = df
-      .select(labelCol.cast("double").as("y"),
-        // sentinel index `dims` = the bias slot: one occurrence per row
-        concat(featureIndices(textCol, dims, countCap), array(lit(dims)))
-          .as("idx"))
-      .rdd
-      // Null text tokenizes to a null idx array (concat propagates null);
-      // null labels are equally unusable. Drop such rows from the
-      // gradient AND from n — the pre-RDD epoch loop did the same
-      // implicitly (explode(null) contributed nothing). The skip lives
-      // HERE, not as a DataFrame filter on the alias: Catalyst pushes an
-      // isNotNull predicate below the projection by SUBSTITUTING the
-      // expression, so the whole tokenize+hash pipeline would run twice
-      // per row (measured: 2.2 s vs 1.0 s for the t16 extraction).
-      .flatMap { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) None
-        else {
-          val s = r.getSeq[Int](1)
-          val a = new Array[Int](s.length)
-          var i = 0
-          while (i < a.length) { a(i) = s(i); i += 1 }
-          Some((r.getDouble(0), a))
-        }
-      }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Cached.scope {
+      val rows = graft.Cached.persist(df
+        .select(labelCol.cast("double").as("y"),
+          // sentinel index `dims` = the bias slot: one occurrence per row
+          concat(featureIndices(textCol, dims, countCap), array(lit(dims)))
+            .as("idx"))
+        .rdd
+        // Null text tokenizes to a null idx array (concat propagates null);
+        // null labels are equally unusable. Drop such rows from the
+        // gradient AND from n — the pre-RDD epoch loop did the same
+        // implicitly (explode(null) contributed nothing). The skip lives
+        // HERE, not as a DataFrame filter on the alias: Catalyst pushes an
+        // isNotNull predicate below the projection by SUBSTITUTING the
+        // expression, so the whole tokenize+hash pipeline would run twice
+        // per row (measured: 2.2 s vs 1.0 s for the t16 extraction).
+        .flatMap { r =>
+          if (r.isNullAt(0) || r.isNullAt(1)) None
+          else {
+            val s = r.getSeq[Int](1)
+            val a = new Array[Int](s.length)
+            var i = 0
+            while (i < a.length) { a(i) = s(i); i += 1 }
+            Some((r.getDouble(0), a))
+          }
+        })
       val n = rows.count().toDouble
       require(n > 0, "train: empty input")
       var w = new Array[Double](dims)
@@ -168,7 +167,7 @@ object QualityClassifier {
         w = nw
       }
       Model(w.toSeq, b, dims, countCap)
-    } finally rows.unpersist(blocking = false)
+    }
   }
 
   /** Input plus `quality_prob` — P(good) under the model. A pure

@@ -1310,51 +1310,47 @@ object Similarity {
       .distinct.filter(np => np >= 1 && np <= nlist)
     require(points.nonEmpty, s"empty nprobe grid for nlist=$nlist")
 
-    val sample = queries
-      .orderBy(md5(col(idCol).cast("string")))
-      .limit(sampleQueries).cache()
-    val nSample = sample.count()
-    val exact = topKBruteForce(sample, corpus, idCol, vecCol, k)
-      .select(col("query_id"), col("neighbor_id")).cache()
-    val nExact = exact.count()
-    // the walk serves the SAME index once per grid point: a live
-    // buildIvfPqIndex plan would re-run the full snapshot encode per
-    // point (the s17/x13 parquet-artifact lesson, applied operator-side
-    // for callers that pass an unmaterialized index). Persisted for the
-    // walk only, released before returning — but only when THIS call
-    // added the cache entry: a caller that pre-cached its index keeps
-    // its entry (unpersisting it here would silently drop the caller's
-    // cache out from under its later reuse).
-    val callerCached =
-      index.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val idx =
-      if (callerCached) index
-      else index.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // every cache below is for the walk only: the scope releases it when
+    // the walk returns or throws (a caller that pre-cached its index
+    // keeps its entry)
+    graft.Cached.scope {
+      val sample = graft.Cached.persist(queries
+        .orderBy(md5(col(idCol).cast("string")))
+        .limit(sampleQueries))
+      val nSample = sample.count()
+      val exact = graft.Cached.persist(
+        topKBruteForce(sample, corpus, idCol, vecCol, k)
+          .select(col("query_id"), col("neighbor_id")))
+      val nExact = exact.count()
+      // the walk serves the SAME index once per grid point: a live
+      // buildIvfPqIndex plan would re-run the full snapshot encode per
+      // point (the s17/x13 parquet-artifact lesson, applied operator-side
+      // for callers that pass an unmaterialized index)
+      val idx = graft.Cached.persist(index)
 
-    def recallAt(nprobe: Int): Double =
-      if (nExact == 0) 1.0
-      else {
-        val served = searchIvfPqIndex(sample, idx, corpus, idCol, vecCol,
-          k, coarse, pq, nprobe, rescoreFactor)
-          .select(col("query_id"), col("neighbor_id")).distinct()
-        val hits = exact.join(served, Seq("query_id", "neighbor_id"))
-          .count()
-        hits.toDouble / nExact
+      def recallAt(nprobe: Int): Double =
+        if (nExact == 0) 1.0
+        else {
+          val served = searchIvfPqIndex(sample, idx, corpus, idCol, vecCol,
+            k, coarse, pq, nprobe, rescoreFactor)
+            .select(col("query_id"), col("neighbor_id")).distinct()
+          val hits = exact.join(served, Seq("query_id", "neighbor_id"))
+            .count()
+          hits.toDouble / nExact
+        }
+
+      var curve = Vector.empty[(Int, Double)]
+      val it = points.iterator
+      var chosen = points.last
+      var done = false
+      while (it.hasNext && !done) {
+        val np = it.next()
+        val r = recallAt(np)
+        curve :+= (np, r)
+        if (r >= slo) { chosen = np; done = true }
       }
-
-    var curve = Vector.empty[(Int, Double)]
-    val it = points.iterator
-    var chosen = points.last
-    var done = false
-    while (it.hasNext && !done) {
-      val np = it.next()
-      val r = recallAt(np)
-      curve :+= (np, r)
-      if (r >= slo) { chosen = np; done = true }
+      NprobeCalibration(chosen, curve, nSample, nExact)
     }
-    sample.unpersist(); exact.unpersist()
-    if (!callerCached) idx.unpersist(blocking = false)
-    NprobeCalibration(chosen, curve, nSample, nExact)
   }
 
   /** Sentinel: infer dimensionality from the first row (one tiny job). */

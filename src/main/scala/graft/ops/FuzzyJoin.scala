@@ -75,43 +75,21 @@ object FuzzyJoin {
     * verify per partner GROUP instead of per row pair, and its own m²/2
     * intra pairs are emitted at dist 0 without touching the hash join at
     * all (the same lever as `Dedup`'s unique-token-set collapse; members
-    * expand by explode after verification). The group table is persisted
-    * (it feeds the hash join, the verify attach, and the expansion) with
-    * the CacheManager lifecycle — callers issue
-    * `spark.catalog.clearCache()` between jobs, as Verify/Bench do;
-    * long-lived sessions should use [[withSelfJoin]], which unpersists
-    * it when the callback returns.
+    * expand by explode after verification). The group table is cached
+    * ([[graft.Cached]]): it feeds the hash join, the verify attach, and
+    * the expansion.
     */
   def selfJoin(
-      df: DataFrame, idCol: String, keyCol: String, maxDist: Int): DataFrame =
-    selfJoinPlan(df, idCol, keyCol, maxDist)._1
-
-  /** Scoped form of [[selfJoin]] that OWNS the persist lifecycle: the
-    * cached key-group table is unpersisted when `f` returns or throws —
-    * no CacheManager entry outlives the call. `f` must CONSUME the
-    * DataFrame (collect/write/count) before returning; an escaped lazy
-    * plan would re-run the group aggregation per downstream action once
-    * the cache drops.
-    */
-  def withSelfJoin[T](
-      df: DataFrame, idCol: String, keyCol: String, maxDist: Int)(
-      f: DataFrame => T): T = {
-    val (pairs, groups) = selfJoinPlan(df, idCol, keyCol, maxDist)
-    try f(pairs)
-    finally groups.unpersist(blocking = false)
-  }
-
-  private def selfJoinPlan(
       df: DataFrame, idCol: String, keyCol: String, maxDist: Int)
-      : (DataFrame, DataFrame) = {
+      : DataFrame = {
     require(maxDist >= 1 && maxDist <= 2,
       s"fuzzy join supports maxDist 1..2, got $maxDist")
-    val groups = df
+    val groups = graft.Cached.persist(df
       .select(col(idCol).as("_id"), col(keyCol).as("_k"))
       .where(col("_k").isNotNull)
       .groupBy(col("_k"))
-      .agg(min(col("_id")).as("_gid"), collect_list(col("_id")).as("_members"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(min(col("_id")).as("_gid"),
+        collect_list(col("_id")).as("_members")))
 
     val v = groups.select(col("_gid"),
       explode(variantHashes(col("_k"), maxDist)).as("_vh"))
@@ -145,6 +123,6 @@ object FuzzyJoin {
       .select(col("a").as("id_a"), col("b").as("id_b"),
         lit(0).cast("int").as("dist"))
 
-    (cross.unionByName(intra), groups)
+    cross.unionByName(intra)
   }
 }

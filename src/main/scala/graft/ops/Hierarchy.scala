@@ -43,13 +43,12 @@ object Hierarchy {
     // upward order; depth = trail length when done.
     val idSql = df.schema(idCol).dataType.sql
     val isRoot = col(parentCol).isNull || col(parentCol) === col(idCol)
-    var jump = df.select(
+    var jump = graft.Cached.persist(df.select(
       col(idCol).as("id"),
       when(isRoot, col(idCol)).otherwise(col(parentCol)).as("anc"),
       when(isRoot, array().cast(s"array<$idSql>"))
         .otherwise(array(col(parentCol))).as("trail"),
-      isRoot.as("done"))
-      .persist()
+      isRoot.as("done")))
     jump.count()
 
     // the full jump table doubles each round; nodes already done pass
@@ -62,16 +61,15 @@ object Hierarchy {
     while (remaining > 0 && round < maxRounds) {
       val a = jump.select(col("id").as("a_id"), col("anc").as("a_anc"),
         col("trail").as("a_trail"), col("done").as("a_done"))
-      val next = jump.join(a, col("anc") === col("a_id"), "left")
-        .select(col("id"),
+      val next = graft.Cached.persist(
+        jump.join(a, col("anc") === col("a_id"), "left").select(col("id"),
           when(col("done"), col("anc"))
             .otherwise(coalesce(col("a_anc"), col("anc"))).as("anc"),
           when(col("done"), col("trail"))
             .otherwise(concat(col("trail"),
               coalesce(col("a_trail"), array().cast(s"array<$idSql>"))))
             .as("trail"),
-          (col("done") || coalesce(col("a_done"), lit(true))).as("done"))
-        .persist()
+          (col("done") || coalesce(col("a_done"), lit(true))).as("done")))
       next.count()
       jump.unpersist()
       jump = next
@@ -83,12 +81,10 @@ object Hierarchy {
       s"Hierarchy.flatten: $leftover nodes unresolved after $maxRounds " +
         "doublings - parent cycle or depth > 2^maxRounds")
 
-    // Lifecycle: the FINAL round's persisted jump table backs the
-    // returned (lazy) projection, so it stays cached until the session
-    // clears it — `spark.catalog.clearCache()` between jobs (Verify/
-    // Bench do) or dropping the result and letting the ContextCleaner
-    // collect it. Eagerly materializing here would double-buffer a table
-    // as large as the input for callers that only scan the result once.
+    // The FINAL round's cached jump table backs the returned (lazy)
+    // projection ([[graft.Cached]] decides when it goes). Eagerly
+    // materializing here would double-buffer a table as large as the
+    // input for callers that only scan the result once.
     jump.select(
       col("id"),
       col("anc").as("root_id"),

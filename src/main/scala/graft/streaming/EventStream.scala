@@ -153,7 +153,7 @@ object EventStream {
     * stream side cannot collapse its own identical sets (a stateless
     * plan has no groupBy), so every member of an exact-dup batch row
     * verifies against every colliding group × band — use
-    * [[graft.ext.Dedup.withNearDuplicatesAgainstIndex]] through
+    * [[graft.ext.Dedup.nearDuplicatesAgainstIndex]] through
     * [[landingSink]] instead, which runs the FULL batch plan (both-side
     * collapse, distinct group candidates, one verify per group pair) per
     * micro-batch (measured 5× faster on the sf0.1 near-clique).
@@ -624,15 +624,16 @@ object EventStream {
   }
 
   /** The landing sink: each micro-batch goes through `gate`, which runs
-    * the batch's operator and hands its output to `land` — call it once,
-    * inside any loan the operator holds (a scoped operator such as
-    * [[graft.ext.Dedup.withNearDuplicatesAgainstIndex]] releases its
-    * caches only after the write). The gates this serves — dedup, near-dup
-    * pairs, perplexity, mixture, decontamination, DSIR scores, ANN serving
-    * (s1–s4, s13, s16, s17) — share one cadence: their model or index is
-    * fit offline once per snapshot and read back as an artifact, and each
-    * micro-batch is gated against it with no state store, because the
-    * verdict on a row depends only on that row and the fixed artifact.
+    * the batch's operator and hands its output to `land` — call it once.
+    * The whole gate runs in one [[graft.Cached.scope]], so whatever the
+    * operator caches (the near-dup gate's collapsed frames) is released
+    * after the write and never accumulates across triggers. The gates
+    * this serves — dedup, near-dup pairs, perplexity, mixture,
+    * decontamination, DSIR scores, ANN serving (s1–s4, s13, s16, s17) —
+    * share one cadence: their model or index is fit offline once per
+    * snapshot and read back as an artifact, and each micro-batch is gated
+    * against it with no state store, because the verdict on a row depends
+    * only on that row and the fixed artifact.
     *
     * Delivery: batch `batchId`'s rows land under `outPath/batch=<batchId>`
     * in overwrite mode. foreachBatch is at-least-once — after a crash
@@ -655,7 +656,8 @@ object EventStream {
   /** One landing-sink batch (testable redelivery unit). */
   private[graft] def landBatch(batch: DataFrame, batchId: Long, outPath: String)(
       gate: (DataFrame, DataFrame => Unit) => Unit): Unit =
-    gate(batch, _.write.mode("overwrite").parquet(s"$outPath/batch=$batchId"))
+    graft.Cached.scope(gate(batch,
+      _.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")))
 
   /** Streaming materialized summary view: fold each micro-batch into a
     * parquet-backed [[graft.pipeline.IncrementalAgg]] summary table — the

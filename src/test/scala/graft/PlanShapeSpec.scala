@@ -170,11 +170,11 @@ class PlanShapeSpec extends SparkSpec {
   test("x11_containment: no cartesian, <=4 runtime shuffles, " +
       ">=1 broadcast joins") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val (lazyPairs, caches) = graft.ext.Dedup.containmentPairsPlan(
-      docs, "doc_id", "text", 0.8,
-      shingleFn = graft.ext.Shingles.charNGrams(_, 8))
-    try {
-      val df = lazyPairs.orderBy("id", "container_id")
+    Cached.scope {
+      val df = graft.ext.Dedup.containmentPairsPlan(
+          docs, "doc_id", "text", 0.8,
+          shingleFn = graft.ext.Shingles.charNGrams(_, 8))
+        .orderBy("id", "container_id")
       val (sh, bc, cart) = treeCounts(df.queryExecution.executedPlan)
       withClue(s"shuffles=$sh broadcasts=$bc cartesian=$cart\n" +
           df.queryExecution.executedPlan.toString
@@ -183,7 +183,7 @@ class PlanShapeSpec extends SparkSpec {
         sh should be <= 4
         bc should be >= 1
       }
-    } finally caches.foreach(_.unpersist(blocking = false))
+    }
   }
   // PCA covariance: THE contract — the moments aggregate's map-side
   // partial means NO hash/range exchange anywhere; rows never shuffle
@@ -363,9 +363,9 @@ class PlanShapeSpec extends SparkSpec {
   test("q91_span_excise (real plan): no cartesian, one gram pass, " +
       "<= 3 corpus scans") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val (lazyPlan, pos) = graft.ext.Fingerprint.exciseSharedSpansPlan(
-      docs, "doc_id", "text", k = 15, maxDocs = 10, exact = true)
-    try {
+    Cached.scope {
+      val lazyPlan = graft.ext.Fingerprint.exciseSharedSpansPlan(
+        docs, "doc_id", "text", k = 15, maxDocs = 10, exact = true)
       val p = lazyPlan.queryExecution.executedPlan.toString
       val (sh, _, cart) = treeCounts(lazyPlan.queryExecution.executedPlan)
       withClue(s"shuffles=$sh cartesian=$cart\n" +
@@ -380,7 +380,7 @@ class PlanShapeSpec extends SparkSpec {
         // cache-build plan re-displayed per reference, not an execution
         count(p, """FileScan parquet [^\n]*DataFilters: \[\]""") should be <= 3
       }
-    } finally pos.unpersist(blocking = false)
+    }
   }
 
   // the full q90 pipeline (hourly agg -> decompose -> rounded output):

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Cached, SparkSpec}
 
 class ClustersSpec extends SparkSpec {
 
@@ -129,10 +129,10 @@ class ClustersSpec extends SparkSpec {
       50L -> "completely unrelated content about distributed consensus protocols"
     ).toDF("doc_id", "text")
 
-    val docLevel = Dedup.withNearDuplicatesMinhash(
-      docs, "doc_id", "text", threshold = 0.5,
-      numHashes = 128, bands = 32) { pairs =>
-      Clusters.connectedComponents(pairs, "id_a", "id_b")
+    val docLevel = Cached.scope {
+      Clusters.connectedComponents(Dedup.nearDuplicatesMinhash(
+          docs, "doc_id", "text", threshold = 0.5,
+          numHashes = 128, bands = 32), "id_a", "id_b")
         .as[(Long, Long)].collect().toMap
     }
     val groupLevel = Dedup.nearDuplicateComponents(
@@ -164,10 +164,10 @@ class ClustersSpec extends SparkSpec {
       (i, mutated.mkString(" "))
     }.toDF("doc_id", "text")
 
-    val docLevel = Dedup.withNearDuplicatesMinhash(
-      docs, "doc_id", "text", threshold = 0.7,
-      numHashes = 128, bands = 32) { pairs =>
-      Clusters.connectedComponents(pairs, "id_a", "id_b")
+    val docLevel = Cached.scope {
+      Clusters.connectedComponents(Dedup.nearDuplicatesMinhash(
+          docs, "doc_id", "text", threshold = 0.7,
+          numHashes = 128, bands = 32), "id_a", "id_b")
         .as[(Long, Long)].collect().toMap
     }
     val groupLevel = Dedup.nearDuplicateComponents(
@@ -182,8 +182,9 @@ class ClustersSpec extends SparkSpec {
     val docs = (0L until 40L)
       .map(i => (i, if (i % 4 == 0) s"shared shared shared token doc" else s"unique text number $i with more words"))
       .toDF("doc_id", "text")
-    val direct = Dedup.withNearDuplicatesMinhash(
-      docs, "doc_id", "text", threshold = 0.8) { pairs =>
+    val direct = Cached.scope {
+      val pairs =
+        Dedup.nearDuplicatesMinhash(docs, "doc_id", "text", threshold = 0.8)
       Curation.leakageSafeSplit(docs, "doc_id", pairs,
         Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "s")
         .select("doc_id", "split").as[(Long, String)].collect().toMap

@@ -1,8 +1,9 @@
 package graft.ext
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-import graft.SparkSpec
+import graft.{Cached, SparkSpec}
 import graft.ext.Shingles._
 
 class DedupSpec extends SparkSpec {
@@ -52,34 +53,34 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("withNearDuplicatesMinhash leaves no cache entry behind, twice over") {
+  test("Cached.scope: nearDuplicatesMinhash leaves no cache entry, twice over") {
     import spark.implicits._
     // earlier tests use the unscoped form, whose cache is caller-managed
     spark.catalog.clearCache()
     val cm = spark.sharedState.cacheManager
     (1 to 2).foreach { _ =>
-      val pairs = Dedup.withNearDuplicatesMinhash(
-        df, "doc_id", "text", threshold = 0.5) { p =>
-        p.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      val pairs = Cached.scope {
+        Dedup.nearDuplicatesMinhash(df, "doc_id", "text", threshold = 0.5)
+          .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       }
       assert(pairs.contains((1L, 2L)))
       assert(cm.isEmpty, "cache entry outlived the scoped dedup call")
     }
   }
 
-  test("withNearDuplicatesMinhash unpersists when the body throws") {
+  test("Cached.scope: nearDuplicatesMinhash releases when the body throws") {
     spark.catalog.clearCache()
     val cm = spark.sharedState.cacheManager
     intercept[RuntimeException] {
-      Dedup.withNearDuplicatesMinhash(df, "doc_id", "text", 0.5) { p =>
-        p.count()
+      Cached.scope {
+        Dedup.nearDuplicatesMinhash(df, "doc_id", "text", 0.5).count()
         throw new RuntimeException("boom")
       }
     }
     assert(cm.isEmpty)
   }
 
-  test("withNearDuplicatesAgainstIndex unpersists both collapsed frames") {
+  test("Cached.scope: nearDuplicatesAgainstIndex releases both collapsed frames") {
     import spark.implicits._
     spark.catalog.clearCache()
     val cm = spark.sharedState.cacheManager
@@ -89,28 +90,51 @@ class DedupSpec extends SparkSpec {
       (8L, "unrelated content on columnar storage formats and shuffle services"))
       .toDF("doc_id", "text")
     val idx = Dedup.minhashIndex(corpus, "doc_id", "text")
-    val pairs = Dedup.withNearDuplicatesAgainstIndex(
-      idx, batch, "doc_id", "text", threshold = 0.5) { p =>
-      p.select("corpus_id", "new_id").as[(Long, Long)].collect().toSet
+    val pairs = Cached.scope {
+      Dedup.nearDuplicatesAgainstIndex(idx, batch, "doc_id", "text",
+          threshold = 0.5)
+        .select("corpus_id", "new_id").as[(Long, Long)].collect().toSet
     }
     assert(pairs.contains((1L, 6L)))
     assert(cm.isEmpty, "a collapsed frame outlived the scoped call")
     intercept[RuntimeException] {
-      Dedup.withNearDuplicatesAgainstIndex(
-        idx, batch, "doc_id", "text", 0.5) { p =>
-        p.count(); throw new RuntimeException("boom")
+      Cached.scope {
+        Dedup.nearDuplicatesAgainstIndex(idx, batch, "doc_id", "text", 0.5)
+          .count()
+        throw new RuntimeException("boom")
       }
     }
     assert(cm.isEmpty)
   }
 
-  test("withNearDuplicateComponents unpersists the group table") {
+  test("Cached.scope: a caller-cached index survives the against-index plan") {
+    import spark.implicits._
+    spark.catalog.clearCache()
+    val corpus = df.filter(col("doc_id") <= 3)
+    val batch = Seq(
+      (6L, "the quick brown fox jumps over the lazy dog near the river bank today"))
+      .toDF("doc_id", "text")
+    val index =
+      Dedup.collapseIndex(Dedup.minhashIndex(corpus, "doc_id", "text")).cache()
+    index.count()
+    val pairs = Cached.scope {
+      Dedup.nearDuplicatesAgainstIndex(index, batch, "doc_id", "text",
+          threshold = 0.5, indexPreCollapsed = true)
+        .select("corpus_id", "new_id").as[(Long, Long)].collect().toSet
+    }
+    assert(pairs.contains((1L, 6L)))
+    assert(index.storageLevel != StorageLevel.NONE,
+      "the scope released the caller's own index cache")
+    index.unpersist(blocking = true)
+  }
+
+  test("Cached.scope: nearDuplicateComponents releases the group table") {
     import spark.implicits._
     spark.catalog.clearCache()
     val cm = spark.sharedState.cacheManager
-    val clusters = Dedup.withNearDuplicateComponents(
-      df, "doc_id", "text", threshold = 0.5) { c =>
-      c.as[(Long, Long)].collect().toMap
+    val clusters = Cached.scope {
+      Dedup.nearDuplicateComponents(df, "doc_id", "text", threshold = 0.5)
+        .as[(Long, Long)].collect().toMap
     }
     assert(clusters(1L) === clusters(2L)) // exact set-dups share a cluster
     assert(cm.isEmpty, "the group table outlived the scoped call")

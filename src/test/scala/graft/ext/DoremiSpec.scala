@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Cached, SparkSpec}
 
 class DoremiSpec extends SparkSpec {
 
@@ -93,22 +93,23 @@ class DoremiSpec extends SparkSpec {
     assert(shuffled === base)
   }
 
-  test("withDomainWeights matches the bare form and releases caches") {
+  test("Cached.scope: domainWeights matches the bare form and releases caches") {
     spark.catalog.clearCache()
     val cm = spark.sharedState.cacheManager
     val bare = Doremi.domainWeights(corpus, "doc_id", "text", "source",
       addK = 0.01, salt = "spec").orderBy("source").collect().toSeq
     spark.catalog.clearCache() // the bare form's cache is caller-managed
-    val scoped = Doremi.withDomainWeights(corpus, "doc_id", "text",
-      "source", addK = 0.01, salt = "spec") { w =>
-      w.orderBy("source").collect().toSeq
+    val scoped = Cached.scope {
+      Doremi.domainWeights(corpus, "doc_id", "text", "source", addK = 0.01,
+        salt = "spec").orderBy("source").collect().toSeq
     }
     assert(scoped === bare)
     assert(cm.isEmpty, "doremi caches outlived the scoped call")
     intercept[RuntimeException] {
-      Doremi.withDomainWeights(corpus, "doc_id", "text", "source",
-        addK = 0.01, salt = "spec") { w =>
-        w.count(); throw new RuntimeException("boom")
+      Cached.scope {
+        Doremi.domainWeights(corpus, "doc_id", "text", "source",
+          addK = 0.01, salt = "spec").count()
+        throw new RuntimeException("boom")
       }
     }
     assert(cm.isEmpty)

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Cached, SparkSpec}
 
 class DsirSpec extends SparkSpec {
 
@@ -72,7 +72,7 @@ class DsirSpec extends SparkSpec {
       s"expected math-flavoured docs to dominate, got ${ids.mkString(",")}")
   }
 
-  test("withSelect matches select and unpersists the count cache") {
+  test("Cached.scope: select matches the bare form and releases the count cache") {
     import spark.implicits._
     spark.catalog.clearCache()
     val cm = spark.sharedState.cacheManager
@@ -81,15 +81,17 @@ class DsirSpec extends SparkSpec {
     val bare = Dsir.select(raw, target, "doc_id", "text",
       buckets = 512, k = 8).as[(Long, Int, Double)].collect().toSeq
     spark.catalog.clearCache() // the bare form's cache is caller-managed
-    val scoped = Dsir.withSelect(raw, target, "doc_id", "text",
-      buckets = 512, k = 8) { sel =>
-      sel.as[(Long, Int, Double)].collect().toSeq
+    val scoped = Cached.scope {
+      Dsir.select(raw, target, "doc_id", "text", buckets = 512, k = 8)
+        .as[(Long, Int, Double)].collect().toSeq
     }
     assert(scoped === bare)
     assert(cm.isEmpty, "rawCounts cache outlived the scoped selection")
     intercept[RuntimeException] {
-      Dsir.withSelect(raw, target, "doc_id", "text", buckets = 512, k = 8) {
-        sel => sel.count(); throw new RuntimeException("boom")
+      Cached.scope {
+        Dsir.select(raw, target, "doc_id", "text", buckets = 512, k = 8)
+          .count()
+        throw new RuntimeException("boom")
       }
     }
     assert(cm.isEmpty)

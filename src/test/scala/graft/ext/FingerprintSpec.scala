@@ -4,7 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Cached, SparkSpec}
 import graft.functions.Winnow
 
 class FingerprintSpec extends SparkSpec {
@@ -222,7 +222,7 @@ class FingerprintSpec extends SparkSpec {
     out(10L) shouldBe (("", 1L, 32L))
   }
 
-  test("withSpanCandidates releases the fingerprint cache, even on throw") {
+  test("Cached.scope: spanCandidates releases the fingerprint cache, even on throw") {
     // one-sided: earlier tests' localCheckpoint blocks release
     // ASYNCHRONOUSLY (ContextCleaner), so the global count may shrink
     // while this test runs — a leak from THIS call can only show as
@@ -230,12 +230,14 @@ class FingerprintSpec extends SparkSpec {
     def cachedCount() = spark.sparkContext.getPersistentRDDs.size
     val before = cachedCount()
     val df = Seq((1L, "abcdefghijkl"), (2L, "abcdefghijkl")).toDF("id", "t")
-    Fingerprint.withSpanCandidates(df, "id", "t", k = 5, w = 3) { p =>
-      p.count() shouldBe 1L
+    Cached.scope {
+      Fingerprint.spanCandidates(df, "id", "t", k = 5, w = 3)
+        .count() shouldBe 1L
     }
     cachedCount() should be <= before
     intercept[RuntimeException] {
-      Fingerprint.withSpanCandidates(df, "id", "t") { _ =>
+      Cached.scope {
+        Fingerprint.spanCandidates(df, "id", "t")
         throw new RuntimeException("boom")
       }
     }

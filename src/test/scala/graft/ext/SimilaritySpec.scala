@@ -680,4 +680,32 @@ class SimilaritySpec extends SparkSpec {
       starved.curve.size shouldBe 2
     }
   }
+
+  test("calibrateNprobe: a grid point that throws leaves no cache entry") {
+    spark.catalog.clearCache()
+    val corpus = clusteredCorpus(8, 16, 0.4f)
+    val coarse = Similarity.trainCentroids(
+      corpus, "vec_id", "embedding", nlist = 8, iterations = 5,
+      sampleSize = 1024, seed = 42L)
+    val pq = Similarity.trainPq(
+      corpus, "vec_id", "embedding", m = 2, ksub = 4,
+      iterations = 3, sampleSize = 1024, seed = 7L)
+    // the index is read only by the walk, after the sample and its exact
+    // neighbours are cached: serving grid point 1 throws
+    val boom = udf((c: Int) => {
+      if (c >= 0) throw new IllegalStateException("boom"); c
+    })
+    val index = Similarity.buildIvfPqIndex(
+        corpus, "vec_id", "embedding", coarse, pq)
+      .withColumn("cell", boom(col("cell").cast("int")))
+    val queries = corpus.filter(col("vec_id") % 100 < 2)
+    intercept[Exception] {
+      Similarity.calibrateNprobe(
+        queries, index, corpus, "vec_id", "embedding", k = 3,
+        coarse = coarse, pq = pq, slo = 0.9, sampleQueries = 16,
+        rescoreFactor = 8, grid = Seq(1))
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the walk's caches outlived a throwing grid point")
+  }
 }

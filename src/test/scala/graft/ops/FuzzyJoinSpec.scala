@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Cached, SparkSpec}
 
 class FuzzyJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -36,17 +36,19 @@ class FuzzyJoinSpec extends SparkSpec {
     FuzzyJoin.selfJoin(names, "id", "name", d)
       .as[(Long, Long, Int)].collect().toSeq.sorted
 
-  test("withSelfJoin matches selfJoin and leaves no cache entry behind") {
+  test("Cached.scope: selfJoin matches the bare form and leaves no cache entry") {
     spark.catalog.clearCache()
     val cm = spark.sharedState.cacheManager
-    val scoped = FuzzyJoin.withSelfJoin(names, "id", "name", 1) { p =>
-      p.as[(Long, Long, Int)].collect().toSeq.sorted
+    val scoped = Cached.scope {
+      FuzzyJoin.selfJoin(names, "id", "name", 1)
+        .as[(Long, Long, Int)].collect().toSeq.sorted
     }
     scoped shouldBe naivePairs(1)
     assert(cm.isEmpty, "the key-group table outlived the scoped call")
     intercept[RuntimeException] {
-      FuzzyJoin.withSelfJoin(names, "id", "name", 1) { p =>
-        p.count(); throw new RuntimeException("boom")
+      Cached.scope {
+        FuzzyJoin.selfJoin(names, "id", "name", 1).count()
+        throw new RuntimeException("boom")
       }
     }
     assert(cm.isEmpty)

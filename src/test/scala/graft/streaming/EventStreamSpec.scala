@@ -82,7 +82,7 @@ class EventStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("nearDupPairsSink: per-batch batch-plan pairs, exact-dup expansion, distinct") {
+  test("s13 near-dup pairs (Dedup.nearDuplicatesAgainstIndex): per-batch batch-plan pairs, exact-dup expansion, distinct") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val corpus = Seq(
@@ -97,9 +97,9 @@ class EventStreamSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = EventStream.landingSink(input.toDF().toDF("doc_id", "text"),
         s"$dir/out", s"$dir/ckpt") { (batch, land) =>
-      graft.ext.Dedup.withNearDuplicatesAgainstIndex(index, batch, "doc_id",
+      land(graft.ext.Dedup.nearDuplicatesAgainstIndex(index, batch, "doc_id",
         "text", threshold = 0.5, numHashes = 128, bands = 32,
-        indexPreCollapsed = true)(land)
+        indexPreCollapsed = true))
     }.start()
     try {
       input.addData(
@@ -672,7 +672,7 @@ class EventStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("annServeSink: streamed batches reproduce the batch index search") {
+  test("s17 ANN serving (Similarity.searchIvfPqIndex): streamed batches reproduce the batch index search") {
     import graft.ext.{Clustering, Similarity}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -724,7 +724,7 @@ class EventStreamSpec extends SparkSpec {
     got shouldBe expected
   }
 
-  test("dsirScoreSink: streamed batches reproduce the batch model scores") {
+  test("s16 DSIR scores (Dsir.scoreWithModel): streamed batches reproduce the batch model scores") {
     import graft.ext.Dsir
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -766,7 +766,7 @@ class EventStreamSpec extends SparkSpec {
     got shouldBe expected
   }
 
-  test("lmGateSink: streamed gate keeps exactly the batch filter's survivors") {
+  test("s2 perplexity gate (LanguageModel.filterByPerplexity): streamed gate keeps exactly the batch filter's survivors") {
     import graft.ext.LanguageModel
     import org.apache.spark.sql.functions.col
     import spark.implicits._
@@ -812,7 +812,7 @@ class EventStreamSpec extends SparkSpec {
     got.length shouldBe expected.size // each survivor landed exactly once
   }
 
-  test("mixtureGateSink: streamed gate equals the batch resample") {
+  test("s3 mixture gate (Doremi.resample): streamed gate equals the batch resample") {
     import graft.ext.Doremi
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -860,7 +860,7 @@ class EventStreamSpec extends SparkSpec {
     got.length shouldBe expected.size
   }
 
-  test("dedupGateSink: streamed gate equals the batch dedup-vs-index") {
+  test("s1 near-dup gate (Dedup.nearDuplicatesAgainstIndex): streamed gate equals the batch dedup-vs-index") {
     import graft.ext.Dedup
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -894,11 +894,10 @@ class EventStreamSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = EventStream.landingSink(
         input.toDF().toDF("doc_id", "text"), outDir, ckpt) { (batch, land) =>
-      Dedup.withNearDuplicatesAgainstIndex(index, batch, "doc_id", "text",
-        threshold = 0.8) { pairs =>
-        land(batch.join(pairs.select(col("new_id").as("doc_id")),
-          Seq("doc_id"), "left_anti"))
-      }
+      val pairs = Dedup.nearDuplicatesAgainstIndex(index, batch, "doc_id",
+        "text", threshold = 0.8)
+      land(batch.join(pairs.select(col("new_id").as("doc_id")),
+        Seq("doc_id"), "left_anti"))
     }.start()
     try {
       input.addData(crawlAll.take(5): _*)
@@ -913,7 +912,7 @@ class EventStreamSpec extends SparkSpec {
     got.length shouldBe expected.size // each survivor landed exactly once
   }
 
-  test("decontamGateSink: streamed gate equals the batch decontamination") {
+  test("s4 decontamination gate (Curation.semanticDecontaminate): streamed gate equals the batch decontamination") {
     import graft.ext.{Curation, Similarity}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -17,13 +17,17 @@ import graft.{Sessions, SparkEntry, SparkSpec}
   *  - s6's sessionization, s9's funnel and s10's transitions
   *    (flatMapGroupsWithState with event-time timeouts),
   *  - s14's `dropDuplicatesWithinWatermark` (dedup state keyed on the
-  *    content fingerprint).
+  *    content fingerprint),
+  *  - s8's stream-stream interval join (both sides' join buffers; here
+  *    one staged source split into the two sides) and s11's drift
+  *    monitor (a per-window bucket-count aggregation).
   *
   * The restart reads back the offset log, commit log, state-store files
   * and file-sink log, so it covers every file the checkpoint manager
   * writes. Each shape keeps a window, session, chain or last event open
-  * across the restart (the dedup shape, a fingerprint seen before it),
-  * which proves its state was restored, not rebuilt.
+  * across the restart (the dedup shape, a fingerprint seen before it; the
+  * join, a left row whose partner arrives after it), which proves its
+  * state was restored, not rebuilt.
   */
 class RestartEquivalenceSpec extends SparkSpec {
   import RestartEquivalenceSpec.Shape
@@ -100,7 +104,39 @@ class RestartEquivalenceSpec extends SparkSpec {
           .map(_.toDF("ts", "event_type")),
         EventStream.heavyHittersStream(_, "ts", "event_type", capacity = 4,
           window = "10 minutes", lateness = "5 minutes"),
-        "[2024-03-01 10:00:00.0,2024-03-01 10:10:00.0,1,click,3,0]", 3))
+        "[2024-03-01 10:00:00.0,2024-03-01 10:10:00.0,1,click,3,0]", 3),
+      // s8's interval join: left 1 waits in join state from b0 for its
+      // b1 partner 4; 2 and 3 match inside b0, 5 and 6 across b1/b2, and
+      // 9 is 30 minutes off every left row of its user
+      Shape("interval join",
+        Seq(Seq(("l", 1L, 1L, ts(0)), ("l", 2L, 2L, ts(1)),
+            ("r", 3L, 2L, ts(3))),
+          Seq(("r", 4L, 1L, ts(5)), ("l", 5L, 3L, ts(6))),
+          Seq(("r", 6L, 3L, ts(10)), ("r", 9L, 1L, ts(30)),
+            ("l", 7L, 9L, ts(59))))
+          .map(_.toDF("side", "id", "user", "ts")),
+        df => {
+          def side(s: String) = df.filter($"side" === s)
+            .select($"id".as(s"${s}_id"), $"user".as(s"${s}_user"),
+              $"ts".as(s"${s}_ts"))
+          EventStream.intervalJoinStream(side("l"), side("r"),
+            "l_user", "r_user", "l_ts", "r_ts", before = "10 minutes",
+            after = "10 minutes", lateness = "10 minutes")
+            .select("l_id", "r_id")
+        },
+        "[1,4]", 3),
+      // s11's drift: the 10:00 window's bucket counts span b0 and b1;
+      // b2's 10:59 row finalizes it and the 10:10 window, 3 rows each
+      Shape("drift",
+        Seq(Seq((ts(1), 5.0), (ts(2), 15.0), (ts(4), 25.0)),
+          Seq((ts(8), 12.0), (ts(13), 3.0)),
+          Seq((ts(59), 1.0)))
+          .map(_.toDF("ts", "value")),
+        EventStream.driftStream(_, "ts", "value", bounds = Seq(10.0, 20.0),
+          refShares = Seq(0.3, 0.4, 0.3), window = "10 minutes",
+          lateness = "5 minutes"),
+        "[2024-03-01 10:00:00.0,2024-03-01 10:10:00.0,4,1,2,0.5,0.022314," +
+          "0.040546]", 6))
   }
 
   /** Copy staged files into `in` with their staged mtimes: back-to-back
@@ -136,7 +172,8 @@ class RestartEquivalenceSpec extends SparkSpec {
 
   for {
     shape <- Seq("windowed agg", "sessionize", "funnel",
-      "dedup within watermark", "transitions", "heavy hitters")
+      "dedup within watermark", "transitions", "heavy hitters",
+      "interval join", "drift")
     (provider, rocksDb) <- Seq("HDFS" -> false, "RocksDB" -> true)
   } test(s"$shape ($provider state store): stop after batch 1 and " +
       "restart on the same checkpoint equals the one-shot run") {

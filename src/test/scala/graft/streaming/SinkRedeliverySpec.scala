@@ -62,7 +62,7 @@ class SinkRedeliverySpec extends SparkSpec {
 
   import spark.implicits._
 
-  test("dedupGateSink: a redelivered batch lands survivors exactly once") {
+  test("s1 near-dup gate (Dedup.nearDuplicatesAgainstIndex): a redelivered batch lands survivors exactly once") {
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog tonight"),
       (2L, "pack my box with five dozen liquor jugs right now"))
@@ -75,16 +75,15 @@ class SinkRedeliverySpec extends SparkSpec {
       .toDF("doc_id", "text")
     checkRedelivery("dedup-gate") { out =>
       EventStream.landBatch(batch, 0L, out) { (b, land) =>
-        graft.ext.Dedup.withNearDuplicatesAgainstIndex(index, b, "doc_id",
-          "text", threshold = 0.8, numHashes = 64, bands = 16) { pairs =>
-          land(b.join(pairs.select(col("new_id").as("doc_id")),
-            Seq("doc_id"), "left_anti"))
-        }
+        val pairs = graft.ext.Dedup.nearDuplicatesAgainstIndex(index, b,
+          "doc_id", "text", threshold = 0.8, numHashes = 64, bands = 16)
+        land(b.join(pairs.select(col("new_id").as("doc_id")),
+          Seq("doc_id"), "left_anti"))
       }
     }()
   }
 
-  test("lmGateSink: a redelivered batch lands survivors exactly once") {
+  test("s2 perplexity gate (LanguageModel.filterByPerplexity): a redelivered batch lands survivors exactly once") {
     val trusted = Seq((1L, "the cat sat on the mat and looked out"))
       .toDF("doc_id", "text")
     val model = graft.ext.LanguageModel.train(trusted, col("text"), n = 3)
@@ -101,7 +100,7 @@ class SinkRedeliverySpec extends SparkSpec {
     }()
   }
 
-  test("mixtureGateSink: a redelivered batch lands survivors exactly once") {
+  test("s3 mixture gate (Doremi.resample): a redelivered batch lands survivors exactly once") {
     val snapshot = (0L until 30L).map { i =>
       (i, if (i % 3 == 0) "b" else "a",
         if (i % 3 == 0) s"thy thyme rhythm myth v$i"
@@ -120,7 +119,7 @@ class SinkRedeliverySpec extends SparkSpec {
     }()
   }
 
-  test("decontamGateSink: a redelivered batch lands survivors exactly once") {
+  test("s4 decontamination gate (Curation.semanticDecontaminate): a redelivered batch lands survivors exactly once") {
     val dims = 8
     def vec(axis: Int, seed: Int, noise: Float): Seq[Float] = {
       val rng = new scala.util.Random(seed)
@@ -142,7 +141,7 @@ class SinkRedeliverySpec extends SparkSpec {
     }()
   }
 
-  test("nearDupPairsSink: a redelivered batch lands pairs exactly once") {
+  test("s13 near-dup pairs (Dedup.nearDuplicatesAgainstIndex): a redelivered batch lands pairs exactly once") {
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river"),
       (2L, "the quick brown fox jumps over the lazy dog near the river"))
@@ -154,14 +153,14 @@ class SinkRedeliverySpec extends SparkSpec {
       .toDF("doc_id", "text")
     checkRedelivery("neardup-pairs") { out =>
       EventStream.landBatch(batch, 0L, out) { (b, land) =>
-        graft.ext.Dedup.withNearDuplicatesAgainstIndex(index, b, "doc_id",
+        land(graft.ext.Dedup.nearDuplicatesAgainstIndex(index, b, "doc_id",
           "text", threshold = 0.5, numHashes = 128, bands = 32,
-          indexPreCollapsed = true)(land)
+          indexPreCollapsed = true))
       }
     }()
   }
 
-  test("dsirScoreSink: a redelivered batch lands scores exactly once") {
+  test("s16 DSIR scores (Dsir.scoreWithModel): a redelivered batch lands scores exactly once") {
     val target = Seq((1L, "theorem proof lemma algebra"))
       .toDF("doc_id", "text")
     val raw = (10L until 20L).map(i => (i, s"algebra proof notes v$i"))
@@ -176,7 +175,7 @@ class SinkRedeliverySpec extends SparkSpec {
     }()
   }
 
-  test("annServeSink: a redelivered batch lands results exactly once") {
+  test("s17 ANN serving (Similarity.searchIvfPqIndex): a redelivered batch lands results exactly once") {
     import graft.ext.{Clustering, Similarity}
     val rng = new scala.util.Random(graft.Check.PinnedSeed)
     def vec(): Seq[Float] = Seq.fill(8)((rng.nextDouble() * 2 - 1).toFloat)
