@@ -92,6 +92,16 @@ object Plans {
   def elideLiterals(plan: String): String =
     elideRuns(elideRuns(plan, NumItem), GroupItem)
 
+  /** Numbers that differ between two runs or two builds: expression, plan
+    * and RDD ids, the scratch pid, the source line that created an RDD and
+    * the JVM-wide counter in a lambda variable's name.
+    */
+  private val RunToken = """(#|plan_id=|RDD\[|/pid-|\.scala:|lambda x_)\d+""".r
+
+  /** Plan text with each [[RunToken]] number read as `n`. */
+  def normalizeRunTokens(plan: String): String =
+    RunToken.replaceAllIn(plan, m => Regex.quoteReplacement(m.group(1) + "n"))
+
   /** Elide every run of `item` matches joined by ", " (scanned match by
     * match: a regex repeating over a 200 KB run would recurse that deep).
     */
@@ -123,7 +133,8 @@ object Plans {
     sb.append(s"Generated against `$sfDir` — broadcast/exchange choices ")
     sb.append("reflect that scale's statistics; the spec suite asserts ")
     sb.append("the shape invariants that must hold at any scale. Inlined ")
-    sb.append("literal vectors longer than 16 values are elided.\n")
+    sb.append("literal vectors longer than 16 values are elided; ids and ")
+    sb.append("source lines that vary by run or build read `n`.\n")
     headline.foreach { name =>
       Cached.scope(buildFor(spark, sfDir, name).foreach { df =>
         val plan = try {
@@ -132,7 +143,8 @@ object Plans {
         } catch {
           case e: Exception => s"(failed to plan: ${e.getMessage})"
         }
-        sb.append(s"\n## $name\n\n```\n${elideLiterals(plan)}```\n")
+        val text = normalizeRunTokens(elideLiterals(plan))
+        sb.append(s"\n## $name\n\n```\n$text```\n")
       })
     }
     Runner.write(Paths.get(outFile), sb.toString)

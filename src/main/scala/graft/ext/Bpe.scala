@@ -51,11 +51,23 @@ object Bpe {
 
   /** Load a persisted [[Model]]; merge order restored by rank. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Model =
-    Model(spark.read.parquet(path)
-      .orderBy("rank")
-      .collect()
+    Model(graft.Driver.collect(spark.read.parquet(path).orderBy("rank"),
+        graft.Driver.MaxRows, "Bpe.load (Driver.MaxRows)")
       .map(r => (r.getString(1), r.getString(2)))
       .toSeq)
+
+  /** The dictionary [[train]] and [[Unigram.train]] learn from: the top
+    * `maxWordForms` word forms by (freq desc, word), as code points.
+    */
+  private[ext] def wordForms(df: DataFrame, textCol: String,
+      maxWordForms: Int): Array[(Array[String], Long)] =
+    df.select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
+      .filter(length(col("w")) > 0)
+      .groupBy("w").agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("w"))
+      .head(maxWordForms)
+      .map(r => (r.getString(0).codePoints().toArray
+        .map(cp => new String(Character.toChars(cp))), r.getLong(1)))
 
   /** The char-level model: no merges, every code point its own token. */
   val charModel: Model = Model(Nil)
@@ -74,27 +86,9 @@ object Bpe {
   def train(df: DataFrame, textCol: String, numMerges: Int,
       maxWordForms: Int = 65536): Model = {
     require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
-    val freqs: Array[(String, Long)] = df
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("w"))
-      .limit(maxWordForms)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-
-    // word forms as mutable symbol sequences (code-point granularity)
-    val forms: Array[(mutable.ArrayBuffer[String], Long)] = freqs.map {
-      case (w, n) =>
-        val syms = mutable.ArrayBuffer.empty[String]
-        var i = 0
-        while (i < w.length) {
-          val cp = w.codePointAt(i)
-          syms += new String(Character.toChars(cp))
-          i += Character.charCount(cp)
-        }
-        (syms, n)
-    }
+    // word forms as mutable symbol sequences
+    val forms = wordForms(df, textCol, maxWordForms)
+      .map { case (cps, n) => (mutable.ArrayBuffer.from(cps), n) }
 
     val merges = mutable.ArrayBuffer.empty[(String, String)]
     var round = 0

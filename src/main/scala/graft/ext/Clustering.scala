@@ -82,11 +82,12 @@ object Clustering {
       roundDigits: Int = -1): Model = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    val init = df.select(col(vecCol)).orderBy(col(idCol)).limit(k)
-      .collect().map(_.getSeq[Float](0).toArray)
+    val init = df.select(col(vecCol)).orderBy(col(idCol)).head(k)
+      .map(_.getSeq[Float](0).toArray)
     require(init.length == k,
       s"kmeans: need at least k=$k vectors, found ${init.length}")
     var centroids: Seq[Array[Float]] = init.toSeq
+    val refitRows = math.min(k.toLong * init.head.length, Int.MaxValue - 1L).toInt
 
     for (_ <- 0 until iterations) {
       val avgComponent = {
@@ -97,12 +98,12 @@ object Clustering {
           floor(a * p + 0.5) / p
         }
       }
-      val refit = df
-        .select(cellOf(col(vecCol), centroids).as("cell"),
-          posexplode(col(vecCol)).as(Seq("pos", "val")))
-        .groupBy("cell", "pos")
-        .agg(avgComponent.as("c"))
-        .collect()
+      val refit = graft.Driver.collect(
+        df.select(cellOf(col(vecCol), centroids).as("cell"),
+            posexplode(col(vecCol)).as(Seq("pos", "val")))
+          .groupBy("cell", "pos")
+          .agg(avgComponent.as("c")),
+        refitRows, "Clustering.kmeans refit (k * dims)")
         .groupBy(_.getInt(0))
         .view.mapValues { rows =>
           rows.sortBy(_.getInt(1)).map(_.getDouble(2).toFloat)

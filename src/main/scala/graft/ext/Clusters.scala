@@ -76,8 +76,10 @@ object Clusters {
       _.dataType == org.apache.spark.sql.types.LongType)
 
     def unionFindFinish(): DataFrame = {
-      val es = edges.select(col("u"), col("v"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = graft.Driver.collect(edges.select(col("u"), col("v")),
+        math.min(driverFinishEdges, Int.MaxValue - 1L).toInt,
+        "Clusters.connectedComponents (driverFinishEdges)")
+        .map(r => (r.getLong(0), r.getLong(1)))
       unpersistCheckpoint(edges)
       // index-compressed union-find with path compression; the component
       // label is resolved to the MINIMUM member id afterwards (the label

@@ -313,10 +313,10 @@ object Curation {
     require(budgetFraction > 0, s"budgetFraction must be positive")
     val spark = docs.sparkSession
 
-    val collected = docs.groupBy(col(langCol))
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(length(col(textCol))), lit(0L)).as("chars"))
-      .collect()
+    val collected = graft.Driver.collect(docs.groupBy(col(langCol))
+        .agg(count(lit(1)).as("n_docs"),
+          coalesce(sum(length(col(textCol))), lit(0L)).as("chars")),
+      graft.Driver.MaxRows, "Curation.unimaxAllocation (Driver.MaxRows)")
     require(!collected.exists(_.isNullAt(0)),
       "unimaxAllocation: null language values — fill or filter them first")
     val sizes = collected
@@ -641,18 +641,12 @@ object Curation {
       probeLen: Int = 16,
       maxProbes: Int = 1000000): DataFrame = {
     require(probeLen >= 1, s"probeLen must be >= 1: $probeLen")
-    val probeRows = evalSet
-      .filter(col(evalTextCol).isNotNull &&
-        length(col(evalTextCol)) >= probeLen)
-      .select(substring(col(evalTextCol), 1, probeLen))
-      .limit(maxProbes + 1)
-      .collect()
-    require(probeRows.length <= maxProbes,
-      s"exactContamination: eval set yields more than $maxProbes probes " +
-        "— the probe set must be bounded (it is broadcast to every task " +
-        "inside the matcher); raise maxProbes deliberately or pre-dedup " +
-        "the eval suite")
-    val probes: Seq[String] = probeRows.map(_.getString(0)).toSeq
+    val probes: Seq[String] = graft.Driver.collect(evalSet
+        .filter(col(evalTextCol).isNotNull &&
+          length(col(evalTextCol)) >= probeLen)
+        .select(substring(col(evalTextCol), 1, probeLen)),
+      maxProbes, "Curation.exactContamination probes (maxProbes)")
+      .map(_.getString(0)).toSeq
     val hits =
       if (probes.isEmpty) lit(0L)
       else graft.functions.MultiPatternFunctions

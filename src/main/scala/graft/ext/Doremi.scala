@@ -199,13 +199,13 @@ object Doremi {
     // count), aggregated in one pass and collected once — the previous
     // shape already gave the driver this residency, once per step, as
     // the build side of each broadcast model join
-    val dgcRows: Array[(String, String, Long)] = docVec
-      .select(col("_dom"),
-        explode(arrays_zip(col("grams"), col("cs"))).as("z"))
-      .groupBy(col("_dom"), col("z.grams").as("gram"))
-      .agg(sum(col("z.cs")).as("dc"))
-      .as[(String, String, Long)]
-      .collect()
+    val dgcRows: Array[(String, String, Long)] = graft.Driver.collect(docVec
+        .select(col("_dom"),
+          explode(arrays_zip(col("grams"), col("cs"))).as("z"))
+        .groupBy(col("_dom"), col("z.grams").as("gram"))
+        .agg(sum(col("z.cs")).as("dc"))
+        .as[(String, String, Long)],
+      graft.Driver.MaxRows, "Doremi.domainWeights dgcRows (Driver.MaxRows)")
 
     // first n-1 code points — the substring(gram, 1, n-1) context key
     def preOf(g: String): String =
@@ -215,8 +215,9 @@ object Doremi {
     // integer sums — order-free)
     val tots: Map[String, Long] = dgcRows.groupBy(_._1)
       .map { case (d, rs) => d -> rs.map(_._3).sum }
-    val nDocs: Map[String, Long] = docs.groupBy(col(domainCol))
-      .agg(count(lit(1)).as("nd")).collect()
+    val nDocs: Map[String, Long] = graft.Driver.collect(
+      docs.groupBy(col(domainCol)).agg(count(lit(1)).as("nd")),
+      graft.Driver.MaxRows, "Doremi.domainWeights nDocs (Driver.MaxRows)")
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     require(!nDocs.contains(null),
       "domainWeights: null domain values — fill or filter them first")
@@ -297,7 +298,7 @@ object Doremi {
           (wc.get(preOf(g)).doubleValue() + addK * alphabetSize)))
       }
       val nllB = spark.sparkContext.broadcast(nll)
-      val excessRows = docVec
+      val excessRows = graft.Driver.collect(docVec
         .as[(String, Seq[String], Seq[Long])]
         .mapPartitions { it =>
           val nm = nllB.value
@@ -323,8 +324,8 @@ object Doremi {
         }
         .toDF("_dom", "exd")
         .groupBy("_dom")
-        .agg(g6(avg(col("exd"))).as("ex"))
-        .collect()
+        .agg(g6(avg(col("exd"))).as("ex")),
+        domains.size, "Doremi.domainWeights excess (domains.size)")
       nllB.destroy()
       val excess = domains.map(_ -> 0.0).toMap ++
         excessRows.map(r => r.getString(0) -> r.getDouble(1)).toMap

@@ -48,10 +48,10 @@ object Pca {
 
   object Model {
     def fromDF(df: DataFrame): Model = {
-      val rows = df
-        .select(col("component"), col("loadings"), col("eigenvalue"),
-          col("mean"), col("total_variance"))
-        .collect().sortBy(_.getInt(0))
+      val rows = graft.Driver.collect(df.select(col("component"),
+          col("loadings"), col("eigenvalue"), col("mean"), col("total_variance")),
+        graft.Driver.MaxRows, "Pca.Model.fromDF (Driver.MaxRows)")
+        .sortBy(_.getInt(0))
       require(rows.nonEmpty, "Pca.Model.fromDF: empty frame")
       Model(
         rows.head.getSeq[Double](3),
@@ -65,7 +65,7 @@ object Pca {
   def moments(df: DataFrame, vecCol: String): (Long, Array[Double], Array[Double]) = {
     val row = df.agg(vector_moments(col(vecCol)).as("m"))
       .select(col("m.n"), col("m.mean"), col("m.cov"))
-      .collect().head
+      .head()
     (row.getLong(0),
       row.getSeq[Double](1).toArray,
       row.getSeq[Double](2).toArray)

@@ -47,7 +47,8 @@ object QualityClassifier {
 
   object Model {
     def fromDF(df: DataFrame): Model = {
-      val rows = df.select(col("idx"), col("w")).collect()
+      val rows = graft.Driver.collect(df.select(col("idx"), col("w")),
+        graft.Driver.MaxRows, "QualityClassifier.Model.fromDF (Driver.MaxRows)")
         .map(r => r.getInt(0) -> r.getDouble(1)).toMap
       val dims = rows.keys.max + 1
       // A missing countCap row (idx = -2) means the artifact predates the

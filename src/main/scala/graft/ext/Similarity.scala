@@ -664,13 +664,10 @@ object Similarity {
       .toDF("cell", "centroid")
   }
 
-  /** Load a codebook persisted via [[centroidsToDF]], in cell order. The
-    * collect is bounded by nlist (the codebook is driver-sized by design,
-    * same posture as training's capped sample).
-    */
+  /** Load a codebook persisted via [[centroidsToDF]], in cell order. */
   def centroidsFromDF(df: DataFrame): Seq[Array[Float]] =
-    df.select(col("cell"), col("centroid"))
-      .collect()
+    graft.Driver.collect(df.select(col("cell"), col("centroid")),
+      graft.Driver.MaxRows, "Similarity.centroidsFromDF (Driver.MaxRows)")
       .sortBy(_.getInt(0))
       .map(_.getSeq[Float](1).toArray)
       .toSeq
@@ -695,8 +692,8 @@ object Similarity {
   private def collectSample(
       df: DataFrame, idCol: String, vecCol: String,
       sampleSize: Int): Array[Array[Float]] = {
-    val sample = df.select(col(vecCol)).orderBy(col(idCol)).limit(sampleSize)
-      .collect().map(_.getSeq[Float](0).toArray)
+    val sample = df.select(col(vecCol)).orderBy(col(idCol)).head(sampleSize)
+      .map(_.getSeq[Float](0).toArray)
     require(sample.nonEmpty, "centroid training: empty input")
     sample
   }
@@ -920,11 +917,11 @@ object Similarity {
   }
 
   /** Load PQ codebooks persisted via [[pqToDF]], in (subspace, cell)
-    * order. Driver-sized by design (m × ksub × d/m floats).
+    * order.
     */
   def pqFromDF(df: DataFrame): Seq[Seq[Seq[Float]]] =
-    df.select(col("subspace"), col("cell"), col("centroid"))
-      .collect()
+    graft.Driver.collect(df.select(col("subspace"), col("cell"), col("centroid")),
+      graft.Driver.MaxRows, "Similarity.pqFromDF (Driver.MaxRows)")
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map { case (_, rows) =>
         rows.sortBy(_.getInt(1)).map(_.getSeq[Float](2)).toSeq

@@ -58,9 +58,9 @@ object Unigram {
     */
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
       unkLogProb: Double = DefaultUnk): Model =
-    Model(spark.read.parquet(path)
-      .orderBy(desc("logprob"), col("piece"))
-      .collect()
+    Model(graft.Driver.collect(
+        spark.read.parquet(path).orderBy(desc("logprob"), col("piece")),
+        graft.Driver.MaxRows, "Unigram.load (Driver.MaxRows)")
       .map(r => (r.getString(0), r.getDouble(1)))
       .toSeq, unkLogProb)
 
@@ -93,27 +93,9 @@ object Unigram {
     require(vocabSize >= 1, s"vocabSize must be >= 1: $vocabSize")
     require(shrinkFactor > 0 && shrinkFactor < 1, "shrinkFactor in (0,1)")
 
-    // the one corpus-scale pass (same dictionary query as Bpe.train)
-    val freqs: Array[(String, Long)] = df
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), col("w"))
-      .limit(maxWordForms)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-
-    // words as code-point arrays, once
-    val words: Array[(Array[String], Long)] = freqs.map { case (w, n) =>
-      val cps = mutable.ArrayBuffer.empty[String]
-      var i = 0
-      while (i < w.length) {
-        val cp = w.codePointAt(i)
-        cps += new String(Character.toChars(cp))
-        i += Character.charCount(cp)
-      }
-      (cps.toArray, n)
-    }
+    // the one corpus-scale pass: words as code-point arrays, once
+    val words: Array[(Array[String], Long)] =
+      Bpe.wordForms(df, textCol, maxWordForms)
 
     // seed: all substrings up to maxPieceLen, weighted by word freq
     val seedCounts = mutable.HashMap.empty[String, Double]

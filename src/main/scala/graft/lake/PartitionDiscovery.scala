@@ -41,6 +41,8 @@ object PartitionDiscovery {
   /** Catalog-backed variant (the 100 TB path). */
   def showPartitions(spark: SparkSession, qualifiedTable: String): Seq[String] = {
     import spark.implicits._
-    spark.sql(s"SHOW PARTITIONS $qualifiedTable").as[String].collect().toIndexedSeq
+    graft.Driver.collect(spark.sql(s"SHOW PARTITIONS $qualifiedTable").as[String],
+      graft.Driver.MaxRows, "PartitionDiscovery.showPartitions (Driver.MaxRows)")
+      .toIndexedSeq
   }
 }

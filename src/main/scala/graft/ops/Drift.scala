@@ -34,8 +34,7 @@ object Drift {
     * computation; the default is the mergeable `approx_percentile` sketch.
     */
   /** The reference side of a drift check as plain driver values —
-    * `(bounds, shares)` for `buckets` equi-depth buckets — O(buckets)
-    * state, the bounded-collect posture of the IVF codebook. This is what
+    * `(bounds, shares)` for `buckets` equi-depth buckets. This is what
     * a STREAMING drift monitor pins against
     * ([[graft.streaming.EventStream.driftStream]]): boundaries and
     * reference shares are computed ONCE from the batch reference and ride
@@ -48,11 +47,12 @@ object Drift {
       buckets: Int = 10,
       exact: Boolean = false): (Seq[Double], Seq[Double]) = {
     val bounds = Profile.quantileBounds(ref, valCol, buckets, exact)
-    val counts = ref.filter(col(valCol).isNotNull)
-      .withColumn("bucket",
-        graft.functions.SearchSorted(col(valCol).cast("double"), bounds))
-      .groupBy("bucket").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val counts = graft.Driver.collect(ref.filter(col(valCol).isNotNull)
+        .withColumn("bucket",
+          graft.functions.SearchSorted(col(valCol).cast("double"), bounds))
+        .groupBy("bucket").agg(count(lit(1)).as("n")),
+      buckets + 1, "Drift.referenceProfile (buckets + 1)")
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val total = counts.values.sum.toDouble.max(1.0)
     val shares = (0 to bounds.size).map(i =>
       counts.getOrElse(i, 0L) / total)

@@ -45,11 +45,10 @@ object SkewJoin {
       joinType == "left_outer",
       s"hybrid skew join supports inner/left joins, got $joinType")
 
-    val hotKeys = Profile.keySkew(left, leftKey, topK = topK, tasks = tasks)
-      .filter(col("salt") > 1)
-      .select(leftKey)
-      .collect()
-      .map(_.get(0))
+    val hotKeys = graft.Driver.collect(
+      Profile.keySkew(left, leftKey, topK = topK, tasks = tasks)
+        .filter(col("salt") > 1).select(leftKey),
+      topK, "SkewJoin.join hot keys (topK)").map(_.get(0))
     if (hotKeys.isEmpty)
       return left.join(right, col(leftKey) === col(rightKey), joinType)
 

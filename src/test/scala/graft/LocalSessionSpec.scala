@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * ([[Runner.write]]), the table swap ([[lake.TableSwap.replace]]), the
   * streaming sinks' `foreachBatch` writers ([[streaming.EventStream]])
   * and each runner option's one read. A frame or RDD is persisted only
-  * through [[Cached]] (those rows match code, not comments). Also: the
+  * through [[Cached]], and the library collects to the driver only through
+  * [[Driver.collect]] (those rows match code, not comments). Also: the
   * suite's shared session carries the local runner posture.
   */
 class LocalSessionSpec extends SparkSpec {
@@ -47,6 +48,15 @@ class LocalSessionSpec extends SparkSpec {
     """(?<!Cached)\.persist\(""" -> "Cached.scala",
     """\.cache\(\)""" -> "Cached.scala")
 
+  /** Code-only rows over the library packages only: the runners and the
+    * row declarations in `graft` itself are out of their scope. On the
+    * tree before [[Driver]] existed, the collect row flagged 21 sites in
+    * 12 files.
+    */
+  private val libraryPackages =
+    Set("ext", "ops", "pipeline", "lake", "streaming", "functions", "ingest")
+  private val libraryOwners = Seq("""\.collect\(\)""" -> "Driver.scala")
+
   private val Comment = """(?s)/\*.*?\*/|//[^\n]*""".r
 
   private lazy val sources: Seq[(String, String)] = {
@@ -75,6 +85,16 @@ class LocalSessionSpec extends SparkSpec {
         case (path, text) if pattern.r.findFirstIn(Comment.replaceAllIn(
             text, "")).isDefined &&
           Paths.get(path).getFileName.toString != owner => path
+      }
+      assert(offenders.isEmpty, s"$pattern belongs in $owner, not in $offenders")
+    }
+
+  for ((pattern, owner) <- libraryOwners)
+    test(s"code matching $pattern appears in the library only in $owner") {
+      val offenders = sources.collect {
+        case (path, text) if libraryPackages(Paths.get(path).getName(1)
+            .toString) && pattern.r.findFirstIn(Comment.replaceAllIn(
+              text, "")).isDefined => path
       }
       assert(offenders.isEmpty, s"$pattern belongs in $owner, not in $offenders")
     }

@@ -17,6 +17,22 @@ class PlansSpec extends AnyFunSuite with Matchers {
       "ArraySeq(3, 2.5E-4), ArraySeq(4, 2.5E-4), … 14 more))"
   }
 
+  test("normalizeRunTokens replaces the tokens that vary by run or build") {
+    val plan = "Arguments: [source#10961, n_docs#10962L], " +
+      "MapPartitionsRDD[1150] at createDataFrame at Doremi.scala:377, " +
+      "ExistingRDD\nBroadcastExchange (12) [plan_id=19]\n" +
+      "Location: InMemoryFileIndex " +
+      "[file:/dev/shm/graft-scratch/ephemeral/pid-17248/x13/ann]\n" +
+      "(2) Filter [codegen id : 1]\nlambdafunction(lambda x_7#12 * 4, lambda x_7#12)"
+    Plans.normalizeRunTokens(plan) shouldBe
+      "Arguments: [source#n, n_docs#nL], " +
+      "MapPartitionsRDD[n] at createDataFrame at Doremi.scala:n, " +
+      "ExistingRDD\nBroadcastExchange (12) [plan_id=n]\n" +
+      "Location: InMemoryFileIndex " +
+      "[file:/dev/shm/graft-scratch/ephemeral/pid-n/x13/ann]\n" +
+      "(2) Filter [codegen id : 1]\nlambdafunction(lambda x_n#n * 4, lambda x_n#n)"
+  }
+
   test("elideLiterals leaves identifiers and short runs alone") {
     val plan = "Output [3]: [id#12L, x#13, y#14]\n(2) Filter [codegen id : 1]"
     Plans.elideLiterals(plan) shouldBe plan

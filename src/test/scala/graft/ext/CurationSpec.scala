@@ -417,6 +417,20 @@ class CurationSpec extends SparkSpec {
     assert(kept === Set(1L, 4L))
   }
 
+  test("exactContamination: an eval set past maxProbes fails naming the bound") {
+    import spark.implicits._
+    val corpus = Seq((1L, "a page")).toDF("doc_id", "text")
+    val evalSet = (1 to 4).map(i => (i.toLong, s"probe number $i ok"))
+      .toDF("doc_id", "text").repartition(2)
+    val e = intercept[IllegalArgumentException] {
+      Curation.exactContamination(corpus, evalSet, "doc_id", "text", "text",
+        probeLen = 8, maxProbes = 3)
+    }
+    e.getMessage should include("maxProbes")
+    Curation.exactContamination(corpus, evalSet, "doc_id", "text", "text",
+      probeLen = 8, maxProbes = 4).count() shouldBe 1L
+  }
+
   test("semantic decontamination: report flags the planted eval neighbor; " +
       "the filter form equals report.filter(!contaminated)") {
     import spark.implicits._
