@@ -351,14 +351,14 @@ private[graft] trait EntryDedup { this: SparkEntry.type =>
         s, s"$tmp/ann", "snap", cutoff = "2024-02")
 
       val index = Similarity.appendToIvfPqIndex(
-        s.read.parquet(s"$tmp/ann").drop("snap"),
+        Parquet.read(s, s"$tmp/ann").drop("snap"),
         s2, "vec_id", "embedding", coarse, pq)
       val corpus = emb.filter(pmod(col("vec_id"), lit(10)).between(2, 8))
       val knn = Similarity.searchIvfPqIndex(batch, index, corpus,
         "vec_id", "embedding", k = 5, coarse = coarse, pq = pq,
         nprobe = nprobe, rescoreFactor = 16)
       val dup = Dedup.nearDuplicatesAgainstIndex(
-        s.read.parquet(s"$tmp/mh"),
+        Parquet.read(s, s"$tmp/mh"),
         docs.filter(pmod(col("doc_id"), lit(10)) >= 8),
         "doc_id", "text", threshold = 0.8, numHashes = 128, bands = 32)
       knn.select(lit("knn").as("kind"), col("query_id").as("a"),
@@ -483,7 +483,7 @@ private[graft] trait EntryDedup { this: SparkEntry.type =>
       // extracts features once per corpus and serves every batch (and
       // trains its quantizer) from the table, never re-decoding per
       // consumer subplan.
-      val feats = s.read.parquet(x14FeaturePath(s, dir))
+      val feats = Parquet.read(s, x14FeaturePath(s, dir))
       val corpus = feats.filter(pmod(col("media_id"), lit(10)) < 9)
       val batch = feats.filter(pmod(col("media_id"), lit(10)) === 9)
       Similarity.searchIvf(batch, corpus, "media_id", "features", k = 5,

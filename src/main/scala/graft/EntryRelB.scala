@@ -714,7 +714,7 @@ private[graft] trait EntryRelB { this: SparkEntry.type =>
         .write.mode("overwrite").partitionBy("od").parquet(s"$tmp/orders")
       graft.lake.Retention.expirePartitions(
         s, s"$tmp/orders", "od", cutoff = "1996-01")
-      s.read.parquet(s"$tmp/orders")
+      Parquet.read(s, s"$tmp/orders")
         .groupBy("od")
         .agg(count(lit(1)).as("n_rows"),
           sum("o_orderkey").as("key_sum"),

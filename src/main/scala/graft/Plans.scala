@@ -59,12 +59,12 @@ object Plans {
       name: String): Option[org.apache.spark.sql.DataFrame] =
     name match {
       case "x11_containment" =>
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        val docs = Parquet.read(spark, s"$sfDir/documents.parquet")
         Some(graft.ext.Dedup.containmentPairsPlan(docs, "doc_id", "text", 0.8,
             shingleFn = graft.ext.Shingles.charNGrams(_, 8))
           .orderBy("id", "container_id"))
       case "q91_span_excise" =>
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        val docs = Parquet.read(spark, s"$sfDir/documents.parquet")
         Some(graft.ext.Fingerprint.exciseSharedSpansPlan(
             docs, "doc_id", "text", k = 15, maxDocs = 10, exact = true)
           .orderBy("doc_id"))
@@ -92,11 +92,13 @@ object Plans {
   def elideLiterals(plan: String): String =
     elideRuns(elideRuns(plan, NumItem), GroupItem)
 
-  /** Numbers that differ between two runs or two builds: expression, plan
-    * and RDD ids, the scratch pid, the source line that created an RDD and
-    * the JVM-wide counter in a lambda variable's name.
+  /** Numbers that differ between two runs or two builds: expression, plan,
+    * RDD and broadcast ids (a runtime filter's `Broadcast(…)` counts every
+    * job run before it), the scratch pid, the source line that created an
+    * RDD and the JVM-wide counter in a lambda variable's name.
     */
-  private val RunToken = """(#|plan_id=|RDD\[|/pid-|\.scala:|lambda x_)\d+""".r
+  private val RunToken =
+    """(#|plan_id=|RDD\[|/pid-|\.scala:|lambda x_|Broadcast\()\d+""".r
 
   /** Plan text with each [[RunToken]] number read as `n`. */
   def normalizeRunTokens(plan: String): String =
@@ -123,14 +125,23 @@ object Plans {
     sb.append(text, tail, text.length).toString
   }
 
+  /** The audit's core count, whatever the host's: the shuffle partition
+    * count is the session's core count and prints in every exchange, so
+    * audits compare only at one count. The committed `PLANS.md` is made at
+    * 16.
+    */
+  final val AuditCpus: Int = 16
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args
-    val spark = Sessions.local("graft-plans")
+    val spark = Sessions.local("graft-plans", cpus = AuditCpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder
     sb.append("# Physical plans (explain formatted)\n\n")
-    sb.append(s"Generated against `$sfDir` — broadcast/exchange choices ")
+    sb.append(s"Generated against `$sfDir` in a local[$AuditCpus] session ")
+    sb.append(s"($AuditCpus shuffle partitions, whatever the host's cores) — ")
+    sb.append("broadcast/exchange choices ")
     sb.append("reflect that scale's statistics; the spec suite asserts ")
     sb.append("the shape invariants that must hold at any scale. Inlined ")
     sb.append("literal vectors longer than 16 values are elided; ids and ")

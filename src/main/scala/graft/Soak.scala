@@ -80,7 +80,7 @@ object Soak {
 
   private[graft] def synthEmbeddings(
       s: SparkSession, src: String, out: String, replicas: Int): Unit = {
-    val base = s.read.parquet(s"$src/embeddings.parquet")
+    val base = Parquet.read(s, s"$src/embeddings.parquet")
     val reps = (0 until replicas).map { i =>
       if (i == 0) base
       else {
@@ -309,9 +309,9 @@ object Soak {
       synthEmbeddings(spark, src, soak, Replicas)
       synthEvents(spark, src, soak, Replicas)
     }.secondsOrThrow
-    val nDocs = spark.read.parquet(s"$soak/documents.parquet").count()
-    val nVecs = spark.read.parquet(s"$soak/embeddings.parquet").count()
-    val nEvts = spark.read.parquet(s"$soak/events.parquet").count()
+    val nDocs = Parquet.read(spark, s"$soak/documents.parquet").count()
+    val nVecs = Parquet.read(spark, s"$soak/embeddings.parquet").count()
+    val nEvts = Parquet.read(spark, s"$soak/events.parquet").count()
     println(f"[soak] synthesized in $tSynth%.1f s: $nDocs docs, $nVecs vecs, $nEvts events")
 
     // one-time model training for BOTH dirs lands here, never in a
@@ -359,7 +359,8 @@ object Soak {
     val default = funnelSoak(spark, soak, rocksDb = false)
     val rocks = funnelSoak(spark, soak, rocksDb = true)
     // multiset difference both ways, counted on the executors
-    val (rowsDef, rocksRows) = (spark.read.parquet(default.out), spark.read.parquet(rocks.out))
+    val (rowsDef, rocksRows) =
+      (Parquet.read(spark, default.out), Parquet.read(spark, rocks.out))
     val (onlyDef, onlyRocks) =
       (rowsDef.exceptAll(rocksRows).count(), rocksRows.exceptAll(rowsDef).count())
     require(onlyDef == 0 && onlyRocks == 0, "provider outputs diverged: "
@@ -369,7 +370,7 @@ object Soak {
     // and the sf0.1-sized run for the growth ratio
     Bench.settle(spark)
     val base = funnelSoak(spark, src, rocksDb = false)
-    val nRowsBase = spark.read.parquet(base.out).count()
+    val nRowsBase = Parquet.read(spark, base.out).count()
     require(nRowsBase > 0, "base funnel run produced no rows")
     println(f"[soak] stream: base ${base.seconds}%.2f s ($nRowsBase rows,"
       + f" peak state ${base.stateRows}), 10x default ${default.seconds}%.2f s"

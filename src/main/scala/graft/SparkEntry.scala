@@ -33,6 +33,7 @@ import graft.ops.ValidateOps._
   */
 object SparkEntry extends EntryRelA with EntryRelB with EntryText with EntryDedup with EntryKnn with EntryMultimodal with EntryCuration {
 
+  /** Table `name` of the data dir `dir`, read with [[Parquet.read]]. */
   private[graft] def rd(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts has shipped as parquet TIMESTAMP(NANOS) in some testdata
@@ -41,13 +42,13 @@ object SparkEntry extends EntryRelA with EntryRelB with EntryText with EntryDedu
       // convert (the generator emits whole-microsecond values, so
       // `DIV 1000` is lossless); pass native timestamps through untouched.
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = s.read.parquet(s"$dir/$name.parquet")
+      val df = Parquet.read(s, s"$dir/$name.parquet")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
         case _ => df
       }
-    } else s.read.parquet(s"$dir/$name.parquet")
+    } else Parquet.read(s, s"$dir/$name.parquet")
 
   /** Structural single-byte-text assertion shared by the codec round-trip
     * queries (m4–m7): their DuckDB oracles do CHARACTER math while the
@@ -466,7 +467,7 @@ object SparkEntry extends EntryRelA with EntryRelB with EntryText with EntryDedu
   private[graft] def s13IndexPath(s: SparkSession, dir: String): String =
     cachedModel(s"s13idx|$dir") {
       val p = s"${Scratch.ephemeralDir("s13idx")}/idx-${dirTag(dir)}"
-      Dedup.collapseIndex(s.read.parquet(s1IndexPath(s, dir)))
+      Dedup.collapseIndex(Parquet.read(s, s1IndexPath(s, dir)))
         .write.mode("overwrite").parquet(p)
       p
     }
@@ -521,7 +522,7 @@ object SparkEntry extends EntryRelA with EntryRelB with EntryText with EntryDedu
   private[graft] def x14Model(s: SparkSession, dir: String): ext.Clustering.Model =
     cachedModel(s"x14|$dir") {
       ext.Clustering.kmeans(
-        s.read.parquet(x14FeaturePath(s, dir))
+        Parquet.read(s, x14FeaturePath(s, dir))
           .filter(pmod(col("media_id"), lit(10)) < 9),
         "media_id", "features", k = 8, iterations = 1, roundDigits = 6)
     }
@@ -675,8 +676,8 @@ object SparkEntry extends EntryRelA with EntryRelB with EntryText with EntryDedu
       ext.Similarity.pqToDF(s, pq).coalesce(1)
         .write.mode("overwrite").parquet(s"$base/pq")
       (nlist, nprobe,
-        ext.Similarity.centroidsFromDF(s.read.parquet(s"$base/coarse")),
-        ext.Similarity.pqFromDF(s.read.parquet(s"$base/pq")))
+        ext.Similarity.centroidsFromDF(Parquet.read(s, s"$base/coarse")),
+        ext.Similarity.pqFromDF(Parquet.read(s, s"$base/pq")))
     }
 
   /** Portable md5-derived hyperplane models for the LSH declarations —

@@ -51,7 +51,7 @@ object Bpe {
 
   /** Load a persisted [[Model]]; merge order restored by rank. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Model =
-    Model(graft.Driver.collect(spark.read.parquet(path).orderBy("rank"),
+    Model(graft.Driver.collect(graft.Parquet.read(spark, path).orderBy("rank"),
         graft.Driver.MaxRows, "Bpe.load (Driver.MaxRows)")
       .map(r => (r.getString(1), r.getString(2)))
       .toSeq)

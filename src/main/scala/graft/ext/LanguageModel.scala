@@ -185,5 +185,5 @@ object LanguageModel {
     model.write.mode("overwrite").parquet(path)
 
   def load(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Parquet.read(spark, path)
 }

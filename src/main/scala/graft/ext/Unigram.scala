@@ -59,7 +59,7 @@ object Unigram {
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
       unkLogProb: Double = DefaultUnk): Model =
     Model(graft.Driver.collect(
-        spark.read.parquet(path).orderBy(desc("logprob"), col("piece")),
+        graft.Parquet.read(spark, path).orderBy(desc("logprob"), col("piece")),
         graft.Driver.MaxRows, "Unigram.load (Driver.MaxRows)")
       .map(r => (r.getString(0), r.getDouble(1)))
       .toSeq, unkLogProb)

@@ -63,7 +63,7 @@ object Retention {
     val before = TableSwap.replace(spark, partitionPath, "compact") {
       (_, next) =>
         val n = dataFiles()
-        spark.read.parquet(partitionPath)
+        graft.Parquet.read(spark, partitionPath)
           .optimizePartition(recordsPerFile)
           .write.mode("overwrite").parquet(next.toString)
         n

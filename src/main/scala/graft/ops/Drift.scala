@@ -20,19 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Drift {
 
-  /** Per-bucket PSI contribution of `cur` vs `ref` on `valCol`.
-    *
-    * Output: `(bucket, ref_n, cur_n, ref_share, cur_share, psi)` — one row
-    * per bucket observed on either side, counts coalesced to 0, shares
-    * floored at `eps` before the log so an empty bucket contributes a
-    * large-but-finite term instead of ±∞ (the standard PSI smoothing).
-    * Sum `psi` for the headline index (common thresholds: < 0.1 stable,
-    * 0.1–0.25 moderate, > 0.25 major drift). Shares and `psi` are rounded
-    * to 6 decimals so the numbers are engine-stable.
-    *
-    * `exact = true` is the oracle-comparable setting for boundary
-    * computation; the default is the mergeable `approx_percentile` sketch.
-    */
   /** The reference side of a drift check as plain driver values —
     * `(bounds, shares)` for `buckets` equi-depth buckets. This is what
     * a STREAMING drift monitor pins against
@@ -195,6 +182,19 @@ object Drift {
         col("ref_cum"), col("cur_cum"), col("cdf_gap"), col("ks"))
   }
 
+  /** Per-bucket PSI contribution of `cur` vs `ref` on `valCol`.
+    *
+    * Output: `(bucket, ref_n, cur_n, ref_share, cur_share, psi)` — one row
+    * per bucket observed on either side, counts coalesced to 0, shares
+    * floored at `eps` before the log so an empty bucket contributes a
+    * large-but-finite term instead of ±∞ (the standard PSI smoothing).
+    * Sum `psi` for the headline index (common thresholds: < 0.1 stable,
+    * 0.1–0.25 moderate, > 0.25 major drift). Shares and `psi` are rounded
+    * to 6 decimals so the numbers are engine-stable.
+    *
+    * `exact = true` is the oracle-comparable setting for boundary
+    * computation; the default is the mergeable `approx_percentile` sketch.
+    */
   def psi(
       ref: DataFrame,
       cur: DataFrame,

@@ -616,7 +616,7 @@ object EventStream {
     graft.lake.TableSwap.replace(spark, tablePath, "cdcSink") { (fs, next) =>
       val base =
         if (fs.exists(new org.apache.hadoop.fs.Path(tablePath)))
-          spark.read.parquet(tablePath)
+          graft.Parquet.read(spark, tablePath)
         else batch.drop(seqCol, opCol).limit(0)
       graft.pipeline.Cdc.applyChanges(base, batch, keys, seqCol, opCol)
         .write.mode("overwrite").parquet(next.toString)
@@ -645,8 +645,9 @@ object EventStream {
     * applied-id marker (that is [[summarySink]]'s job, where the fold is
     * not idempotent) and no cross-batch state. This holds as long as the
     * gate is deterministic per batch, which each of the operators above
-    * is. Readers `spark.read.parquet(outPath)`; partition discovery adds
-    * a `batch` column — drop it, or filter on it for a per-trigger audit.
+    * is. Read `outPath` back with [[graft.Parquet.read]]; partition
+    * discovery adds a `batch` column — drop it, or filter on it for a
+    * per-trigger audit.
     * `SinkRedeliverySpec` pins the property for every gate.
     */
   def landingSink(df: DataFrame, outPath: String, checkpoint: String)(
@@ -718,7 +719,7 @@ object EventStream {
         val folded =
           if (fs.exists(cur))
             graft.pipeline.IncrementalAgg.merge(
-              Seq(spark.read.parquet(tablePath), batchSummary),
+              Seq(graft.Parquet.read(spark, tablePath), batchSummary),
               groupCols, sumCols, rangeCols, ndvCols)
           else batchSummary
         folded.write.mode("overwrite").parquet(next.toString)

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,38 +8,6 @@ import org.apache.spark.sql.functions._
   * `collect()` of the same frame.
   */
 class DriverSpec extends SparkSpec {
-
-  /** Jobs `body` starts, counted by a context listener. A sentinel job
-    * before and after flushes the listener queue, so the count holds
-    * exactly the body's jobs.
-    */
-  private def jobs(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val counted = new AtomicInteger
-    @volatile var seen = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == Sentinel)
-          seen.countDown()
-        else { counted.incrementAndGet(); () }
-    }
-    def flush(): Unit = {
-      seen = new CountDownLatch(1)
-      sc.setJobGroup(Sentinel, "flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(seen.await(60, TimeUnit.SECONDS), "listener queue never drained")
-    }
-    sc.addSparkListener(l)
-    try {
-      flush()
-      counted.set(0)
-      body
-      flush()
-      counted.get
-    } finally sc.removeSparkListener(l)
-  }
-
-  private val Sentinel = "driver-spec-sentinel"
 
   test("exactly max rows come back, in a sorted frame's order") {
     val df = spark.range(0, 50, 1, 5).toDF().orderBy(col("id").desc)

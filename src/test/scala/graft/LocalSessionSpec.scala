@@ -14,8 +14,9 @@ import scala.jdk.CollectionConverters._
   * ([[Runner.write]]), the table swap ([[lake.TableSwap.replace]]), the
   * streaming sinks' `foreachBatch` writers ([[streaming.EventStream]])
   * and each runner option's one read. A frame or RDD is persisted only
-  * through [[Cached]], and the library collects to the driver only through
-  * [[Driver.collect]] (those rows match code, not comments). Also: the
+  * through [[Cached]], a parquet path is read only through [[Parquet.read]],
+  * and the library collects to the driver only through [[Driver.collect]]
+  * (those rows match code, not comments). Also: the
   * suite's shared session carries the local runner posture.
   */
 class LocalSessionSpec extends SparkSpec {
@@ -42,11 +43,14 @@ class LocalSessionSpec extends SparkSpec {
 
   /** Code-only rows: the pattern is matched against each file with its
     * comments stripped. On the tree before [[Cached]] existed, the persist
-    * row flagged 18 sites in 11 files and the cache row 2 in Similarity.
+    * row flagged 18 sites in 11 files and the cache row 2 in Similarity;
+    * on the tree before [[Parquet]], the parquet-read row flagged 48 sites
+    * in 11 files.
     */
   private val codeOwners = Seq(
     """(?<!Cached)\.persist\(""" -> "Cached.scala",
-    """\.cache\(\)""" -> "Cached.scala")
+    """\.cache\(\)""" -> "Cached.scala",
+    """\.read\.parquet\(""" -> "Parquet.scala")
 
   /** Code-only rows over the library packages only: the runners and the
     * row declarations in `graft` itself are out of their scope. On the

@@ -23,14 +23,16 @@ class PlansSpec extends AnyFunSuite with Matchers {
       "ExistingRDD\nBroadcastExchange (12) [plan_id=19]\n" +
       "Location: InMemoryFileIndex " +
       "[file:/dev/shm/graft-scratch/ephemeral/pid-17248/x13/ann]\n" +
-      "(2) Filter [codegen id : 1]\nlambdafunction(lambda x_7#12 * 4, lambda x_7#12)"
+      "(2) Filter [codegen id : 1]\nlambdafunction(lambda x_7#12 * 4, lambda x_7#12)\n" +
+      "Condition : bloommightcontain(l_orderkey#4L, Broadcast(19))"
     Plans.normalizeRunTokens(plan) shouldBe
       "Arguments: [source#n, n_docs#nL], " +
       "MapPartitionsRDD[n] at createDataFrame at Doremi.scala:n, " +
       "ExistingRDD\nBroadcastExchange (12) [plan_id=n]\n" +
       "Location: InMemoryFileIndex " +
       "[file:/dev/shm/graft-scratch/ephemeral/pid-n/x13/ann]\n" +
-      "(2) Filter [codegen id : 1]\nlambdafunction(lambda x_n#n * 4, lambda x_n#n)"
+      "(2) Filter [codegen id : 1]\nlambdafunction(lambda x_n#n * 4, lambda x_n#n)\n" +
+      "Condition : bloommightcontain(l_orderkey#nL, Broadcast(n))"
   }
 
   test("elideLiterals leaves identifiers and short runs alone") {
